@@ -55,7 +55,8 @@ def build_parser() -> argparse.ArgumentParser:
     # per-API keys
     p.add_argument("--developer_token", default="", help="Google Ads API")
     p.add_argument("--appsflyer_dev_key", default="", help="AppsFlyer S2S API")
-    # BigQuery ops (control tables) — used when the BQ connector is present
+    # BigQuery ops dataset: holds the control tables of BigQuery sources
+    # and selects BigQuery-native dedup for them
     p.add_argument("--bq_ops_dataset", default="")
     p.add_argument("--bq_location", default="")
     # AWS S3 — wired straight into the Hadoop FS config, the Spark
@@ -143,7 +144,8 @@ def main(argv: list[str] | None = None) -> int:
         else LoggingErrorNotifier()
     )
     result = Pipeline(
-        spark, executions, lambda e: DryRunTransport(), notifier
+        spark, executions, lambda e: DryRunTransport(), notifier,
+        bq_ops_dataset=args.bq_ops_dataset,
     ).run()
     print(json.dumps(result.summary(), indent=2, default=str))
     return result.exit_code

@@ -21,8 +21,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+# What str.strip() removes (Spark's trim strips only the ASCII space); the
+# last whitespace code point is U+3000.
+_PY_WHITESPACE = "".join(c for c in map(chr, range(0x3001)) if c.isspace())
+
+
 def _lower_trim(col: Column) -> Column:
-    return F.lower(F.trim(col))
+    return F.lower(F.btrim(col, F.lit(_PY_WHITESPACE)))
 
 
 def hash_field(col: Column, hash_enabled: bool = True) -> Column:

@@ -88,13 +88,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(ngrams)
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams directly from text. Prefer the
-    ``_tokenized`` + ``shingles_from_tokens`` two-step in operators (see
-    the CSE warning there); this form is fine for single-use expressions."""
-    return shingles_from_tokens(tokens_expr(text), n)
-
-
 def _tokenized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, _toks) with the token array materialized BEFORE an exchange.
 

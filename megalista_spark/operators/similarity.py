@@ -1517,11 +1517,6 @@ def _fs_delete(spark, path_str: str) -> None:
     fs.delete(hpath, True)
 
 
-def _fs_exists(spark, path_str: str) -> bool:
-    fs, hpath = _hadoop_fs(spark, path_str)
-    return bool(fs.exists(hpath))
-
-
 def _fs_rename(spark, src: str, dst: str) -> bool:
     """Directory rename — the index's atomic commit primitive (atomic on
     local FS and HDFS; object stores without atomic rename need the

@@ -37,7 +37,7 @@ from megalista_spark.schema.registry import (
 )
 from megalista_spark.sinks.executor import SinkExecutor
 from megalista_spark.sinks.transports import DryRunTransport, Transport
-from megalista_spark.sources.data_source import anti_join_uploaded, get_data_source
+from megalista_spark.sources.data_source import get_data_source
 
 # Per-destination-family row transform applied between schema projection
 # and upload (reference: hashing mappers + data treatments).
@@ -94,15 +94,20 @@ class RunResult:
 
 
 class Pipeline:
+    """``bq_ops_dataset`` (``--bq_ops_dataset``) holds the control tables of
+    BigQuery sources and selects BigQuery-native dedup for them."""
+
     def __init__(
         self,
         spark: SparkSession,
         executions: list[Execution],
         transport_factory: Callable[[Execution], Transport] | None = None,
         error_notifier=None,
+        bq_ops_dataset: str = "",
     ):
         self.spark = spark
         self.executions = executions
+        self.bq_ops_dataset = bq_ops_dataset
         self.transport_factory = transport_factory or (lambda e: DryRunTransport())
         if error_notifier is None:
             from megalista_spark.notifiers import LoggingErrorNotifier
@@ -113,7 +118,7 @@ class Pipeline:
     def run(self) -> RunResult:
         results: list[BranchResult] = []
         for source_name, execs in group_executions_by_source(self.executions).items():
-            ds = get_data_source(self.spark, execs[0].source)
+            ds = get_data_source(self.spark, execs[0].source, self.bq_ops_dataset)
             try:
                 raw = ds.read_raw()
             except Exception as exc:
@@ -140,11 +145,8 @@ class Pipeline:
         dtype = execution.destination.destination_type
         try:
             schema = get_schema(dtype)
-            df = schema.apply(raw)
             txn = schema.transactional_type
-            if txn != TransactionalType.NOT_TRANSACTIONAL:
-                control = ds.control_table(txn)
-                df = anti_join_uploaded(df, control.read(), txn)
+            df = ds.retrieve_data(schema, txn, raw)
             transform = _TRANSFORMS.get(dtype)
             if transform is not None:
                 df = transform(df)
@@ -159,7 +161,7 @@ class Pipeline:
 
             if txn != TransactionalType.NOT_TRANSACTIONAL and res.rows_uploaded > 0:
                 # U20/D5: persist successfully-uploaded keys
-                control.append(outcome.success.select(*txn.keys))
+                res.errors.extend(ds.record_uploaded(txn, outcome.success))
         except SchemaValidationError as exc:
             res.errors.append(str(exc))
         except Exception as exc:  # branch isolation (safe_process)

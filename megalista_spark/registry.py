@@ -11,7 +11,7 @@ registry the pipeline consults:
         schema=DestinationSchema(...),
         batch_size=500,
         transform=my_transform,         # optional DataFrame -> DataFrame
-        rate_limit_per_sec=100,         # optional
+        rate_limit_per_sec=100,         # optional, events/s in total
     )
 
 After registration the destination type is usable from config files,

@@ -169,6 +169,7 @@ SCHEMAS: dict[DestinationType, DestinationSchema] = {
     DestinationType.ADS_OFFLINE_CONVERSION_CALLS: DestinationSchema(
         DestinationType.ADS_OFFLINE_CONVERSION_CALLS,
         columns=(
+            _c("uuid", required=True),  # the transactional dedup key
             _c("caller_id", required=True),
             _c("call_time", required=True),
             _c("time", required=True),

@@ -992,8 +992,8 @@ class AppsFlyerS2STransport(ConcurrentSendTransport):
     """AppsFlyer S2S events (reference
     appsflyer_s2s_uploader_async.py:30-140): one JSON POST per event to
     inappevent/{app_id} with the dev key in the ``authentication``
-    header; accepted iff HTTP 200; 500 events/sec pacing comes from the
-    executor's RATE_LIMITS + the inherited post-batch stretch."""
+    header; accepted iff HTTP 200; the 500 events/sec budget is paced by
+    the sink executor (RATE_LIMITS)."""
 
     def __init__(
         self,
@@ -1001,11 +1001,8 @@ class AppsFlyerS2STransport(ConcurrentSendTransport):
         dev_key: str,
         http_post: HttpPost = default_http_post,
         max_concurrency: int = 8,
-        events_per_sec: float | None = 500.0,
     ):
-        super().__init__(
-            max_concurrency=max_concurrency, events_per_sec=events_per_sec
-        )
+        super().__init__(max_concurrency=max_concurrency)
         self.app_id = execution.destination.metadata[0]
         self.dev_key = dev_key
         self.http_post = http_post

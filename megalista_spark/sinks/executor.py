@@ -9,7 +9,9 @@ Reference behaviors folded in (SURVEY §4 "custom pieces"):
 - client-per-partition lifecycle with open/close hooks (the reference's
   per-worker caches + finish_bundle deferred jobs,
   abstract_uploader.py:43-56)
-- client-side rate limiting (appsflyer_s2s_uploader_async.py:135-139)
+- client-side rate limiting (appsflyer_s2s_uploader_async.py:131-139):
+  a destination's budget is split evenly across its upload tasks, and a
+  chunk of n rows takes at least n / per-task rate seconds
 - per-batch error isolation: a failing chunk records an error and the
   partition continues (safe_process, uploaders/utils.py:69-88)
 - partial-failure success semantics: the executor RETURNS a DataFrame of
@@ -37,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from megalista_spark.models.execution import DestinationType
-from megalista_spark.sinks.transports import RateLimiter, Transport
+from megalista_spark.sinks.transports import Transport
 
 MAX_RETRIES = 3  # reference uploaders/utils.py:27
 
@@ -65,6 +67,7 @@ BATCH_SIZES: dict[DestinationType, int] = {
     DestinationType.APPSFLYER_S2S_EVENTS: 1000,
 }
 
+# Events/second budget per destination, for all its upload tasks together.
 RATE_LIMITS: dict[DestinationType, float] = {
     # reference appsflyer_s2s_uploader_async.py:137
     DestinationType.APPSFLYER_S2S_EVENTS: 500.0,
@@ -90,9 +93,6 @@ class SinkResult:
 
     success: DataFrame
     errors: DataFrame
-
-    def error_count(self) -> int:
-        return self.errors.count()
 
 
 class SinkExecutor:
@@ -139,8 +139,14 @@ class SinkExecutor:
         transport = self.transport
         batch_size = self.batch_size
         max_retries = self.max_retries
-        rate = self.rate_limit_per_sec
         base_context = dict(self.context)
+        rdd = df.rdd
+        # the destination's budget is shared by the upload tasks that run
+        # at once: no more than the partitions, nor than the task slots
+        running = min(
+            rdd.getNumPartitions(), df.sparkSession.sparkContext.defaultParallelism
+        )
+        task_rate = (self.rate_limit_per_sec or 0) / max(running, 1)
 
         in_schema = df.schema
         out_schema = T.StructType(
@@ -159,7 +165,6 @@ class SinkExecutor:
             ctx = dict(base_context)
             ctx["partition_id"] = pid
             transport.open(ctx)
-            limiter = RateLimiter(rate)
             try:
                 chunk_index = 0
                 while True:
@@ -170,7 +175,7 @@ class SinkExecutor:
                     ctx["chunk_index"] = chunk_index
                     ctx["iteration"] = chunk_index  # reference Batch.iteration
                     dict_chunk = [r.asDict(recursive=True) for r in chunk]
-                    limiter.acquire(len(dict_chunk))
+                    started = time.monotonic()
                     accepted: list[dict] | None = None
                     err: str | None = None
                     for attempt in range(1, max_retries + 1):
@@ -181,6 +186,9 @@ class SinkExecutor:
                             err = f"{type(exc).__name__}: {exc}"
                             if attempt < max_retries:
                                 time.sleep(min(0.05 * attempt, 1.0))
+                    if task_rate:  # post-batch floor (reference :131-136)
+                        done_at = started + len(dict_chunk) / task_rate
+                        time.sleep(max(0.0, done_at - time.monotonic()))
                     if accepted is None:
                         # whole chunk failed after retries → error records
                         for d in dict_chunk:
@@ -210,7 +218,7 @@ class SinkExecutor:
             finally:
                 transport.close(ctx)
 
-        tagged = df.rdd.mapPartitions(process_partition).toDF(out_schema)
+        tagged = rdd.mapPartitions(process_partition).toDF(out_schema)
         # One lineage, two lazily-derived views; caller actions decide when
         # the upload actually runs. Cache so success+errors don't re-upload.
         tagged = tagged.cache()

@@ -96,18 +96,14 @@ class ConcurrentSendTransport(Transport):
     environment and the send is I/O-bound, so threads are equivalent);
     ``max_concurrency`` bounds in-flight sends per partition — total
     in-flight against the API is max_concurrency × upload partitions,
-    both knobs explicit. Subclasses implement ``send_one(row, context)
-    -> bool`` (True accepted, False rejected-no-retry, raise to retry).
+    both knobs explicit. The post-batch pacing is the sink executor's,
+    from the destination's RATE_LIMITS budget. Subclasses implement
+    ``send_one(row, context) -> bool`` (True accepted, False
+    rejected-no-retry, raise to retry).
     """
 
-    def __init__(
-        self,
-        max_concurrency: int = 8,
-        events_per_sec: float | None = None,
-        max_retries: int = 3,
-    ):
+    def __init__(self, max_concurrency: int = 8, max_retries: int = 3):
         self.max_concurrency = max_concurrency
-        self.events_per_sec = events_per_sec
         self.max_retries = max_retries
 
     def send_one(self, row: Row, context: dict[str, Any]) -> bool:
@@ -115,8 +111,6 @@ class ConcurrentSendTransport(Transport):
 
     def send(self, payload: list[Row], context: dict[str, Any]) -> list[Row]:
         from concurrent.futures import ThreadPoolExecutor
-
-        start = time.monotonic()
 
         def attempt(row: Row) -> Row | None:
             for r in range(1, self.max_retries + 1):
@@ -129,37 +123,4 @@ class ConcurrentSendTransport(Transport):
 
         with ThreadPoolExecutor(max_workers=self.max_concurrency) as pool:
             results = list(pool.map(attempt, payload))
-        accepted = [r for r in results if r is not None]
-        # post-batch pacing (reference :131-136): stretch the batch to the
-        # rate floor rather than throttling inside the hot dispatch loop
-        if self.events_per_sec:
-            min_duration = len(payload) / self.events_per_sec
-            elapsed = time.monotonic() - start
-            if elapsed < min_duration:
-                time.sleep(min_duration - elapsed)
-        return accepted
-
-
-class RateLimiter:
-    """Client-side rate limit, events/second (reference AppsFlyer throttle,
-    appsflyer_s2s_uploader_async.py:135-139). Sleep-based, per-partition."""
-
-    def __init__(self, events_per_sec: float | None):
-        self.events_per_sec = events_per_sec
-        self._window_start = 0.0
-        self._sent_in_window = 0
-
-    def acquire(self, n: int) -> None:
-        if not self.events_per_sec:
-            return
-        now = time.monotonic()
-        if now - self._window_start >= 1.0:
-            self._window_start = now
-            self._sent_in_window = 0
-        self._sent_in_window += n
-        if self._sent_in_window > self.events_per_sec:
-            sleep_for = 1.0 - (now - self._window_start)
-            if sleep_for > 0:
-                time.sleep(sleep_for)
-            self._window_start = time.monotonic()
-            self._sent_in_window = 0
+        return [r for r in results if r is not None]

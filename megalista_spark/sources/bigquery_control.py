@@ -1,10 +1,10 @@
 """BigQuery-side transactional control: the BQ twin of the parquet
 ``ControlTable`` (reference big_query_data_source.py:58-202).
 
-The Spark engine's default transactional path is connector-read +
-Spark-side broadcast anti-join (sources/data_source.py) — correct and
-scale-tested. This module adds the reference's BQ-NATIVE semantics for
-deployments whose control table must live in BigQuery:
+A BigQuery source without an ops dataset dedups by connector read +
+Spark-side broadcast anti-join (sources/data_source.py). With an ops
+dataset (``--bq_ops_dataset``) its control table lives in BigQuery and
+this module supplies the reference's BQ-NATIVE semantics:
 
 - control-table DDL with ``PARTITION BY _PARTITIONDATE`` and
   ``partition_expiration_days=15`` (reference :118-148) — BigQuery
@@ -155,6 +155,20 @@ def control_schema_fields(transactional_type: TransactionalType) -> tuple:
             ("timestamp", "timestamp"),
         )
     raise ValueError(f"Unrecognized TransactionalType: {transactional_type}")
+
+
+def bigquery_client() -> BigQueryJobClient:
+    """The live client; only deployments with an ops dataset import it. Its
+    ``insert_rows`` reads ``.name`` from each selected field, so the
+    (name, type) pairs of control_schema_fields become SchemaField here."""
+    from google.cloud import bigquery
+
+    class Client(bigquery.Client):
+        def insert_rows(self, table, rows, schema_fields):
+            fields = [bigquery.SchemaField(n, t.upper()) for n, t in schema_fields]
+            return super().insert_rows(table, rows, fields)
+
+    return Client()
 
 
 class BigQueryControlTable:

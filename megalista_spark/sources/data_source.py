@@ -35,6 +35,7 @@ from megalista_spark.models.execution import (
     TransactionalType,
 )
 from megalista_spark.schema.registry import DestinationSchema
+from megalista_spark.sources import bigquery_control
 
 RETENTION_DAYS = 15  # reference big_query_data_source.py:125,132,139
 
@@ -110,15 +111,16 @@ class ControlTable:
         return expire_partitions(self.spark, self.path, cutoff)
 
     def _exists(self) -> bool:
-        # local-FS fast path; on HDFS/S3 the read itself raises and the
-        # caller falls back. Fine for this engine's deployment shapes.
-        if os.path.exists(self.path):
-            return bool(os.listdir(self.path)) if os.path.isdir(self.path) else True
-        return False
+        # Hadoop FileSystem, so URI paths (file://, hdfs://, s3a://, gs://)
+        # resolve too; an empty directory counts as missing
+        sc = self.spark.sparkContext
+        path = sc._jvm.org.apache.hadoop.fs.Path(self.path)
+        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+        return fs.exists(path) and len(fs.listStatus(path)) > 0
 
 
 class DataSource:
-    """Base: read a source table, optionally dropping already-uploaded rows."""
+    """Base: read a source table, drop already-uploaded rows, record keys."""
 
     def __init__(self, spark: SparkSession, source: Source):
         self.spark = spark
@@ -141,13 +143,16 @@ class DataSource:
         self,
         schema: DestinationSchema | None = None,
         transactional_type: TransactionalType = TransactionalType.NOT_TRANSACTIONAL,
+        raw: DataFrame | None = None,
     ) -> DataFrame:
         """validate/project/cast then anti-join dedup — the reference's D2/D3.
 
-        The select is applied BEFORE the join so column pruning reaches the
-        scan and the anti-join only shuffles the projected columns.
+        ``raw`` is a scan of the source the caller already holds (the
+        pipeline shares one per source). The select is applied BEFORE the
+        join so column pruning reaches the scan and the anti-join only
+        shuffles the projected columns.
         """
-        df = self.read_raw()
+        df = self.read_raw() if raw is None else raw
         if schema is not None:
             df = schema.apply(df)
         if transactional_type != TransactionalType.NOT_TRANSACTIONAL:
@@ -155,6 +160,16 @@ class DataSource:
                 df, self.control_table(transactional_type).read(), transactional_type
             )
         return df
+
+    def record_uploaded(
+        self, transactional_type: TransactionalType, uploaded: DataFrame
+    ) -> list[str]:
+        """Append the keys of ``uploaded`` to the control table (reference
+        transactional_events_results_writer.py:29-78); returns errors."""
+        self.control_table(transactional_type).append(
+            uploaded.select(*transactional_type.keys)
+        )
+        return []
 
 
 def anti_join_uploaded(
@@ -216,13 +231,16 @@ class FileDataSource(DataSource):
         return f"{root}_uploaded"
 
 
-def get_data_source(spark: SparkSession, source: Source) -> DataSource:
+def get_data_source(
+    spark: SparkSession, source: Source, ops_dataset: str = ""
+) -> DataSource:
     """Factory (reference data_sources/data_source.py:28-43). BigQuery
-    requires the spark-bigquery connector jar; gate behind availability."""
+    requires the spark-bigquery connector jar; gate behind availability.
+    ``ops_dataset`` is ``--bq_ops_dataset``; FILE sources ignore it."""
     if source.source_type == SourceType.FILE:
         return FileDataSource(spark, source)
     if source.source_type == SourceType.BIG_QUERY:
-        return BigQueryDataSource(spark, source)
+        return BigQueryDataSource(spark, source, ops_dataset)
     raise ValueError(f"unknown source type {source.source_type}")
 
 
@@ -235,15 +253,14 @@ class BigQueryDataSource(DataSource):
     projection/filters server-side. The jar is not bundled in this
     environment, so the read raises a clear error if absent.
 
-    Two transactional shapes:
-    - default (``dedup_in_bq=False``): connector table read + Spark-side
-      broadcast anti-join against the parquet ControlTable — the engine's
-      scale-tested path
-    - ``dedup_in_bq=True`` with an ``ops_dataset``: the reference's
-      BQ-native semantics (big_query_data_source.py:76-148) — control
-      DDL with 15-day partition expiry runs in BQ, and the dedup LEFT
-      JOIN ships to the connector as a ``query`` option so only
-      not-yet-uploaded rows cross the wire (sources/bigquery_control.py)
+    The ops dataset selects how a transactional source deduplicates:
+    - with an ``ops_dataset`` (the reference requires one): BigQuery-native
+      dedup, big_query_data_source.py:76-176 — control DDL with 15-day
+      partition expiry runs in BQ, the dedup LEFT JOIN ships to the
+      connector as a ``query`` option, and accepted keys go back with
+      ``insert_rows`` (sources/bigquery_control.py)
+    - without one: connector table read + Spark-side broadcast anti-join
+      against the parquet ControlTable
     """
 
     def __init__(
@@ -251,36 +268,32 @@ class BigQueryDataSource(DataSource):
         spark: SparkSession,
         source: Source,
         ops_dataset: str = "",
-        dedup_in_bq: bool = False,
         bq_client: "Any | None" = None,
     ):
         super().__init__(spark, source)
         self.ops_dataset = ops_dataset
-        self.dedup_in_bq = dedup_in_bq
         self.bq_client = bq_client
 
-    def bq_control_table(self, transactional_type: "TransactionalType"):
-        from megalista_spark.sources.bigquery_control import BigQueryControlTable
+    def _native_dedup(self, txn: TransactionalType) -> bool:
+        return bool(self.ops_dataset) and txn != TransactionalType.NOT_TRANSACTIONAL
 
-        return BigQueryControlTable(
+    def bq_control_table(self, transactional_type: TransactionalType):
+        if self.bq_client is None:
+            self.bq_client = bigquery_control.bigquery_client()
+        return bigquery_control.BigQueryControlTable(
             self.bq_client, self.source.metadata, self.ops_dataset,
             transactional_type,
         )
 
     def connector_options(
-        self, transactional_type: "TransactionalType | None" = None,
+        self,
+        transactional_type: TransactionalType = TransactionalType.NOT_TRANSACTIONAL,
         cols: "list[str] | None" = None,
     ) -> dict[str, str]:
         """The exact spark-bigquery options a read will use — pure, so the
         contract is testable without the jar. Query-mode reads need
         viewsEnabled + a materialization dataset (connector contract)."""
-        from megalista_spark.models.execution import TransactionalType
-
-        if (
-            self.dedup_in_bq
-            and transactional_type is not None
-            and transactional_type != TransactionalType.NOT_TRANSACTIONAL
-        ):
+        if self._native_dedup(transactional_type):
             return {
                 "query": self.bq_control_table(transactional_type).dedup_sql(
                     cols or ["*"]
@@ -292,7 +305,7 @@ class BigQueryDataSource(DataSource):
 
     def read_raw(
         self,
-        transactional_type: "TransactionalType | None" = None,
+        transactional_type: TransactionalType = TransactionalType.NOT_TRANSACTIONAL,
         cols: "list[str] | None" = None,
     ) -> DataFrame:
         try:
@@ -309,37 +322,41 @@ class BigQueryDataSource(DataSource):
     def retrieve_data(
         self,
         schema: "DestinationSchema | None" = None,
-        transactional_type: "TransactionalType" = None,  # type: ignore[assignment]
+        transactional_type: TransactionalType = TransactionalType.NOT_TRANSACTIONAL,
+        raw: DataFrame | None = None,
     ) -> DataFrame:
         """BQ-native dedup (reference big_query_data_source.py:76-148):
-        with ``dedup_in_bq`` the anti-join LEFT JOIN ships INSIDE the
+        with an ops dataset the anti-join LEFT JOIN ships INSIDE the
         connector ``query`` option, so BigQuery filters already-uploaded
         rows server-side and only the remainder crosses the Storage API —
-        the Spark-side anti-join is skipped (it would be a no-op re-check
-        of rows BQ already excluded). Without it, fall back to the base
-        scan + Spark broadcast anti-join path."""
-        from megalista_spark.models.execution import TransactionalType
+        the shared table scan ``raw`` does not apply and no Spark-side
+        anti-join runs. Without one, the base scan + Spark anti-join."""
+        if not self._native_dedup(transactional_type):
+            return super().retrieve_data(schema, transactional_type, raw)
+        # the pushed LEFT JOIN references the control table — create it
+        # (idempotent DDL with 15-day expiry) BEFORE the read, or the
+        # first run fails with table-not-found (reference
+        # big_query_data_source.py:119-127 ensures before querying)
+        self.bq_control_table(transactional_type).ensure_exists()
+        # push literal column names server-side only when the whole
+        # contract is literal — regex patterns resolve against the actual
+        # table columns, which only the scan knows
+        cols = None
+        if schema is not None and all(not s.is_pattern for s in schema.columns):
+            cols = [s.name for s in schema.columns]
+        df = self.read_raw(transactional_type, cols)
+        return schema.apply(df) if schema is not None else df
 
-        if transactional_type is None:
-            transactional_type = TransactionalType.NOT_TRANSACTIONAL
-        if (
-            self.dedup_in_bq
-            and transactional_type != TransactionalType.NOT_TRANSACTIONAL
-        ):
-            # the pushed LEFT JOIN references the control table — create
-            # it (idempotent DDL with 15-day expiry) BEFORE the read, or
-            # the first run fails with table-not-found (reference
-            # big_query_data_source.py:119-127 ensures before querying)
-            self.bq_control_table(transactional_type).ensure_exists()
-            # push literal column names server-side only when the whole
-            # contract is literal — regex patterns resolve against the
-            # actual table columns, which only the scan knows
-            cols = None
-            if schema is not None and all(not s.is_pattern for s in schema.columns):
-                cols = [s.name for s in schema.columns]
-            df = self.read_raw(transactional_type, cols)
-            return schema.apply(df) if schema is not None else df
-        return super().retrieve_data(schema, transactional_type)
+    def record_uploaded(
+        self, transactional_type: TransactionalType, uploaded: DataFrame
+    ) -> list[str]:
+        """With an ops dataset the keys go to BigQuery in ``insert_rows``
+        pages (reference big_query_data_source.py:153-176)."""
+        if not self._native_dedup(transactional_type):
+            return super().record_uploaded(transactional_type, uploaded)
+        rows = [r.asDict() for r in uploaded.select(*transactional_type.keys).collect()]
+        errors = self.bq_control_table(transactional_type).append(rows)
+        return [f"control table insert failed: {e}" for e in errors]
 
 
 def read_evolving_parquet(

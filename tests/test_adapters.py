@@ -890,7 +890,6 @@ def test_appsflyer_s2s_post_golden():
         _execution(DestinationType.APPSFLYER_S2S_EVENTS, ["com.app.id"]),
         dev_key="devkey",
         http_post=http,
-        events_per_sec=None,
     )
     row = {
         "appsflyer_id": "af1",
@@ -917,7 +916,6 @@ def test_appsflyer_s2s_post_golden():
         _execution(DestinationType.APPSFLYER_S2S_EVENTS, ["com.app.id"]),
         dev_key="devkey",
         http_post=HttpRecorder(status=403),
-        events_per_sec=None,
     )
     assert t_fail.send([row], {}) == []
 

@@ -5,7 +5,9 @@ every option it receives back as rows, then drive the REAL read path —
 ``BigQueryDataSource.read_raw`` / ``retrieve_data`` — and assert the
 exact options + pushed dedup query that the spark-bigquery connector
 would receive. Reference parity: big_query_data_source.py:58-148 (table
-read, transactional LEFT-JOIN dedup shipped to BQ).
+read, transactional LEFT-JOIN dedup shipped to BQ). The fake also serves
+one data table, so a whole ``Pipeline.run`` over a BigQuery source with
+an ops dataset runs against it.
 """
 
 from __future__ import annotations
@@ -20,9 +22,35 @@ def _norm(sql: str) -> str:
     return " ".join(sql.split()).replace(" ,", ",").replace(", ", ",").lower()
 
 
+# The one table the fake serves as data: ADS_OFFLINE_CONVERSION_CALLS rows,
+# returned only to the dedup query a source with ops dataset "ops" ships.
+# Every other read echoes its options.
+_CALLS_COLUMNS = [
+    "uuid", "caller_id", "call_time", "time", "amount",
+    "consent_ad_user_data", "consent_ad_personalization",
+]
+_CALLS_ROWS = [
+    (f"u{i}", f"+1555000{i}", "2024-01-01T10:00:00", "2024-01-01T11:00:00",
+     str(i), "GRANTED", "GRANTED")
+    for i in range(5)
+]
+_CALLS_DEDUP_SQL = (
+    f"SELECT {','.join('data.' + c for c in _CALLS_COLUMNS)} "
+    "FROM `ds1.calls` AS data "
+    "LEFT JOIN `ops.calls_uploaded` AS uploaded USING(uuid) "
+    "WHERE uploaded.uuid IS NULL"
+)
+
+
+def _serves_calls(options) -> bool:
+    query = {str(k).lower(): v for k, v in options.items()}.get("query", "")
+    return _norm(query) == _norm(_CALLS_DEDUP_SQL)
+
+
 class _FakeBqClient:
     def __init__(self):
         self.queries = []
+        self.inserts = []
 
     def query(self, sql):
         self.queries.append(sql)
@@ -32,6 +60,13 @@ class _FakeBqClient:
                 return []
 
         return _R()
+
+    def get_table(self, name):
+        return f"table:{name}"
+
+    def insert_rows(self, table, rows, schema_fields):
+        self.inserts.append((table, rows))
+        return []
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +79,9 @@ def fake_bigquery(spark):
             self._options = dict(options)
 
         def read(self, partition):
+            if _serves_calls(self._options):
+                yield from _CALLS_ROWS
+                return
             for k, v in self._options.items():
                 yield (str(k), str(v))
 
@@ -53,6 +91,8 @@ def fake_bigquery(spark):
             return "bigquery"
 
         def schema(self):
+            if _serves_calls(self.options):
+                return ", ".join(f"{c} string" for c in _CALLS_COLUMNS)
             return "option_key string, option_value string"
 
         def reader(self, schema):
@@ -75,14 +115,14 @@ def test_plain_table_read_reaches_connector(fake_bigquery, spark):
 
 
 def test_bq_side_dedup_query_ships_in_options(fake_bigquery, spark):
-    """dedup_in_bq + transactional: the LEFT-JOIN dedup SQL must ship as
+    """ops dataset + transactional: the LEFT-JOIN dedup SQL must ship as
     the connector ``query`` option with the query-mode requirements
     (viewsEnabled + materializationDataset), and retrieve_data must NOT
     add a Spark-side anti-join on top (BQ already excluded uploaded
     rows)."""
     src = Source("s1", SourceType.BIG_QUERY, ("ds1", "conv"))
     ds = BigQueryDataSource(
-        spark, src, ops_dataset="ops", dedup_in_bq=True, bq_client=_FakeBqClient()
+        spark, src, ops_dataset="ops", bq_client=_FakeBqClient()
     )
     df = ds.retrieve_data(schema=None, transactional_type=TransactionalType.GCLID_TIME)
     # the control table the pushed LEFT JOIN references was ensured first
@@ -105,10 +145,10 @@ def test_bq_side_dedup_query_ships_in_options(fake_bigquery, spark):
     )
 
 
-def test_non_transactional_dedup_in_bq_reads_plain_table(fake_bigquery, spark):
+def test_non_transactional_bq_source_reads_plain_table(fake_bigquery, spark):
     src = Source("s1", SourceType.BIG_QUERY, ("ds1", "conv"))
     ds = BigQueryDataSource(
-        spark, src, ops_dataset="ops", dedup_in_bq=True, bq_client=_FakeBqClient()
+        spark, src, ops_dataset="ops", bq_client=_FakeBqClient()
     )
     got = _options_of(
         ds.retrieve_data(
@@ -124,7 +164,7 @@ def test_literal_schema_columns_push_into_dedup_query(fake_bigquery, spark):
     so only contract columns cross the Storage API."""
     src = Source("s1", SourceType.BIG_QUERY, ("ds1", "conv"))
     ds = BigQueryDataSource(
-        spark, src, ops_dataset="ops", dedup_in_bq=True, bq_client=_FakeBqClient()
+        spark, src, ops_dataset="ops", bq_client=_FakeBqClient()
     )
     got = _options_of(
         ds.read_raw(TransactionalType.GCLID_TIME, ["gclid", "time", "amount"])
@@ -132,3 +172,70 @@ def test_literal_schema_columns_push_into_dedup_query(fake_bigquery, spark):
     assert _norm(got["query"]).startswith(
         _norm("SELECT data.gclid, data.time, data.amount FROM `ds1.conv`")
     )
+
+
+def test_pipeline_run_dedups_in_bigquery_with_ops_dataset(
+    fake_bigquery, spark, monkeypatch
+):
+    """A transactional BigQuery branch of ``Pipeline.run`` with an ops
+    dataset: the control DDL runs, the dedup query ships to the connector
+    with no Spark-side join, and the accepted keys go to ``insert_rows``."""
+    from megalista_spark.pipeline import Pipeline
+    from megalista_spark.sinks.transports import MockTransport
+    from megalista_spark.sources import bigquery_control
+    from megalista_spark.sources.config_json import parse_config
+
+    client = _FakeBqClient()
+    monkeypatch.setattr(bigquery_control, "bigquery_client", lambda: client)
+    frames = []
+    retrieve = BigQueryDataSource.retrieve_data
+
+    def spy(self, *args, **kwargs):
+        frames.append(retrieve(self, *args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(BigQueryDataSource, "retrieve_data", spy)
+    executions = parse_config(
+        {
+            "GoogleAdsAccountId": "123",
+            "Sources": [
+                {"Name": "calls", "Type": "BIG_QUERY", "Dataset": "ds1", "Table": "calls"}
+            ],
+            "Destinations": [
+                {"Name": "c", "Type": "ADS_OFFLINE_CONVERSION_CALLS", "Metadata": ["act"]}
+            ],
+            "Connections": [{"Enabled": True, "Source": "calls", "Destination": "c"}],
+        }
+    )
+    result = Pipeline(
+        spark, executions, lambda e: MockTransport(), bq_ops_dataset="ops"
+    ).run()
+
+    assert result.exit_code == 0, result.branches[0].errors
+    assert result.branches[0].rows_uploaded == len(_CALLS_ROWS)
+    assert any(
+        "CREATE TABLE IF NOT EXISTS `ops.calls_uploaded`" in q for q in client.queries
+    )
+    # the fake serves rows only to the dedup query, and BigQuery already
+    # excluded uploaded keys, so the plan has no join
+    assert len(frames) == 1
+    assert "Join" not in frames[0]._jdf.queryExecution().optimizedPlan().toString()
+    assert [table for table, _ in client.inserts] == ["table:ops.calls_uploaded"]
+    inserted = client.inserts[0][1]
+    assert sorted(r["uuid"] for r in inserted) == [r[0] for r in _CALLS_ROWS]
+    assert all(set(r) == {"uuid", "timestamp"} for r in inserted)
+
+
+def test_bq_control_insert_errors_are_returned(spark):
+    """Rows BigQuery refuses come back as messages, which ``Pipeline``
+    records as branch errors."""
+
+    class _RejectingClient(_FakeBqClient):
+        def insert_rows(self, table, rows, schema_fields):
+            return [{"index": 0, "errors": ["invalid"]}]
+
+    src = Source("s1", SourceType.BIG_QUERY, ("ds1", "calls"))
+    ds = BigQueryDataSource(spark, src, ops_dataset="ops", bq_client=_RejectingClient())
+    uploaded = spark.createDataFrame([("u1", "+1")], ["uuid", "caller_id"])
+    messages = ds.record_uploaded(TransactionalType.UUID, uploaded)
+    assert len(messages) == 1 and "invalid" in messages[0]

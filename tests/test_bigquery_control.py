@@ -167,7 +167,7 @@ def test_connector_options_contract(spark):
     }
 
     bq_dedup = BigQueryDataSource(
-        spark, src, ops_dataset="ops", dedup_in_bq=True, bq_client=FakeBqClient()
+        spark, src, ops_dataset="ops", bq_client=FakeBqClient()
     )
     opts = bq_dedup.connector_options(
         TransactionalType.GCLID_TIME, cols=["gclid", "time", "amount"]
@@ -179,3 +179,47 @@ def test_connector_options_contract(spark):
         "LEFT JOIN `ops.conv_uploaded` AS uploaded USING(gclid, time) "
         "WHERE uploaded.gclid IS NULL"
     )
+
+
+def test_live_client_maps_schema_fields(monkeypatch):
+    """The live client's ``insert_rows`` reads ``.name`` from each selected
+    field, so the (name, type) pairs must arrive as bigquery.SchemaField."""
+    import sys
+    import types
+
+    from megalista_spark.sources import bigquery_control
+
+    class SchemaField:
+        def __init__(self, name, field_type):
+            self.name, self.field_type = name, field_type
+
+    class Client:
+        def __init__(self):
+            self.inserts = []
+
+        def get_table(self, name):
+            return f"table:{name}"
+
+        def insert_rows(self, table, rows, selected_fields=None):
+            names = [f.name for f in selected_fields]  # as the live client
+            self.inserts.append((table, rows, names, selected_fields))
+            return []
+
+    bigquery = types.ModuleType("google.cloud.bigquery")
+    bigquery.Client, bigquery.SchemaField = Client, SchemaField
+    cloud = types.ModuleType("google.cloud")
+    cloud.bigquery = bigquery
+    monkeypatch.setitem(sys.modules, "google.cloud", cloud)
+    monkeypatch.setitem(sys.modules, "google.cloud.bigquery", bigquery)
+
+    client = bigquery_control.bigquery_client()
+    table = BigQueryControlTable(
+        client, ["ds", "events"], "ops", TransactionalType.GCLID_TIME
+    )
+    errors = table.append([{"gclid": "g1", "time": "t1", "x": 1}], now=7.0)
+    assert errors == []
+    [(tbl, rows, names, fields)] = client.inserts
+    assert tbl == "table:ops.events_uploaded"
+    assert rows == [{"gclid": "g1", "time": "t1", "timestamp": 7.0}]
+    assert names == ["gclid", "time", "timestamp"]
+    assert [f.field_type for f in fields] == ["STRING", "STRING", "TIMESTAMP"]

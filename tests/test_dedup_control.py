@@ -92,3 +92,15 @@ def test_vacuum_reclaims_expired_partitions(spark, tmp_path):
     after = [r["uuid"] for r in ct.read().collect()]
     assert before == after == ["fresh"]
     assert ct.vacuum() == []  # idempotent
+
+
+def test_control_table_at_file_uri(spark, tmp_path):
+    """A control table addressed by URI (``file://`` here; HDFS, S3A and
+    GCS alike) reads back what was appended, so dedup stays on."""
+    ct = ControlTable(spark, "file://" + str(tmp_path / "uri_uploaded"), keys=("uuid",))
+    assert ct.read().count() == 0
+    ct.append(spark.createDataFrame([("a",), ("b",)], ["uuid"]))
+    assert sorted(r["uuid"] for r in ct.read().collect()) == ["a", "b"]
+    src = spark.createDataFrame([("a",), ("c",)], ["uuid"])
+    kept = anti_join_uploaded(src, ct.read(), TransactionalType.UUID)
+    assert [r["uuid"] for r in kept.collect()] == ["c"]

@@ -37,6 +37,16 @@ def test_hash_field_golden(spark):
     assert got == [h for _, h in GOLDEN]
 
 
+def test_hash_field_strips_like_python(spark):
+    # the reference strips with str.strip(): tabs, newlines and NBSP too,
+    # not only the ASCII space Spark's trim removes
+    cases = ["\tJohn ", "John\n", "\u00a0John\u00a0", " \r\n\tJohn\u3000", "Jo hn"]
+    df = spark.createDataFrame([(v,) for v in cases], ["x"])
+    got = [r[0] for r in df.select(hash_field(F.col("x"))).collect()]
+    assert got == [_ref_hash(v) for v in cases]
+    assert got[0] == got[1] == got[2] == got[3]
+
+
 def test_hash_email_golden(spark):
     df = spark.createDataFrame([(v,) for v, _ in GOLDEN_EMAIL], ["x"])
     got = [r[0] for r in df.select(hash_email(F.col("x"))).collect()]

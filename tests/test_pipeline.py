@@ -145,3 +145,30 @@ def test_error_notifier_called_with_failed_branches(spark, tmp_path, conversions
     sent.clear()
     r2 = run_from_config(spark, cfg, lambda e: MockTransport(), error_notifier=notifier)
     assert r2.exit_code == 0 and sent == []
+
+
+def test_calls_branch_rerun_uploads_nothing(spark, tmp_path):
+    """ADS_OFFLINE_CONVERSION_CALLS dedups on ``uuid``: its schema keeps the
+    key, so the second run's anti-join drops every row."""
+    path = str(tmp_path / "calls")
+    spark.createDataFrame(
+        [(f"u{i}", f"+1555000{i}", "2024-01-01T10:00:00", "2024-01-01T11:00:00", "1.5")
+         for i in range(10)],
+        ["uuid", "caller_id", "call_time", "time", "amount"],
+    ).write.parquet(path)
+    cfg = {
+        "GoogleAdsAccountId": "123",
+        "Sources": [{"Name": "calls", "Type": "FILE", "FileType": "PARQUET", "Path": path}],
+        "Destinations": [
+            {"Name": "c", "Type": "ADS_OFFLINE_CONVERSION_CALLS", "Metadata": ["act"]}
+        ],
+        "Connections": [{"Enabled": True, "Source": "calls", "Destination": "c"}],
+    }
+    p = tmp_path / "calls.json"
+    p.write_text(json.dumps(cfg))
+    r1 = run_from_config(spark, str(p), lambda e: MockTransport())
+    assert r1.exit_code == 0, r1.branches[0].errors
+    assert r1.branches[0].rows_uploaded == 10
+    r2 = run_from_config(spark, str(p), lambda e: MockTransport())
+    assert r2.exit_code == 0
+    assert r2.branches[0].rows_uploaded == 0

@@ -2,9 +2,19 @@
 
 from __future__ import annotations
 
+import json
+import os
+import time
+
+import pytest
+
 from megalista_spark.models.execution import DestinationType
 from megalista_spark.sinks.executor import BATCH_SIZES, SinkExecutor
-from megalista_spark.sinks.transports import DryRunTransport, MockTransport
+from megalista_spark.sinks.transports import (
+    ConcurrentSendTransport,
+    DryRunTransport,
+    MockTransport,
+)
 
 
 def test_all_accepted(spark):
@@ -38,7 +48,7 @@ def test_accepted_rows_matched_by_value_not_identity(spark):
     assert ok == [i for i in range(50) if i % 5 != 0]
 
 
-def test_concurrent_sender_bounds_inflight_and_keeps_rate():
+def test_concurrent_sender_bounds_inflight():
     import threading
     import time as _time
 
@@ -67,18 +77,14 @@ def test_concurrent_sender_bounds_inflight_and_keeps_rate():
                 with self._lock:
                     self._inflight -= 1
 
-    t = Probe(max_concurrency=4, events_per_sec=200)
+    t = Probe(max_concurrency=4)
     rows = [{"i": i} for i in range(40)]
-    start = _time.monotonic()
     accepted = t.send(rows, {})
-    duration = _time.monotonic() - start
     assert sorted(r["i"] for r in accepted) == [i for i in range(40) if i != 13]
     # in-flight stayed within the bound AND real concurrency happened
     assert 1 < t.max_inflight <= 4
     # exceptions retried, plain rejections not
     assert t.attempts[7] == 2 and t.attempts[13] == 1
-    # rate floor: 40 events at 200/s can't finish faster than 0.2s
-    assert duration >= 40 / 200
 
 
 def test_retry_then_succeed(spark):
@@ -140,3 +146,67 @@ def test_concurrent_sender_overlaps_through_executor(spark):
     direct = _time.monotonic() - start
     assert len(accepted) == 32
     assert direct < 0.32  # < half the 0.64s serial floor
+
+
+class _PacedSender(ConcurrentSendTransport):
+    """Accepts every row at once; each upload task writes the time of its
+    first send and of its close, and its row count, under ``out_dir``."""
+
+    def __init__(self, out_dir):
+        super().__init__(max_concurrency=4)
+        self.out_dir = out_dir
+        self._first = None
+        self._rows = 0
+
+    def send(self, payload, context):
+        if self._first is None:
+            self._first = time.time()
+        self._rows += len(payload)
+        return super().send(payload, context)
+
+    def send_one(self, row, context):
+        return True
+
+    def close(self, context):
+        with open(os.path.join(self.out_dir, str(context["partition_id"])), "w") as f:
+            json.dump([self._first, time.time(), self._rows], f)
+
+
+def _paced_rate(spark, out_dir, budget, tasks, rows_per_task):
+    """Upload ``tasks`` partitions of ``rows_per_task`` rows to a destination
+    with a ``budget`` events/s limit; return the overall event rate."""
+    df = spark.range(0, tasks * rows_per_task, 1, numPartitions=tasks)
+    result = SinkExecutor(
+        _PacedSender(str(out_dir)), batch_size=50, rate_limit_per_sec=budget
+    ).run(df)
+    assert result.success.count() == tasks * rows_per_task
+
+    stats = [json.loads(p.read_text()) for p in out_dir.iterdir()]
+    assert len(stats) == tasks and all(n == rows_per_task for _, _, n in stats)
+    window = max(end for _, end, _ in stats) - min(first for first, _, _ in stats)
+    return tasks * rows_per_task / window
+
+
+def test_rate_budget_is_shared_across_upload_tasks(spark, tmp_path):
+    """A 400 events/s destination uploaded by 4 concurrent tasks: each task
+    gets a quarter of the budget and every chunk waits out its floor, so
+    the overall event rate lands between 0.8x and 1x the budget."""
+    if spark.sparkContext.defaultParallelism < 4:
+        pytest.skip("needs 4 cores to run the 4 upload tasks at once")
+    budget = 400.0
+    rate = _paced_rate(spark, tmp_path, budget, tasks=4, rows_per_task=200)
+    assert 0.8 * budget <= rate <= budget
+
+
+def test_rate_budget_holds_when_tasks_outnumber_cores(spark, tmp_path):
+    """Twice as many upload tasks as task slots: the tasks run in two waves,
+    so the budget is split by the slots, not by the partitions, and the
+    overall event rate still lands between 0.8x and 1x the budget. Each
+    task runs 3 s, long against the gap of a few tenths of a second
+    between the waves."""
+    slots = spark.sparkContext.defaultParallelism
+    if slots < 4:
+        pytest.skip("needs 4 cores to run the upload tasks in full waves")
+    budget = 400.0
+    rate = _paced_rate(spark, tmp_path, budget, tasks=2 * slots, rows_per_task=300)
+    assert 0.8 * budget <= rate <= budget
