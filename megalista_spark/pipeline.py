@@ -9,9 +9,13 @@ Spark shape:
 - the config plane stays on the driver (it is tiny);
 - each source is READ ONCE and cached across the branches that share it
   (reference reads per source group; SURVEY §4 "read-once-per-source");
-- each branch is lazy DataFrame work ending in one action inside a
-  try/except — a failing branch records an error and the run continues
-  (reference safe_process error isolation, uploaders/utils.py:69-88);
+- each branch is lazy DataFrame work ending in one upload action, which
+  returns the branch's row, accepted and error counts; a transactional
+  branch then appends its accepted keys from the cached upload, and the
+  branch releases that cache;
+- each branch runs inside a try/except — a failing branch records an
+  error and the run continues (reference safe_process error isolation,
+  uploaders/utils.py:69-88);
 - the run summary is a driver-side list of per-branch results; exit code 1
   if any branch recorded errors (reference main.py:106-121).
 """
@@ -150,18 +154,19 @@ class Pipeline:
             transform = _TRANSFORMS.get(dtype)
             if transform is not None:
                 df = transform(df)
-            res.rows_read = df.count()
-
             sink = SinkExecutor.for_destination(
                 self.transport_factory(execution), dtype
             )
             outcome = sink.run(df)
-            res.rows_uploaded = outcome.success.count()
-            res.errors.extend(r["message"] for r in outcome.errors.collect())
-
-            if txn != TransactionalType.NOT_TRANSACTIONAL and res.rows_uploaded > 0:
-                # U20/D5: persist successfully-uploaded keys
-                res.errors.extend(ds.record_uploaded(txn, outcome.success))
+            try:
+                res.rows_read = outcome.rows
+                res.rows_uploaded = outcome.accepted
+                res.errors.extend(outcome.error_messages)
+                if txn != TransactionalType.NOT_TRANSACTIONAL and res.rows_uploaded > 0:
+                    # U20/D5: persist successfully-uploaded keys
+                    res.errors.extend(ds.record_uploaded(txn, outcome.success))
+            finally:
+                outcome.release()
         except SchemaValidationError as exc:
             res.errors.append(str(exc))
         except Exception as exc:  # branch isolation (safe_process)

@@ -51,6 +51,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # SQL-side Python (the sink's mapInArrow upload, mapInPandas
+        # kernels) runs in the same worker pool as RDD Python: Spark keys
+        # its Python workers by environment, and simplified tracebacks add
+        # a variable that starts a second daemon with its own workers
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -18,21 +18,23 @@ Reference behaviors folded in (SURVEY §4 "custom pieces"):
   accepted rows so downstream (control-table append, summary) stays
   relational (J3)
 
-Scale design: the upload is `mapInPandas`-free and collect-free — each
-partition streams its rows through the transport and yields accepted rows
-back as Arrow batches. Parallelism is bounded by `repartition(n)` before
-calling run() (API quota control), not by driver-side loops. Errors travel
-in-band as a struct column, so one action produces both the success rows
-and the error records (no second pass over the source).
+Scale design: the upload is a collect-free ``mapInArrow`` pass — each
+partition's Arrow batches are cut into chunks, the transport gets each
+chunk as row dicts (``RecordBatch.to_pylist``), and the chunk goes back
+as Arrow with a status and an error column appended; row values are never
+rebuilt in Python. Parallelism is bounded by `repartition(n)` before
+calling run() (API quota control), not by driver-side loops. ``run``
+caches the tagged rows and fills the cache with one global aggregate, so
+one action uploads and counts; the success rows and the error records
+are views of that cache, and ``SinkResult.release`` frees it.
 """
 
 from __future__ import annotations
 
-import itertools
 import time
 from collections import Counter
-from dataclasses import dataclass
-from typing import Any, Iterator
+from dataclasses import dataclass, field
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,6 +77,10 @@ RATE_LIMITS: dict[DestinationType, float] = {
 
 _STATUS_COL = "__megalista_status"
 _ERROR_COL = "__megalista_error"
+_OK, _REJECTED, _FAILED = 0, 1, 2  # values of the status column
+# local property carrying the number of upload tasks that run at once to
+# the pacer inside each task; it is known only once the upload is planned
+_UPLOAD_TASKS = "megalista.sink.uploadTasks"
 
 
 def _freeze(v: Any) -> Any:
@@ -87,12 +93,101 @@ def _freeze(v: Any) -> Any:
     return v
 
 
+def _row_converter(dtype: T.DataType) -> Callable[[Any], Any] | None:
+    """Maps a non-null value from ``RecordBatch.to_pylist`` to the value
+    ``Row.asDict(recursive=True)`` gives; None where the two already agree.
+    Arrow gives tz-aware datetimes and maps as pair lists; rows give naive
+    local datetimes and dicts. Binary is ``bytes`` in both (Spark's default
+    ``spark.sql.execution.pyspark.binaryAsBytes``)."""
+    if isinstance(dtype, T.TimestampType):
+        return lambda v: v.astimezone().replace(tzinfo=None)
+    if isinstance(dtype, T.ArrayType):
+        conv = _row_converter(dtype.elementType)
+        if conv is None:
+            return None
+        return lambda v: [None if x is None else conv(x) for x in v]
+    if isinstance(dtype, T.MapType):
+        kc = _row_converter(dtype.keyType) or (lambda k: k)
+        vc = _row_converter(dtype.valueType) or (lambda x: x)
+        return lambda v: {kc(k): None if x is None else vc(x) for k, x in v}
+    if isinstance(dtype, T.StructType):
+        convs = _field_converters(dtype)
+        if not convs:
+            return None
+
+        def convert_struct(v: dict) -> dict:
+            for name, conv in convs:
+                if v[name] is not None:
+                    v[name] = conv(v[name])
+            return v
+
+        return convert_struct
+    return None
+
+
+def _field_converters(schema: T.StructType) -> list[tuple[str, Callable[[Any], Any]]]:
+    return [(f.name, c) for f in schema.fields if (c := _row_converter(f.dataType))]
+
+
+def _chunks(batches: Iterator[Any], size: int) -> Iterator[Any]:
+    """Arrow tables of ``size`` rows (the last one shorter), cut across the
+    boundaries of the incoming record batches."""
+    import pyarrow as pa
+
+    pending: list = []
+    n = 0
+    for batch in batches:
+        start = 0
+        while start < batch.num_rows:
+            take = min(size - n, batch.num_rows - start)
+            pending.append(batch.slice(start, take))
+            n += take
+            start += take
+            if n == size:
+                yield pa.Table.from_batches(pending)
+                pending, n = [], 0
+    if n:
+        yield pa.Table.from_batches(pending)
+
+
+def _accepted_mask(chunk: list[dict], accepted: list[dict]) -> list[bool]:
+    """Which rows of ``chunk`` the transport accepted: identity fast path
+    (transports that return the same dict objects), with a value-level
+    multiset fallback for transports that return equal-but-reconstructed
+    dicts — the Transport contract only promises "the ACCEPTED row dicts",
+    not the same objects."""
+    chunk_ids = {id(d) for d in chunk}
+    accepted_ids = {id(d) for d in accepted}
+    rebuilt = Counter(_freeze(d) for d in accepted if id(d) not in chunk_ids)
+    mask = []
+    for d in chunk:
+        ok = id(d) in accepted_ids
+        if not ok and rebuilt:
+            key = _freeze(d)
+            if rebuilt[key] > 0:
+                rebuilt[key] -= 1
+                ok = True
+        mask.append(ok)
+    return mask
+
+
 @dataclass
 class SinkResult:
-    """Outcome of one sink run: accepted rows + error records."""
+    """Outcome of one sink run: accepted rows + error records, both views
+    of the cached upload, and the counts the upload action returned."""
 
     success: DataFrame
     errors: DataFrame
+    rows: int = 0  # rows that entered the sink
+    accepted: int = 0
+    error_messages: list[str] = field(default_factory=list)
+    tagged: DataFrame | None = None
+
+    def release(self) -> None:
+        """Unpersist the cached upload; ``success``/``errors`` must not be
+        read afterwards (reading them would upload again)."""
+        if self.tagged is not None:
+            self.tagged.unpersist()
 
 
 class SinkExecutor:
@@ -124,10 +219,11 @@ class SinkExecutor:
         return cls(transport, **kw)
 
     def run(self, df: DataFrame) -> SinkResult:
-        """One pass: upload, return (success rows, error records).
+        """One action: upload, then return (success rows, error records)
+        with the row, accepted and error counts.
 
         The returned success DataFrame has the input schema; errors carry
-        (partition_id, chunk_index, attempt_count, message).
+        (destination, message). Call ``release()`` when done with both.
         """
         if self.max_parallelism is not None:
             df = df.repartition(self.max_parallelism)
@@ -139,95 +235,99 @@ class SinkExecutor:
         transport = self.transport
         batch_size = self.batch_size
         max_retries = self.max_retries
+        budget = self.rate_limit_per_sec or 0
         base_context = dict(self.context)
-        rdd = df.rdd
-        # the destination's budget is shared by the upload tasks that run
-        # at once: no more than the partitions, nor than the task slots
-        running = min(
-            rdd.getNumPartitions(), df.sparkSession.sparkContext.defaultParallelism
-        )
-        task_rate = (self.rate_limit_per_sec or 0) / max(running, 1)
-
-        in_schema = df.schema
+        sc = df.sparkSession.sparkContext
+        slots = sc.defaultParallelism
+        converters = _field_converters(df.schema)
         out_schema = T.StructType(
-            list(in_schema.fields)
+            list(df.schema.fields)
             + [
-                T.StructField(_STATUS_COL, T.StringType(), False),
+                T.StructField(_STATUS_COL, T.ByteType(), False),
                 T.StructField(_ERROR_COL, T.StringType(), True),
             ]
         )
-        in_cols = [f.name for f in in_schema.fields]
 
-        def process_partition(rows: Iterator[Any]) -> Iterator[tuple]:
+        def upload(batches: Iterator[Any]) -> Iterator[Any]:
+            import pyarrow as pa
             from pyspark import TaskContext
 
-            pid = TaskContext.get().partitionId() if TaskContext.get() else -1
+            tc = TaskContext.get()
             ctx = dict(base_context)
-            ctx["partition_id"] = pid
+            ctx["partition_id"] = tc.partitionId() if tc else -1
+            # the destination's budget is shared by the upload tasks that
+            # run at once (all task slots if the count was not passed)
+            running = (tc and tc.getLocalProperty(_UPLOAD_TASKS)) or slots
+            task_rate = budget / max(int(running), 1)
             transport.open(ctx)
             try:
-                chunk_index = 0
-                while True:
-                    chunk = list(itertools.islice(rows, batch_size))
-                    if not chunk:
-                        break
-                    chunk_index += 1
+                for chunk_index, table in enumerate(_chunks(batches, batch_size), 1):
                     ctx["chunk_index"] = chunk_index
                     ctx["iteration"] = chunk_index  # reference Batch.iteration
-                    dict_chunk = [r.asDict(recursive=True) for r in chunk]
+                    rows = table.to_pylist()
+                    for name, conv in converters:
+                        for d in rows:
+                            if d[name] is not None:
+                                d[name] = conv(d[name])
                     started = time.monotonic()
                     accepted: list[dict] | None = None
                     err: str | None = None
                     for attempt in range(1, max_retries + 1):
                         try:
-                            accepted = transport.send(dict_chunk, ctx)
+                            accepted = transport.send(rows, ctx)
                             break
                         except Exception as exc:  # error isolation: chunk-level
                             err = f"{type(exc).__name__}: {exc}"
                             if attempt < max_retries:
                                 time.sleep(min(0.05 * attempt, 1.0))
                     if task_rate:  # post-batch floor (reference :131-136)
-                        done_at = started + len(dict_chunk) / task_rate
+                        done_at = started + len(rows) / task_rate
                         time.sleep(max(0.0, done_at - time.monotonic()))
+                    # the status column and the null error column come from
+                    # buffers: pa.array over Python lists imports pandas into
+                    # the upload worker (about 40 MB), so only a failed
+                    # chunk pays that
                     if accepted is None:
                         # whole chunk failed after retries → error records
-                        for d in dict_chunk:
-                            yield tuple(d.get(c) for c in in_cols) + ("error", err)
-                        continue
-                    # Accepted-row matching: identity fast path (transports
-                    # that return the same dict objects), with a value-level
-                    # multiset fallback for transports that return
-                    # equal-but-reconstructed dicts — the Transport contract
-                    # only promises "the ACCEPTED row dicts", not the same
-                    # objects.
-                    accepted_ids = {id(d) for d in accepted}
-                    rebuilt = Counter(
-                        _freeze(d) for d in accepted if id(d) not in {id(c) for c in dict_chunk}
-                    )
-                    for d in dict_chunk:
-                        ok = id(d) in accepted_ids
-                        if not ok and rebuilt:
-                            key = _freeze(d)
-                            if rebuilt.get(key, 0) > 0:
-                                rebuilt[key] -= 1
-                                ok = True
-                        yield tuple(d.get(c) for c in in_cols) + (
-                            "ok" if ok else "rejected",
-                            None,
-                        )
+                        status = bytes([_FAILED]) * len(rows)
+                        errors = pa.array([err] * len(rows), pa.string())
+                    else:
+                        mask = _accepted_mask(rows, accepted)
+                        status = bytes(_OK if ok else _REJECTED for ok in mask)
+                        errors = pa.nulls(len(rows), pa.string())
+                    out = table.append_column(
+                        _STATUS_COL,
+                        pa.Array.from_buffers(pa.int8(), len(rows), [None, pa.py_buffer(status)]),
+                    ).append_column(_ERROR_COL, errors)
+                    yield from out.to_batches()
             finally:
                 transport.close(ctx)
 
-        tagged = rdd.mapPartitions(process_partition).toDF(out_schema)
-        # One lineage, two lazily-derived views; caller actions decide when
-        # the upload actually runs. Cache so success+errors don't re-upload.
-        tagged = tagged.cache()
-        success = tagged.where(F.col(_STATUS_COL) == "ok").select(*in_cols)
-        errors = (
-            tagged.where(F.col(_STATUS_COL) == "error")
-            .select(
-                F.lit(base_context.get("destination_type", "")).alias("destination"),
-                F.col(_ERROR_COL).alias("message"),
-            )
+        tagged = df.mapInArrow(upload, out_schema).cache()
+        status = F.col(_STATUS_COL)
+        try:
+            if budget:
+                # plans the cached upload (running any stage before it)
+                # without running it, so the aggregate adds no job. The JVM
+                # Dataset.rdd, not DataFrame.rdd: the Python path plans
+                # without the session's SQL conf, and its upload workers
+                # would start as a second Python worker pool
+                partitions = tagged._jdf.rdd().getNumPartitions()
+                sc.setLocalProperty(_UPLOAD_TASKS, str(min(partitions, slots)))
+            # the one action: runs the upload and fills the cache
+            totals = tagged.agg(
+                F.count(F.lit(1)),
+                F.count(F.when(status == _OK, True)),
+                F.collect_list(F.when(status == _FAILED, F.col(_ERROR_COL))),
+            ).first()
+        except BaseException:
+            tagged.unpersist()
+            raise
+        finally:
+            sc.setLocalProperty(_UPLOAD_TASKS, None)
+        success = tagged.where(status == _OK).drop(_STATUS_COL, _ERROR_COL)
+        errors = tagged.where(status == _FAILED).select(
+            F.lit(base_context.get("destination_type", "")).alias("destination"),
+            F.col(_ERROR_COL).alias("message"),
         )
-        return SinkResult(success=success, errors=errors)
+        return SinkResult(success, errors, totals[0], totals[1], list(totals[2]), tagged)

@@ -31,7 +31,7 @@ class TransportError(RuntimeError):
 
 class Transport:
     """Strategy interface. Subclasses must be picklable (they're shipped to
-    executors inside the foreachPartition closure)."""
+    executors inside the upload task's closure)."""
 
     def send(self, payload: list[Row], context: dict[str, Any]) -> list[Row]:
         raise NotImplementedError

@@ -174,10 +174,9 @@ def stream_sink_foreach_batch(
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         result = sink_factory().run(batch_df)
-        ok = result.success.count()
-        errs = result.errors.count()
+        result.release()
         if on_batch is not None:
-            on_batch(epoch_id, ok, errs)
+            on_batch(epoch_id, result.accepted, len(result.error_messages))
 
     return (
         transformed.writeStream.foreachBatch(handle)

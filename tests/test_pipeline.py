@@ -4,12 +4,15 @@ transactional idempotency, error isolation, exit codes, run summary."""
 from __future__ import annotations
 
 import json
+import os
+import uuid
 
 import pytest
 
-from megalista_spark.models.execution import DestinationType
+from megalista_spark.models.execution import DestinationType, TransactionalType
 from megalista_spark.pipeline import Pipeline, run_from_config
 from megalista_spark.sinks.transports import MockTransport, Transport, TransportError
+from megalista_spark.sources.data_source import get_data_source
 
 
 def write_config(tmp_path, src_path, connections):
@@ -172,3 +175,75 @@ def test_calls_branch_rerun_uploads_nothing(spark, tmp_path):
     r2 = run_from_config(spark, str(p), lambda e: MockTransport())
     assert r2.exit_code == 0
     assert r2.branches[0].rows_uploaded == 0
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_run_releases_every_cache(spark, tmp_path, conversions_path):
+    """A transactional and a non-transactional branch on one shared source:
+    the run unpersists the shared scan and each branch's upload."""
+    cfg = write_config(
+        tmp_path,
+        conversions_path,
+        [
+            {"Enabled": True, "Source": "conv", "Destination": "oci"},
+            {"Enabled": True, "Source": "conv", "Destination": "cm"},
+        ],
+    )
+    before = _persistent_rdds(spark)
+    r = run_from_config(spark, cfg, lambda e: MockTransport())
+    assert r.exit_code == 0
+    assert [b.rows_uploaded for b in r.branches] == [20, 20]
+    assert _persistent_rdds(spark) == before
+
+
+class KeyLogTransport(Transport):
+    """Writes the gclid of every row it is sent to a new file under
+    ``out_dir`` and rejects the gclids ending in 3."""
+
+    def __init__(self, out_dir: str):
+        self.out_dir = out_dir
+
+    def send(self, payload, context):
+        with open(os.path.join(self.out_dir, uuid.uuid4().hex), "w") as f:
+            f.write("".join(r["gclid"] + "\n" for r in payload))
+        return [r for r in payload if not r["gclid"].endswith("3")]
+
+
+# Spark jobs of one transactional branch on a fresh control table: six for
+# the upload action (adaptive execution runs each of its query stages as
+# a job) and one for the control-table append. A re-added count, collect
+# or second upload raises it.
+BRANCH_JOBS = 7
+
+
+def test_each_row_sent_once_and_keys_recorded_once(spark, tmp_path, conversions_path):
+    cfg = write_config(
+        tmp_path,
+        conversions_path,
+        [{"Enabled": True, "Source": "conv", "Destination": "oci"}],
+    )
+    sent_dir = tmp_path / "sent"
+    sent_dir.mkdir()
+    sc = spark.sparkContext
+    group = f"exactly-once-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one transactional branch")
+    try:
+        r = run_from_config(spark, cfg, lambda e: KeyLogTransport(str(sent_dir)))
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+
+    sent = [k for p in sent_dir.iterdir() for k in p.read_text().split()]
+    all_keys = [f"g{i}" for i in range(20)]
+    accepted = [k for k in all_keys if not k.endswith("3")]
+    assert sorted(sent) == sorted(all_keys)  # every row reaches send once
+    branch = r.branches[0]
+    assert branch.rows_read == 20
+    assert branch.rows_uploaded == len(accepted) == 18
+    ds = get_data_source(spark, branch.execution.source)
+    control = ds.control_table(TransactionalType.GCLID_TIME).read()
+    assert sorted(row["gclid"] for row in control.collect()) == sorted(accepted)
+    assert len(jobs) <= BRANCH_JOBS, len(jobs)

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import json
 import os
+import pickle
 import time
+import uuid
 
 import pytest
 
@@ -14,6 +16,7 @@ from megalista_spark.sinks.transports import (
     ConcurrentSendTransport,
     DryRunTransport,
     MockTransport,
+    Transport,
 )
 
 
@@ -210,3 +213,88 @@ def test_rate_budget_holds_when_tasks_outnumber_cores(spark, tmp_path):
     budget = 400.0
     rate = _paced_rate(spark, tmp_path, budget, tasks=2 * slots, rows_per_task=300)
     assert 0.8 * budget <= rate <= budget
+
+
+class _PickleRecorder(Transport):
+    """Accepts every row and pickles each chunk it receives, with the chunk
+    context, to a new file under ``out_dir``."""
+
+    def __init__(self, out_dir):
+        self.out_dir = out_dir
+
+    def send(self, payload, context):
+        with open(os.path.join(self.out_dir, uuid.uuid4().hex), "wb") as f:
+            pickle.dump((dict(context), payload), f)
+        return payload
+
+
+def _recorded(out_dir):
+    return [pickle.loads(p.read_bytes()) for p in out_dir.iterdir()]
+
+
+def test_transport_rows_equal_row_as_dict(spark, tmp_path):
+    """The transport gets the values ``Row.asDict(recursive=True)`` gives:
+    nested structs and arrays of structs as dicts and lists, timestamps as
+    naive local datetimes, decimals as Decimal, binary as bytes (Spark's
+    default ``spark.sql.execution.pyspark.binaryAsBytes``)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    schema = (
+        "id int, name string, note string,"
+        " address_info struct<first_name:string, zip_code:string, seen:timestamp>,"
+        " customVariables array<struct<type:string, value:string>>,"
+        " ts timestamp, day date, amount decimal(12,2), blob binary, tags map<string,int>"
+    )
+    rows = [
+        (
+            i,
+            f"n{i}",
+            None if i % 2 else "x",
+            None if i == 3 else {"first_name": "a", "zip_code": None, "seen": dt.datetime(2020, 1, i + 1, 8)},
+            [{"type": "U1", "value": str(i)}, {"type": "U2", "value": None}] if i != 2 else None,
+            dt.datetime(2020, 4, 9, 14, 13, i),
+            dt.date(2020, 1, i + 1),
+            Decimal(f"{i}.25"),
+            bytes([i, 0, 255]),
+            {"k": i} if i != 1 else None,
+        )
+        for i in range(5)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    result = SinkExecutor(_PickleRecorder(str(tmp_path)), batch_size=2).run(df)
+    result.release()
+    sent = sorted((d for _, chunk in _recorded(tmp_path) for d in chunk), key=lambda d: d["id"])
+    expected = [r.asDict(recursive=True) for r in df.orderBy("id").collect()]
+    assert sent == expected
+    assert type(sent[0]["blob"]) is type(expected[0]["blob"])
+    assert sent[0]["ts"].tzinfo is None and sent[0]["address_info"]["seen"].tzinfo is None
+
+
+def test_chunks_span_arrow_batches(spark, tmp_path):
+    """Arrow batches of 7 rows, chunks of 10: 45 rows in one partition
+    give chunks of 10, 10, 10, 10 and 5 with 1-based indices."""
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    try:
+        df = spark.range(0, 45, 1, numPartitions=1)
+        result = SinkExecutor(_PickleRecorder(str(tmp_path)), batch_size=10).run(df)
+        assert (result.rows, result.accepted) == (45, 45)
+        result.release()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    chunks = sorted((ctx["chunk_index"], ctx["iteration"], len(p)) for ctx, p in _recorded(tmp_path))
+    assert chunks == [(1, 1, 10), (2, 2, 10), (3, 3, 10), (4, 4, 10), (5, 5, 5)]
+    ids = sorted(d["id"] for _, p in _recorded(tmp_path) for d in p)
+    assert ids == list(range(45))
+
+
+def test_one_rebuilt_copy_of_two_equal_rows_accepts_one(spark):
+    class OneCopy(Transport):
+        def send(self, payload, context):
+            return [dict(payload[0])]
+
+    df = spark.createDataFrame([("same", 1), ("same", 1)], ["k", "v"]).coalesce(1)
+    result = SinkExecutor(OneCopy(), batch_size=10).run(df)
+    assert (result.rows, result.accepted) == (2, 1)
+    assert [tuple(r) for r in result.success.collect()] == [("same", 1)]
+    result.release()

@@ -92,6 +92,32 @@ def test_foreach_batch_sink_bridge(spark, tmp_path):
     assert all(errs == 0 for _, _, errs in batches)
 
 
+def test_foreach_batch_sink_releases_cache_each_epoch(spark, tmp_path):
+    """Two micro-batches: each epoch's upload reports its counts and frees
+    its cached rows."""
+    src = tmp_path / "src"
+    for part in range(2):
+        spark.createDataFrame(
+            [(f"e{part}-{i}",) for i in range(10)], ["uuid"]
+        ).coalesce(1).write.mode("append").parquet(str(src))
+    stream = (
+        spark.readStream.schema("uuid string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    batches: list[tuple[int, int, int]] = []
+    q = stream_sink_foreach_batch(
+        stream,
+        sink_factory=lambda: SinkExecutor(MockTransport(), batch_size=4),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        on_batch=lambda epoch, ok, errs: batches.append((epoch, ok, errs)),
+    )
+    q.awaitTermination(120)
+    assert batches == [(0, 10, 0), (1, 10, 0)]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_stateful_running_stats(spark, tmp_path):
     from megalista_spark.streaming.events import stream_user_running_stats
 
