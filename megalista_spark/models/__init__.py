@@ -1,6 +1,5 @@
 from megalista_spark.models.execution import (
     AccountConfig,
-    Batch,
     Destination,
     DestinationType,
     Execution,
@@ -11,7 +10,6 @@ from megalista_spark.models.execution import (
 
 __all__ = [
     "AccountConfig",
-    "Batch",
     "Destination",
     "DestinationType",
     "Execution",

@@ -10,9 +10,9 @@ the driver).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
-from typing import Any, Sequence
+from typing import Sequence
 
 
 class DestinationType(Enum):
@@ -161,20 +161,6 @@ class Execution:
     @property
     def key(self) -> tuple[str, str]:
         return (self.source.name, self.destination.name)
-
-
-@dataclass
-class Batch:
-    """A chunk of rows headed to one sink (reference models/execution.py:436-468).
-
-    ``iteration`` is 1-based, deterministic within a partition — the
-    reference derives it from arrival order inside a Beam bundle, which is
-    unspecified; here it's the chunk index within a Spark partition.
-    """
-
-    execution: Execution
-    elements: list[dict[str, Any]]
-    iteration: int = 1
 
 
 def group_executions_by_source(

@@ -57,6 +57,15 @@ _TRANSFORMS: dict[DestinationType, Callable[[DataFrame], DataFrame]] = {
     DestinationType.DV_CUSTOMER_MATCH_DEVICE_ID_UPLOAD: dv_pii_expressions,
     DestinationType.CM_OFFLINE_CONVERSION: aggregate_custom_variables,
 }
+_PII_TRANSFORMS = (ads_pii_expressions, dv_pii_expressions)
+
+
+def _hash_enabled(execution: Execution) -> bool:
+    """Hash toggle (reference abstract_list_pii_hashing_mapper.py:53-63):
+    destination metadata[2] equal to 'false' in any case means the rows are
+    already hashed; an absent or empty value means hash."""
+    md = execution.destination.metadata
+    return len(md) < 3 or str(md[2] or "").strip().lower() != "false"
 
 
 @dataclass
@@ -152,7 +161,9 @@ class Pipeline:
             txn = schema.transactional_type
             df = ds.retrieve_data(schema, txn, raw)
             transform = _TRANSFORMS.get(dtype)
-            if transform is not None:
+            if transform in _PII_TRANSFORMS:
+                df = transform(df, hash_enabled=_hash_enabled(execution))
+            elif transform is not None:
                 df = transform(df)
             sink = SinkExecutor.for_destination(
                 self.transport_factory(execution), dtype

@@ -34,18 +34,20 @@ live default — tests inject recorders and assert the exact requests the
 reference's mocked-API tests assert; a deployment with the libraries
 installed uses the defaults unchanged.
 
-Everything an executor pickles is plain data: live service objects are
-built inside ``open()`` (per partition), never in ``__init__``.
+Live service objects are built in ``open()`` or on first use, never in
+``__init__``: the executor pickles each transport before ``before_run``,
+so a service built on the driver stays there and each task builds its own
+(``Transport``).
 """
 
 from __future__ import annotations
 
 import json
-import re
+from functools import partial
 from typing import Any, Callable
 
 from megalista_spark.models.credentials import OAuthCredentials
-from megalista_spark.models.execution import Execution
+from megalista_spark.models.execution import Execution, filter_text_only_numbers
 from megalista_spark.sinks import payloads
 from megalista_spark.sinks.customer_match import AdsApiClient
 from megalista_spark.sinks.transports import (
@@ -82,11 +84,6 @@ def gaql_quote(name: str) -> str:
     list/conversion-action name containing ``'`` breaks the query and is
     an injection vector."""
     return name.replace("\\", "\\\\").replace("'", "\\'")
-
-
-def _only_numbers(s: str) -> str:
-    """reference utils/utils.py filter_text_only_numbers."""
-    return re.sub(r"[^0-9]", "", s or "")
 
 
 # --------------------------------------------------------------- HTTP seam
@@ -362,7 +359,7 @@ class GoogleAdsConversionsTransport(Transport):
     def customer_id(self) -> str:
         md = self.execution.destination.metadata
         if len(md) >= 2 and md[1]:
-            return _only_numbers(md[1])
+            return filter_text_only_numbers(md[1])
         return self.execution.account_config.google_ads_account_id
 
     @property
@@ -393,9 +390,6 @@ class GoogleAdsConversionsTransport(Transport):
                     f"{self.customer_id}"
                 )
         return self._resource_name
-
-    def open(self, context: dict[str, Any]) -> None:
-        self._resource_name = None  # re-resolve per partition after unpickle
 
     def _build(self, row: Row, action: str) -> Row:
         if self.kind == "click":
@@ -467,76 +461,53 @@ class GoogleAdsConversionsTransport(Transport):
 # ------------------------------------------------------ discovery API seam
 
 
-def _discovery_credentials(credentials: OAuthCredentials, scopes: list[str]) -> Any:
+# (api, version, scopes) of each discovery API: reference
+# campaign_manager_conversion_uploader.py:36-48,
+# google_analytics_user_list_uploader.py:36-43 and
+# display_video/customer_match/abstract_uploader.py:45-61
+DCM_API = (
+    "dfareporting",
+    CM_API_VERSION,
+    (
+        "https://www.googleapis.com/auth/dfareporting",
+        "https://www.googleapis.com/auth/dfatrafficking",
+        "https://www.googleapis.com/auth/ddmconversions",
+    ),
+)
+ANALYTICS_API = (
+    "analytics",
+    "v3",
+    (
+        "https://www.googleapis.com/auth/analytics.edit",
+        "https://www.googleapis.com/auth/adwords",
+    ),
+)
+DV_API = ("displayvideo", DV_API_VERSION, ("https://www.googleapis.com/auth/display-video",))
+
+
+def build_discovery_service(
+    api: str, version: str, scopes: tuple[str, ...], credentials: OAuthCredentials
+) -> Any:
+    """The live ``service_builder``: a discovery client for ``api`` with
+    OAuth user credentials (reference
+    campaign_manager_conversion_uploader.py:37-47)."""
     try:
         from google.oauth2.credentials import Credentials
+        from googleapiclient.discovery import build
     except ImportError as exc:
         raise MissingClientLibraryError(
-            "google-auth is not installed; install it or inject a "
-            "service_builder (see ADAPTERS.md)"
+            "google-auth and google-api-python-client are required; install "
+            "them or inject a service_builder (see ADAPTERS.md)"
         ) from exc
-    # reference campaign_manager_conversion_uploader.py:37-47
-    return Credentials(
+    creds = Credentials(
         token=credentials.get_access_token(),
         refresh_token=credentials.get_refresh_token(),
         client_id=credentials.get_client_id(),
         client_secret=credentials.get_client_secret(),
         token_uri="https://accounts.google.com/o/oauth2/token",
-        scopes=scopes,
+        scopes=list(scopes),
     )
-
-
-def _discovery_build(api: str, version: str, creds: Any) -> Any:
-    try:
-        from googleapiclient.discovery import build
-    except ImportError as exc:
-        raise MissingClientLibraryError(
-            "google-api-python-client is not installed; install it or "
-            "inject a service_builder (see ADAPTERS.md)"
-        ) from exc
     return build(api, version, credentials=creds)
-
-
-def build_dcm_service(credentials: OAuthCredentials) -> Any:
-    """reference campaign_manager_conversion_uploader.py:36-48."""
-    return _discovery_build(
-        "dfareporting",
-        CM_API_VERSION,
-        _discovery_credentials(
-            credentials,
-            [
-                "https://www.googleapis.com/auth/dfareporting",
-                "https://www.googleapis.com/auth/dfatrafficking",
-                "https://www.googleapis.com/auth/ddmconversions",
-            ],
-        ),
-    )
-
-
-def build_analytics_service(credentials: OAuthCredentials) -> Any:
-    """reference google_analytics_user_list_uploader.py:36-43."""
-    return _discovery_build(
-        "analytics",
-        "v3",
-        _discovery_credentials(
-            credentials,
-            [
-                "https://www.googleapis.com/auth/analytics.edit",
-                "https://www.googleapis.com/auth/adwords",
-            ],
-        ),
-    )
-
-
-def build_dv_service(credentials: OAuthCredentials) -> Any:
-    """reference display_video/customer_match/abstract_uploader.py:45-61."""
-    return _discovery_build(
-        "displayvideo",
-        DV_API_VERSION,
-        _discovery_credentials(
-            credentials, ["https://www.googleapis.com/auth/display-video"]
-        ),
-    )
 
 
 class CampaignManagerConversionsTransport(Transport):
@@ -563,16 +534,9 @@ class CampaignManagerConversionsTransport(Transport):
             raise ValueError(f"Missing destination information. Found {len(md)}")
         self.execution = execution
         self.credentials = credentials or OAuthCredentials()
-        self.service_builder = service_builder or build_dcm_service
+        self.service_builder = service_builder or partial(build_discovery_service, *DCM_API)
         self.now_micros = now_micros
         self._service: Any = None
-
-    def __getstate__(self) -> dict[str, Any]:
-        return {k: v for k, v in self.__dict__.items() if k != "_service"}
-
-    def __setstate__(self, state: dict[str, Any]) -> None:
-        self.__dict__.update(state)
-        self._service = None
 
     def open(self, context: dict[str, Any]) -> None:
         self._service = self.service_builder(self.credentials)
@@ -719,30 +683,22 @@ class GADataImportTransport(Transport):
         execution: Execution,
         credentials: OAuthCredentials | None = None,
         service_builder: Callable[[OAuthCredentials], Any] | None = None,
-        erase_before_run: bool = True,
     ):
         self.execution = execution
         self.credentials = credentials or OAuthCredentials()
-        self.service_builder = service_builder or build_analytics_service
-        self.erase_before_run = erase_before_run
+        self.service_builder = service_builder or partial(
+            build_discovery_service, *ANALYTICS_API
+        )
         self._service: Any = None
         self._data_source_id: str | None = None
-
-    def __getstate__(self) -> dict[str, Any]:
-        return {
-            k: v
-            for k, v in self.__dict__.items()
-            if k not in ("_service", "_data_source_id")
-        }
-
-    def __setstate__(self, state: dict[str, Any]) -> None:
-        self.__dict__.update(state)
-        self._service = None
-        self._data_source_id = None
 
     @property
     def _ga_account_id(self) -> str:
         return self.execution.account_config.google_analytics_account_id
+
+    @property
+    def _data_import_name(self) -> str:
+        return self.execution.destination.metadata[1]
 
     def _ensure_service(self) -> Any:
         if self._service is None:
@@ -753,10 +709,8 @@ class GADataImportTransport(Transport):
         """reference uploader :95-104 / eraser :77-84: list
         customDataSources, match by name."""
         if self._data_source_id is None:
-            web_property_id, data_import_name = (
-                self.execution.destination.metadata[0],
-                self.execution.destination.metadata[1],
-            )
+            web_property_id = self.execution.destination.metadata[0]
+            data_import_name = self._data_import_name
             analytics = self._ensure_service()
             sources = (
                 analytics.management()
@@ -774,8 +728,6 @@ class GADataImportTransport(Transport):
         return self._data_source_id
 
     def before_run(self, context: dict[str, Any]) -> None:
-        if not self.erase_before_run:
-            return
         web_property_id = self.execution.destination.metadata[0]
         analytics = self._ensure_service()
         data_source_id = self._resolve_data_source_id()
@@ -798,11 +750,10 @@ class GADataImportTransport(Transport):
                 body={"customDataImportUids": file_ids},
             ).execute()
 
-    def send(self, payload: list[Row], context: dict[str, Any]) -> list[Row]:
-        web_property_id = self.execution.destination.metadata[0]
-        analytics = self._ensure_service()
+    def _upload_csv(self, csv: str) -> None:
+        """uploadData one CSV to the data source (reference uploader
+        :150-155)."""
         data_source_id = self._resolve_data_source_id()
-        csv = payloads.ga_data_import_csv(payload)
         try:
             from googleapiclient.http import MediaInMemoryUpload
         except ImportError:
@@ -816,13 +767,15 @@ class GADataImportTransport(Transport):
             if MediaInMemoryUpload is not None
             else csv.encode("utf-8")
         )
-        # reference uploader :150-155
-        analytics.management().uploads().uploadData(
+        self._ensure_service().management().uploads().uploadData(
             accountId=self._ga_account_id,
-            webPropertyId=web_property_id,
+            webPropertyId=self.execution.destination.metadata[0],
             customDataSourceId=data_source_id,
             media_body=media,
         ).execute()
+
+    def send(self, payload: list[Row], context: dict[str, Any]) -> list[Row]:
+        self._upload_csv(payloads.ga_data_import_csv(payload))
         return payload
 
 
@@ -868,25 +821,11 @@ class DV360CustomerMatchTransport(Transport):
             raise ValueError(f"unknown DV360 customer match variant: {variant}")
         self.execution = execution
         self.credentials = credentials or OAuthCredentials()
-        self.service_builder = service_builder or build_dv_service
+        self.service_builder = service_builder or partial(build_discovery_service, *DV_API)
         self.variant = variant
         self.app_id = app_id
         self._service: Any = None
         self._audience: Row | None = None
-        self._created_this_partition = False
-
-    def __getstate__(self) -> dict[str, Any]:
-        return {
-            k: v
-            for k, v in self.__dict__.items()
-            if k not in ("_service", "_audience", "_created_this_partition")
-        }
-
-    def __setstate__(self, state: dict[str, Any]) -> None:
-        self.__dict__.update(state)
-        self._service = None
-        self._audience = None
-        self._created_this_partition = False
 
     @property
     def advertiser_id(self) -> str:
@@ -972,7 +911,6 @@ class DV360CustomerMatchTransport(Transport):
                     )
                     .execute()
                 )
-                self._created_this_partition = True
                 return payload
             self._audience = found
         body = {
@@ -1030,8 +968,8 @@ class GAUserListTransport(GADataImportTransport):
     audience exactly once when user_id_list_name is set (:138-140,
     :46-93 — segment users::condition::<buyer_dim>==buyer, 365-day
     membership, MCC_LINKS/ADWORDS_LINKS by account type); the eraser is
-    NOT part of this uploader (no erase_before_run). send() renders the
-    two-column (user_id_custom_dim, buyer_custom_dim) CSV (:153-157)."""
+    NOT part of this uploader. send() renders the two-column
+    (user_id_custom_dim, buyer_custom_dim) CSV (:153-157)."""
 
     def __init__(
         self,
@@ -1050,35 +988,13 @@ class GAUserListTransport(GADataImportTransport):
                 f"Missing destination information. Received {md}"
             )
         super().__init__(
-            execution,
-            credentials=credentials,
-            service_builder=service_builder,
-            erase_before_run=False,
+            execution, credentials=credentials, service_builder=service_builder
         )
 
     @property
     def _data_import_name(self) -> str:
         # data import name is metadata[2] here (vs [1] for GA_DATA_IMPORT)
         return self.execution.destination.metadata[2]
-
-    def _resolve_data_source_id(self) -> str:
-        if self._data_source_id is None:
-            web_property_id = self.execution.destination.metadata[0]
-            analytics = self._ensure_service()
-            sources = (
-                analytics.management()
-                .customDataSources()
-                .list(accountId=self._ga_account_id, webPropertyId=web_property_id)
-                .execute()["items"]
-            )
-            matches = [s for s in sources if s["name"] == self._data_import_name]
-            if len(matches) != 1:
-                raise TransportError(
-                    f"{self._data_import_name} - data import not found, "
-                    "please configure it in Google Analytics"
-                )
-            self._data_source_id = matches[0]["id"]
-        return self._data_source_id
 
     def before_run(self, context: dict[str, Any]) -> None:
         md = self.execution.destination.metadata
@@ -1124,9 +1040,6 @@ class GAUserListTransport(GADataImportTransport):
         md = self.execution.destination.metadata
         user_dim, buyer_dim = md[4], md[5]
         custom_dim_field = md[6] if len(md) > 6 else None
-        web_property_id = md[0]
-        analytics = self._ensure_service()
-        data_source_id = self._resolve_data_source_id()
         # reference :153-157 — header is the dim PAIR, not ga:-prefixed
         body = "\n".join(
             [
@@ -1141,23 +1054,5 @@ class GAUserListTransport(GADataImportTransport):
                 ],
             ]
         )
-        try:
-            from googleapiclient.http import MediaInMemoryUpload
-        except ImportError:
-            MediaInMemoryUpload = None
-        media = (
-            MediaInMemoryUpload(
-                body.encode("utf-8"),
-                mimetype="application/octet-stream",
-                resumable=True,
-            )
-            if MediaInMemoryUpload is not None
-            else body.encode("utf-8")
-        )
-        analytics.management().uploads().uploadData(
-            accountId=self._ga_account_id,
-            webPropertyId=web_property_id,
-            customDataSourceId=data_source_id,
-            media_body=media,
-        ).execute()
+        self._upload_csv(body)
         return payload

@@ -114,13 +114,9 @@ class CustomerMatchTransport(Transport):
         parallel partition uploads (see module docstring on iteration==1).
 
         The removal runs in a DEDICATED job that is created, populated and
-        run to completion here on the driver — it must never enter
-        ``_job_cache``, because the transport object is pickled into every
-        partition closure and a cached job resource would be shared by all
-        partitions: their adds would race this job's ``run_job`` (a job can
-        only be run once against the real API). Both caches are cleared
-        before the distributed send so every partition creates, populates
-        and runs only jobs it owns."""
+        run to completion here on the driver (a job can only be run once
+        against the real API); each partition creates, populates and runs
+        only jobs it owns."""
         if self.is_replace:
             list_resource = self._ensure_list()
             removal_job = self.client.create_offline_user_data_job(
@@ -128,8 +124,6 @@ class CustomerMatchTransport(Transport):
             )
             self.client.add_job_operations(removal_job, [{"remove_all": True}])
             self.client.run_job(removal_job)
-        self._list_cache.clear()
-        self._job_cache.clear()
 
     def send(self, payload: list[Row], context: dict[str, Any]) -> list[Row]:
         list_resource = self._ensure_list()

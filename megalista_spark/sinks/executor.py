@@ -5,10 +5,11 @@ Reference behaviors folded in (SURVEY §4 "custom pieces"):
   batches_from_executions.py:113-131) with 1-based ``iteration`` —
   deterministic chunk index within a partition
 - per-destination batch sizes (processing_steps.py:100-558; BATCH_SIZES)
-- retry ≤ 3 with backoff (uploaders/utils.py:27,91-104)
+- retry ≤ 3 with backoff (uploaders/utils.py:27,91-104; ``transports.retry``)
 - client-per-partition lifecycle with open/close hooks (the reference's
   per-worker caches + finish_bundle deferred jobs,
-  abstract_uploader.py:43-56)
+  abstract_uploader.py:43-56): the transport is pickled before
+  ``before_run``, so each task starts from the transport ``run`` received
 - client-side rate limiting (appsflyer_s2s_uploader_async.py:131-139):
   a destination's budget is split evenly across its upload tasks, and a
   chunk of n rows takes at least n / per-task rate seconds
@@ -31,19 +32,19 @@ are views of that cache, and ``SinkResult.release`` frees it.
 
 from __future__ import annotations
 
+import pickle
 import time
 from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from megalista_spark.models.execution import DestinationType
-from megalista_spark.sinks.transports import Transport
-
-MAX_RETRIES = 3  # reference uploaders/utils.py:27
+from megalista_spark.sinks.transports import Transport, retry
 
 # Per-destination upload batch sizes (reference processing_steps.py +
 # third_party/steps.py:31; default batches_from_executions.py:147).
@@ -197,16 +198,12 @@ class SinkExecutor:
         self,
         transport: Transport,
         batch_size: int = DEFAULT_BATCH_SIZE,
-        max_retries: int = MAX_RETRIES,
         rate_limit_per_sec: float | None = None,
-        max_parallelism: int | None = None,
         context: dict[str, Any] | None = None,
     ):
         self.transport = transport
         self.batch_size = batch_size
-        self.max_retries = max_retries
         self.rate_limit_per_sec = rate_limit_per_sec
-        self.max_parallelism = max_parallelism
         self.context = context or {}
 
     @classmethod
@@ -225,16 +222,14 @@ class SinkExecutor:
         The returned success DataFrame has the input schema; errors carry
         (destination, message). Call ``release()`` when done with both.
         """
-        if self.max_parallelism is not None:
-            df = df.repartition(self.max_parallelism)
-
+        # the tasks get the transport as run() received it: pickled before
+        # before_run, so what before_run builds stays on the driver
+        shipped = cloudpickle.dumps(self.transport)
         # run-level preparation (e.g. GA data-import erase, customer-match
         # REPLACE remove_all) happens exactly once, before any upload
         self.transport.before_run(dict(self.context))
 
-        transport = self.transport
         batch_size = self.batch_size
-        max_retries = self.max_retries
         budget = self.rate_limit_per_sec or 0
         base_context = dict(self.context)
         sc = df.sparkSession.sparkContext
@@ -259,6 +254,7 @@ class SinkExecutor:
             # run at once (all task slots if the count was not passed)
             running = (tc and tc.getLocalProperty(_UPLOAD_TASKS)) or slots
             task_rate = budget / max(int(running), 1)
+            transport = pickle.loads(shipped)
             transport.open(ctx)
             try:
                 for chunk_index, table in enumerate(_chunks(batches, batch_size), 1):
@@ -270,31 +266,24 @@ class SinkExecutor:
                             if d[name] is not None:
                                 d[name] = conv(d[name])
                     started = time.monotonic()
-                    accepted: list[dict] | None = None
-                    err: str | None = None
-                    for attempt in range(1, max_retries + 1):
-                        try:
-                            accepted = transport.send(rows, ctx)
-                            break
-                        except Exception as exc:  # error isolation: chunk-level
-                            err = f"{type(exc).__name__}: {exc}"
-                            if attempt < max_retries:
-                                time.sleep(min(0.05 * attempt, 1.0))
-                    if task_rate:  # post-batch floor (reference :131-136)
-                        done_at = started + len(rows) / task_rate
-                        time.sleep(max(0.0, done_at - time.monotonic()))
                     # the status column and the null error column come from
                     # buffers: pa.array over Python lists imports pandas into
                     # the upload worker (about 40 MB), so only a failed
                     # chunk pays that
-                    if accepted is None:
+                    try:
+                        accepted = retry(lambda: transport.send(rows, ctx))
+                    except Exception as exc:  # error isolation: chunk-level
                         # whole chunk failed after retries → error records
                         status = bytes([_FAILED]) * len(rows)
+                        err = f"{type(exc).__name__}: {exc}"
                         errors = pa.array([err] * len(rows), pa.string())
                     else:
                         mask = _accepted_mask(rows, accepted)
                         status = bytes(_OK if ok else _REJECTED for ok in mask)
                         errors = pa.nulls(len(rows), pa.string())
+                    if task_rate:  # post-batch floor (reference :131-136)
+                        done_at = started + len(rows) / task_rate
+                        time.sleep(max(0.0, done_at - time.monotonic()))
                     out = table.append_column(
                         _STATUS_COL,
                         pa.Array.from_buffers(pa.int8(), len(rows), [None, pa.py_buffer(status)]),

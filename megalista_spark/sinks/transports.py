@@ -20,9 +20,24 @@ google_ads_offline_conversions_uploader.py:154-161).
 from __future__ import annotations
 
 import time
-from typing import Any, Callable
+from typing import Any, Callable, TypeVar
 
 Row = dict[str, Any]
+T = TypeVar("T")
+
+MAX_RETRIES = 3  # reference uploaders/utils.py:27
+
+
+def retry(call: Callable[[], T]) -> T:
+    """``call()`` up to MAX_RETRIES times, sleeping min(0.05 × attempt, 1 s)
+    after each failed attempt (reference uploaders/utils.py:91-104); the
+    last attempt's exception propagates."""
+    for attempt in range(1, MAX_RETRIES):
+        try:
+            return call()
+        except Exception:
+            time.sleep(min(0.05 * attempt, 1.0))
+    return call()
 
 
 class TransportError(RuntimeError):
@@ -30,8 +45,11 @@ class TransportError(RuntimeError):
 
 
 class Transport:
-    """Strategy interface. Subclasses must be picklable (they're shipped to
-    executors inside the upload task's closure)."""
+    """Strategy interface. ``SinkExecutor.run`` pickles the transport once,
+    before it calls ``before_run``, and each upload task gets its own copy
+    of the transport as ``run`` received it: state that ``before_run``
+    builds stays on the driver, and state that ``open``/``send`` build
+    stays in its task. Subclasses must be picklable."""
 
     def send(self, payload: list[Row], context: dict[str, Any]) -> list[Row]:
         raise NotImplementedError
@@ -102,9 +120,8 @@ class ConcurrentSendTransport(Transport):
     rejected-no-retry, raise to retry).
     """
 
-    def __init__(self, max_concurrency: int = 8, max_retries: int = 3):
+    def __init__(self, max_concurrency: int = 8):
         self.max_concurrency = max_concurrency
-        self.max_retries = max_retries
 
     def send_one(self, row: Row, context: dict[str, Any]) -> bool:
         raise NotImplementedError
@@ -113,13 +130,10 @@ class ConcurrentSendTransport(Transport):
         from concurrent.futures import ThreadPoolExecutor
 
         def attempt(row: Row) -> Row | None:
-            for r in range(1, self.max_retries + 1):
-                try:
-                    return row if self.send_one(row, context) else None
-                except Exception:
-                    if r < self.max_retries:
-                        time.sleep(min(0.05 * r, 1.0))
-            return None
+            try:
+                return row if retry(lambda: self.send_one(row, context)) else None
+            except Exception:  # still raising after the retries: rejected
+                return None
 
         with ThreadPoolExecutor(max_workers=self.max_concurrency) as pool:
             results = list(pool.map(attempt, payload))

@@ -93,6 +93,8 @@ FAST_TESTS = frozenset(
         # pipeline / sinks / adapters / config / schema / sources
         "test_e2e_idempotent_run",
         "test_all_accepted",
+        "test_tasks_never_see_before_run_state",
+        "test_prehashed_customer_match_is_not_hashed_again",
         "test_ads_oci_payload_golden",
         "test_sheet_config_only_yes_schedules",
         "test_required_missing_raises",

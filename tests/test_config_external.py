@@ -87,7 +87,7 @@ class EraseRecordingTransport(MockTransport):
 def test_before_run_called_once(spark):
     df = spark.createDataFrame([(i,) for i in range(10)], ["k"])
     t = EraseRecordingTransport()
-    result = SinkExecutor(t, batch_size=2, max_parallelism=4).run(df)
+    result = SinkExecutor(t, batch_size=2).run(df.repartition(4))
     assert result.success.count() == 10
     assert t.erase_calls == 1  # once per run, not per partition/chunk
 

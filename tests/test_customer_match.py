@@ -115,7 +115,7 @@ def test_replace_issues_remove_all_once_per_run(spark):
     df = spark.createDataFrame(
         [(f"he{i}",) for i in range(20)], ["hashed_email"]
     )
-    result = SinkExecutor(t, batch_size=5, max_parallelism=4).run(df)
+    result = SinkExecutor(t, batch_size=5).run(df.repartition(4))
     assert result.success.count() == 20
     remove_alls = [
         c for c in client.calls if c[0] == "add_ops" and c[2] == [{"remove_all": True}]
@@ -127,16 +127,15 @@ def test_replace_issues_remove_all_once_per_run(spark):
 
 
 def test_replace_removal_job_is_driver_owned_and_run_before_sends():
-    # the removal job is created, populated AND run on the driver; the
-    # caches are cleared so the pickled per-partition closures never share
-    # a job resource (a job can only be run once against the real API)
+    # the removal job is created, populated AND run on the driver, so a
+    # partition never shares its job resource (a job can only be run once
+    # against the real API)
     client = FakeAdsClient(existing_lists=["My List"])
     t = make_transport(client, operator="REPLACE")
     t.before_run({})
     kinds = [c[0] for c in client.calls]
     assert kinds == ["get_user_list", "create_job", "add_ops", "run_job"]
     assert client.calls[2][2] == [{"remove_all": True}]
-    assert t._job_cache == {} and t._list_cache == {}
     # a partition send afterwards creates and runs its OWN job
     t.send([{"hashed_email": "x"}], {})
     t.close({})

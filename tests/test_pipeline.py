@@ -247,3 +247,62 @@ def test_each_row_sent_once_and_keys_recorded_once(spark, tmp_path, conversions_
     control = ds.control_table(TransactionalType.GCLID_TIME).read()
     assert sorted(row["gclid"] for row in control.collect()) == sorted(accepted)
     assert len(jobs) <= BRANCH_JOBS, len(jobs)
+
+
+class PiiLogTransport(Transport):
+    """Writes the (hashed_email, hashed_phone_number) of every row it is
+    sent to a new file under ``out_dir``."""
+
+    def __init__(self, out_dir: str):
+        self.out_dir = out_dir
+
+    def send(self, payload, context):
+        with open(os.path.join(self.out_dir, uuid.uuid4().hex), "w") as f:
+            json.dump([[r["hashed_email"], r["hashed_phone_number"]] for r in payload], f)
+        return payload
+
+
+def test_prehashed_customer_match_is_not_hashed_again(spark, tmp_path, conversions_path):
+    """Destination metadata[2] == 'false' marks the rows as already hashed
+    (SURVEY F3): they go out as hash_email/hash_field give them with
+    hashing off; an absent flag still hashes."""
+    from pyspark.sql import functions as F
+
+    from megalista_spark.functions.hashing import hash_email, hash_field
+    from megalista_spark.models.execution import (
+        AccountConfig,
+        Destination,
+        Execution,
+        Source,
+        SourceType,
+    )
+
+    source = Source("conv", SourceType.FILE, ("PARQUET", conversions_path))
+    cm = DestinationType.ADS_CUSTOMER_MATCH_CONTACT_INFO_UPLOAD
+    executions = [
+        Execution(AccountConfig("123"), source, Destination(name, cm, md))
+        for name, md in [("prehashed", ("list", "ADD", "FALSE ")), ("hash", ("list", "ADD"))]
+    ]
+    for e in executions:
+        (tmp_path / e.destination.name).mkdir()
+    r = Pipeline(
+        spark, executions, lambda e: PiiLogTransport(str(tmp_path / e.destination.name))
+    ).run()
+    assert r.exit_code == 0
+
+    src = spark.read.parquet(conversions_path)
+
+    def expected(enabled):
+        return sorted(
+            [row[0], row[1]]
+            for row in src.select(
+                hash_email(F.col("email"), enabled), hash_field(F.col("phone"), enabled)
+            ).collect()
+        )
+
+    def sent(name):
+        return sorted(x for p in (tmp_path / name).iterdir() for x in json.loads(p.read_text()))
+
+    assert sent("prehashed") == expected(False)
+    assert sent("prehashed")[0] == ["u0@x.com", "+55"]
+    assert sent("hash") == expected(True)

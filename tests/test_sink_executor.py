@@ -93,7 +93,7 @@ def test_concurrent_sender_bounds_inflight():
 def test_retry_then_succeed(spark):
     df = spark.createDataFrame([(i,) for i in range(10)], ["k"])
     transport = MockTransport(fail_chunks_until_attempt=2)  # 1st attempt fails
-    result = SinkExecutor(transport, batch_size=100, max_parallelism=1).run(df)
+    result = SinkExecutor(transport, batch_size=100).run(df.repartition(1))
     assert result.success.count() == 10
     assert result.errors.count() == 0
 
@@ -103,9 +103,9 @@ def test_exhausted_retries_isolated(spark):
     df = spark.createDataFrame([(i,) for i in range(10)], ["k"])
     transport = MockTransport(fail_chunks_until_attempt=99)
     result = SinkExecutor(
-        transport, batch_size=100, max_parallelism=1, max_retries=2,
+        transport, batch_size=100,
         context={"destination_type": "TEST"},
-    ).run(df)
+    ).run(df.repartition(1))
     assert result.success.count() == 0
     errs = result.errors.collect()
     assert len(errs) == 10
@@ -213,6 +213,36 @@ def test_rate_budget_holds_when_tasks_outnumber_cores(spark, tmp_path):
     budget = 400.0
     rate = _paced_rate(spark, tmp_path, budget, tasks=2 * slots, rows_per_task=300)
     assert 0.8 * budget <= rate <= budget
+
+
+class _DriverStateProbe(Transport):
+    """``before_run`` sets an attribute on the driver's transport; each
+    chunk writes to a new file under ``out_dir`` whether its task's copy
+    has that attribute."""
+
+    def __init__(self, out_dir):
+        self.out_dir = out_dir
+
+    def before_run(self, context):
+        self.driver_state = "built by before_run"
+
+    def send(self, payload, context):
+        with open(os.path.join(self.out_dir, uuid.uuid4().hex), "w") as f:
+            json.dump(hasattr(self, "driver_state"), f)
+        return payload
+
+
+def test_tasks_never_see_before_run_state(spark, tmp_path):
+    """Each task gets the transport as run() received it: what before_run
+    builds stays on the driver, with no __getstate__ on the transport."""
+    t = _DriverStateProbe(str(tmp_path))
+    df = spark.range(0, 40, 1, numPartitions=4)
+    result = SinkExecutor(t, batch_size=100).run(df)
+    assert (result.rows, result.accepted) == (40, 40)
+    result.release()
+    assert t.driver_state == "built by before_run"
+    seen = [json.loads(p.read_text()) for p in tmp_path.iterdir()]
+    assert seen == [False] * 4
 
 
 class _PickleRecorder(Transport):
