@@ -25,8 +25,8 @@ chunk as row dicts (``RecordBatch.to_pylist``), and the chunk goes back
 as Arrow with a status and an error column appended; row values are never
 rebuilt in Python. Parallelism is bounded by `repartition(n)` before
 calling run() (API quota control), not by driver-side loops. ``run``
-caches the tagged rows and fills the cache with one global aggregate, so
-one action uploads and counts; the success rows and the error records
+caches the tagged rows and fills the cache with one observed no-op write,
+so one job uploads and counts; the success rows and the error records
 are views of that cache, and ``SinkResult.release`` frees it.
 """
 
@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
 from pyspark import cloudpickle
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -175,7 +175,7 @@ def _accepted_mask(chunk: list[dict], accepted: list[dict]) -> list[bool]:
 @dataclass
 class SinkResult:
     """Outcome of one sink run: accepted rows + error records, both views
-    of the cached upload, and the counts the upload action returned."""
+    of the cached upload, and the counts the upload observed."""
 
     success: DataFrame
     errors: DataFrame
@@ -216,8 +216,9 @@ class SinkExecutor:
         return cls(transport, **kw)
 
     def run(self, df: DataFrame) -> SinkResult:
-        """One action: upload, then return (success rows, error records)
-        with the row, accepted and error counts.
+        """One action, an observed no-op write: upload, then return
+        (success rows, error records) with the row, accepted and error
+        counts.
 
         The returned success DataFrame has the input schema; errors carry
         (destination, message). Call ``release()`` when done with both.
@@ -297,18 +298,22 @@ class SinkExecutor:
         try:
             if budget:
                 # plans the cached upload (running any stage before it)
-                # without running it, so the aggregate adds no job. The JVM
+                # without running it, so the write adds no job. The JVM
                 # Dataset.rdd, not DataFrame.rdd: the Python path plans
                 # without the session's SQL conf, and its upload workers
                 # would start as a second Python worker pool
                 partitions = tagged._jdf.rdd().getNumPartitions()
                 sc.setLocalProperty(_UPLOAD_TASKS, str(min(partitions, slots)))
-            # the one action: runs the upload and fills the cache
-            totals = tagged.agg(
-                F.count(F.lit(1)),
-                F.count(F.when(status == _OK, True)),
-                F.collect_list(F.when(status == _FAILED, F.col(_ERROR_COL))),
-            ).first()
+            # the one action: uploads, fills the cache and counts in the
+            # result stage, whose metrics Spark applies once per partition
+            observed = Observation()
+            tagged.observe(
+                observed,
+                F.count(F.lit(1)).alias("rows"),
+                F.count(F.when(status == _OK, True)).alias("accepted"),
+                F.collect_list(F.when(status == _FAILED, F.col(_ERROR_COL))).alias("errors"),
+            ).write.format("noop").mode("overwrite").save()
+            totals = observed.get
         except BaseException:
             tagged.unpersist()
             raise
@@ -319,4 +324,6 @@ class SinkExecutor:
             F.lit(base_context.get("destination_type", "")).alias("destination"),
             F.col(_ERROR_COL).alias("message"),
         )
-        return SinkResult(success, errors, totals[0], totals[1], list(totals[2]), tagged)
+        return SinkResult(
+            success, errors, totals["rows"], totals["accepted"], list(totals["errors"]), tagged
+        )

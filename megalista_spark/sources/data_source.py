@@ -10,8 +10,9 @@ Reference behaviors re-expressed Spark-first:
   (big_query_data_source.py:76-116, file_data_source.py:71-92)
 - control table: append-only (key..., timestamp) with 15-day retention
   applied at READ time (big_query_data_source.py:118-148,
-  file_data_source.py:141-147); missing control table reads as a typed
-  empty frame (file_data_source.py:127-138)
+  file_data_source.py:141-147); missing control table reads as a typed,
+  optimizer-known empty frame (file_data_source.py:127-138); the control
+  side is not deduplicated
 
 At 100 TB: the anti-join's control side is usually small relative to the
 source (only the last 15 days of uploaded keys) — AQE picks a broadcast
@@ -62,16 +63,20 @@ class ControlTable:
 
     def read(self, key_types: dict[str, T.DataType] | None = None) -> DataFrame:
         """Uploaded keys still inside the retention window; missing table →
-        typed empty frame (reference file_data_source.py:127-138).
+        typed, optimizer-known empty frame (reference
+        file_data_source.py:127-138), so an anti-join against it plans away.
+        Read with ``key_types`` (strings when absent), so no schema
+        inference runs; ``dt`` comes from the directory layout.
 
         When the table is date-partitioned (our writer always partitions),
         the retention predicate on ``dt`` prunes whole partitions at plan
         time — at scale only ~15 daily partitions are ever scanned,
         mirroring the reference's BigQuery partition_expiration_days=15.
         """
+        schema = self.schema(key_types)
         if not self._exists():
-            return self.spark.createDataFrame([], self.schema(key_types))
-        df = self.spark.read.parquet(self.path)
+            return self.spark.createDataFrame([], schema).where(F.lit(False))
+        df = self.spark.read.schema(schema).parquet(self.path)
         if "dt" in df.columns:
             df = df.where(
                 F.col("dt") >= F.date_sub(F.current_date(), RETENTION_DAYS)
@@ -156,9 +161,9 @@ class DataSource:
         if schema is not None:
             df = schema.apply(df)
         if transactional_type != TransactionalType.NOT_TRANSACTIONAL:
-            df = anti_join_uploaded(
-                df, self.control_table(transactional_type).read(), transactional_type
-            )
+            key_types = {k: df.schema[k].dataType for k in transactional_type.keys}
+            uploaded = self.control_table(transactional_type).read(key_types)
+            df = anti_join_uploaded(df, uploaded, transactional_type)
         return df
 
     def record_uploaded(
@@ -180,12 +185,11 @@ def anti_join_uploaded(
     big_query_data_source.py:89-100).
 
     Key columns are compared as strings (the reference's control tables
-    store string keys). AQE broadcasts the uploaded side when small.
+    store string keys). AQE broadcasts the uploaded side when small; it is
+    not deduplicated, as duplicates there change no anti-join result.
     """
     keys = list(transactional_type.keys)
-    right = uploaded.select(
-        *[F.col(k).cast("string").alias(k) for k in keys]
-    ).dropDuplicates(keys)
+    right = uploaded.select(*[F.col(k).cast("string").alias(k) for k in keys])
     cond = None
     for k in keys:
         c = df[k].cast("string").eqNullSafe(right[k])

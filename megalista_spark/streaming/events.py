@@ -166,8 +166,9 @@ def stream_sink_foreach_batch(
     on_batch: Callable[[int, int, int], None] | None = None,
 ):
     """Drive the batch SinkExecutor from a stream: each micro-batch is
-    uploaded with the same chunk/retry/partial-failure semantics, and the
-    checkpoint makes replays per-batch idempotent.
+    uploaded with the same chunk/retry/partial-failure semantics. Replays
+    are NOT idempotent: ``epoch_id`` is not used to skip committed epochs,
+    so an epoch replayed after a failure is sent again (ROADMAP item 3).
 
     Returns the started StreamingQuery.
     """

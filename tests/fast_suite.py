@@ -100,6 +100,10 @@ FAST_TESTS = frozenset(
         "test_required_missing_raises",
         "test_read_evolving_parquet_normalizes_mixed_vintages",
         "test_anti_join_single_key",
+        "test_absent_control_table_plans_no_join",
+        "test_duplicate_control_keys_drop_each_row_once",
+        "test_timestamp_key_control_table_dedups",
+        "test_empty_input_counts_zero_and_releases",
         "test_add_flow_creates_missing_list_and_per_identifier_ops",
         # hashing / payloads
         "test_hash_field_golden",

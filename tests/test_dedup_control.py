@@ -7,8 +7,18 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from megalista_spark.models.execution import TransactionalType
-from megalista_spark.sources.data_source import ControlTable, anti_join_uploaded
+from megalista_spark.models.execution import (
+    DestinationType,
+    Source,
+    SourceType,
+    TransactionalType,
+)
+from megalista_spark.schema.registry import get_schema
+from megalista_spark.sources.data_source import (
+    ControlTable,
+    anti_join_uploaded,
+    get_data_source,
+)
 
 
 def test_anti_join_single_key(spark):
@@ -104,3 +114,42 @@ def test_control_table_at_file_uri(spark, tmp_path):
     src = spark.createDataFrame([("a",), ("c",)], ["uuid"])
     kept = anti_join_uploaded(src, ct.read(), TransactionalType.UUID)
     assert [r["uuid"] for r in kept.collect()] == ["c"]
+
+
+def test_absent_control_table_plans_no_join(spark, tmp_path):
+    """With no control table yet the anti-join folds away: the optimized
+    plan of a transactional read is the bare source."""
+    path = str(tmp_path / "fresh.parquet")
+    spark.createDataFrame([("g1", "t1", "1.0")], ["gclid", "time", "amount"]).write.parquet(path)
+    ds = get_data_source(spark, Source("fresh", SourceType.FILE, ("PARQUET", path)))
+    schema = get_schema(DestinationType.ADS_OFFLINE_CONVERSION)
+    df = ds.retrieve_data(schema, schema.transactional_type)
+    assert "Join" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert df.count() == 1
+
+
+def test_duplicate_control_keys_drop_each_row_once(spark, tmp_path):
+    """A control table holding a key twice drops that source row once and
+    duplicates none."""
+    ct = ControlTable(spark, str(tmp_path / "dup_uploaded"), keys=("uuid",))
+    ct.append(spark.createDataFrame([("a",), ("b",)], ["uuid"]))
+    ct.append(spark.createDataFrame([("a",)], ["uuid"]))
+    src = spark.createDataFrame([("a",), ("b",), ("c",), ("c",), ("d",)], ["uuid"])
+    kept = anti_join_uploaded(src, ct.read(), TransactionalType.UUID)
+    assert sorted(r["uuid"] for r in kept.collect()) == ["c", "c", "d"]
+
+
+def test_timestamp_key_control_table_dedups(spark, tmp_path):
+    """A parquet source whose ``time`` key is a timestamp: schema.apply
+    leaves it uncast, the control table stores it as a timestamp, and the
+    next transactional read drops every recorded row."""
+    path = str(tmp_path / "ts.parquet")
+    rows = [(f"g{i}", dt.datetime(2020, 4, 9, 14, 13, i), "1.0") for i in range(5)]
+    spark.createDataFrame(rows, ["gclid", "time", "amount"]).write.parquet(path)
+    ds = get_data_source(spark, Source("ts", SourceType.FILE, ("PARQUET", path)))
+    schema = get_schema(DestinationType.ADS_OFFLINE_CONVERSION)
+    txn = schema.transactional_type
+    first = ds.retrieve_data(schema, txn)
+    assert first.count() == 5
+    ds.record_uploaded(txn, first)
+    assert ds.retrieve_data(schema, txn).count() == 0

@@ -328,3 +328,21 @@ def test_one_rebuilt_copy_of_two_equal_rows_accepts_one(spark):
     assert (result.rows, result.accepted) == (2, 1)
     assert [tuple(r) for r in result.success.collect()] == [("same", 1)]
     result.release()
+
+
+@pytest.mark.parametrize("shape", ["no_partitions", "filtered_out"])
+def test_empty_input_counts_zero_and_releases(spark, shape):
+    """A frame with no partitions and one the optimizer knows is empty both
+    run to zero counts, and release() leaves no persisted RDD behind."""
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    if shape == "no_partitions":
+        df = spark.createDataFrame(sc.emptyRDD(), "k long")
+    else:
+        df = spark.range(10).where(F.lit(False))
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
+    result = SinkExecutor(MockTransport(), batch_size=4).run(df)
+    assert (result.rows, result.accepted, result.error_messages) == (0, 0, [])
+    result.release()
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
