@@ -1797,7 +1797,10 @@ def lsh_candidate_precision(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    sc = df.sparkSession.sparkContext
+    from pyspark import inheritable_thread_target
+
+    spark = df.sparkSession
+    sc = spark.sparkContext
 
     def _build_cand() -> DataFrame:
         sc.setJobDescription("lsh_candidate_precision: band candidates")
@@ -1836,8 +1839,8 @@ def lsh_candidate_precision(
     # (the lsh_banding_curve idiom, guide §2.6); both checkpoints
     # already existed, so this changes scheduling only
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cand = pool.submit(_build_cand)
-        f_shingled = pool.submit(_build_shingled)
+        f_cand = pool.submit(inheritable_thread_target(spark)(_build_cand))
+        f_shingled = pool.submit(inheritable_thread_target(spark)(_build_shingled))
         cand = f_cand.result()
         shingled = f_shingled.result()
     sa = shingled.select(
@@ -1916,7 +1919,10 @@ def lsh_candidate_recall(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    sc = df.sparkSession.sparkContext
+    from pyspark import inheritable_thread_target
+
+    spark = df.sparkSession
+    sc = spark.sparkContext
 
     def _build_truth() -> DataFrame:
         sc.setJobDescription("lsh_candidate_recall: exact ground truth")
@@ -1946,8 +1952,8 @@ def lsh_candidate_recall(
     # (pair-sized, the banding-curve durability class) so the overlap
     # covers their build, not just their plan
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_true = pool.submit(_build_truth)
-        f_cand = pool.submit(_build_cand)
+        f_true = pool.submit(inheritable_thread_target(spark)(_build_truth))
+        f_cand = pool.submit(inheritable_thread_target(spark)(_build_cand))
         true_pairs = f_true.result()
         cand = f_cand.result()
     # ONE pair-sized pass instead of three (semi-join + two separate
@@ -2049,7 +2055,10 @@ def lsh_banding_curve(
             )
     from concurrent.futures import ThreadPoolExecutor
 
-    sc = df.sparkSession.sparkContext
+    from pyspark import inheritable_thread_target
+
+    spark = df.sparkSession
+    sc = spark.sparkContext
 
     def _build_sigs() -> DataFrame:
         sc.setJobDescription("lsh_banding_curve: minhash signatures")
@@ -2071,10 +2080,12 @@ def lsh_banding_curve(
             sc.setJobDescription(None)
 
     # the two corpus-sized inputs are independent — overlap their
-    # checkpoint builds (guide §2.6; job descriptions are thread-local)
+    # checkpoint builds (guide §2.6). Each builder is wrapped in the
+    # calling thread, so its jobs carry the caller's job group and local
+    # properties (cancelJobGroup reaches them) and its own description
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_sigs = pool.submit(_build_sigs)
-        f_true = pool.submit(_build_truth)
+        f_sigs = pool.submit(inheritable_thread_target(spark)(_build_sigs))
+        f_true = pool.submit(inheritable_thread_target(spark)(_build_truth))
         sigs = f_sigs.result()
         true_pairs = f_true.result()
     n_true = true_pairs.count()
@@ -2129,9 +2140,11 @@ def lsh_banding_curve(
     results: dict[int, tuple] = {}
     with ThreadPoolExecutor(max_workers=2) as pool:
         for batch in batches:
-            for i, row in zip(
-                batch, pool.map(lambda i: _fold(bands_options[i]), batch)
-            ):
-                results[i] = row
+            futures = [
+                pool.submit(inheritable_thread_target(spark)(_fold), bands_options[i])
+                for i in batch
+            ]
+            for i, f in zip(batch, futures):
+                results[i] = f.result()
     rows = [results[i] for i in range(len(bands_options))]
     return df.sparkSession.createDataFrame(rows, out_schema)

@@ -7,24 +7,39 @@ upload, control-write) → consolidate summary → exit 1 if any error.
 
 Spark shape:
 - the config plane stays on the driver (it is tiny);
-- each source is READ ONCE and cached across the branches that share it
-  (reference reads per source group; SURVEY §4 "read-once-per-source");
+- each source is READ ONCE, in the calling thread, and cached across the
+  branches that share it (reference reads per source group; SURVEY §4
+  "read-once-per-source"); the cache is released when the source's last
+  branch finishes;
 - each branch is lazy DataFrame work ending in one upload action, which
   returns the branch's row, accepted and error counts; a transactional
   branch then appends its accepted keys from the cached upload, and the
   branch releases that cache;
+- branches run at once on a driver thread pool, as the reference's
+  parallel Beam branches do, except where they share state: branches that
+  share a control table (a transactional branch's source) or a destination
+  (``before_run`` side effects, the rate budget) form one chain and run in
+  config order. Each chain thread inherits the caller's job group and
+  local properties; the FIFO scheduler gives free task slots to later jobs;
 - each branch runs inside a try/except — a failing branch records an
   error and the run continues (reference safe_process error isolation,
   uploaders/utils.py:69-88);
-- the run summary is a driver-side list of per-branch results; exit code 1
+- the run summary is a driver-side list of per-branch results in config
+  order, with one JSON log line per branch and one per run; exit code 1
   if any branch recorded errors (reference main.py:106-121).
 """
 
 from __future__ import annotations
 
+import json
+import logging
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from megalista_spark.functions.hashing import ads_pii_expressions, dv_pii_expressions
@@ -35,6 +50,7 @@ from megalista_spark.models.execution import (
     group_executions_by_source,
 )
 from megalista_spark.schema.registry import (
+    SCHEMAS,
     SchemaValidationError,
     aggregate_custom_variables,
     get_schema,
@@ -42,6 +58,8 @@ from megalista_spark.schema.registry import (
 from megalista_spark.sinks.executor import SinkExecutor
 from megalista_spark.sinks.transports import DryRunTransport, Transport
 from megalista_spark.sources.data_source import get_data_source
+
+_log = logging.getLogger("megalista_spark.run")
 
 # Per-destination-family row transform applied between schema projection
 # and upload (reference: hashing mappers + data treatments).
@@ -68,12 +86,39 @@ def _hash_enabled(execution: Execution) -> bool:
     return len(md) < 3 or str(md[2] or "").strip().lower() != "false"
 
 
+def _chain_keys(execution: Execution) -> set[tuple[str, str]]:
+    """The shared state a branch touches: its destination and, when it is
+    transactional, its source's control table."""
+    keys = {("destination", execution.destination.name)}
+    schema = SCHEMAS.get(execution.destination.destination_type)
+    if schema and schema.transactional_type != TransactionalType.NOT_TRANSACTIONAL:
+        keys.add(("control", execution.source.name))
+    return keys
+
+
+def _chains(keys: dict[int, set[tuple[str, str]]]) -> list[list[int]]:
+    """Branches joined by any shared key, each chain in ascending order and
+    the chains ordered by their first branch."""
+    chain_of: dict[tuple[str, str], int] = {}
+    chains: dict[int, list[int]] = {}
+    for i, ks in keys.items():
+        merged = [i]
+        for c in {chain_of[k] for k in ks if k in chain_of}:
+            merged += chains.pop(c)
+        chains[i] = sorted(merged)
+        for j in merged:
+            for k in keys[j]:
+                chain_of[k] = i
+    return sorted(chains.values())
+
+
 @dataclass
 class BranchResult:
     execution: Execution
     rows_read: int = 0
     rows_uploaded: int = 0
     errors: list[str] = field(default_factory=list)
+    seconds: float = 0.0  # wall time of the branch
 
     @property
     def ok(self) -> bool:
@@ -83,6 +128,7 @@ class BranchResult:
 @dataclass
 class RunResult:
     branches: list[BranchResult]
+    seconds: float = 0.0  # wall time of the run
 
     @property
     def exit_code(self) -> int:
@@ -129,7 +175,10 @@ class Pipeline:
         self.error_notifier = error_notifier
 
     def run(self) -> RunResult:
-        results: list[BranchResult] = []
+        started = time.perf_counter()
+        results: list[BranchResult | None] = []
+        todo: dict[int, tuple[Execution, Any, DataFrame]] = {}  # by results index
+        cached_left: dict[str, int] = {}  # branches yet to finish per cached scan
         for source_name, execs in group_executions_by_source(self.executions).items():
             ds = get_data_source(self.spark, execs[0].source, self.bq_ops_dataset)
             try:
@@ -143,17 +192,53 @@ class Pipeline:
             # read-once-per-source: cache only when >1 branch shares the scan
             if len(execs) > 1:
                 raw = raw.cache()
+                cached_left[source_name] = len(execs)
             for e in execs:
-                results.append(self._run_branch(e, ds, raw))
-            if len(execs) > 1:
-                raw.unpersist()
+                todo[len(results)] = (e, ds, raw)
+                results.append(None)
+
+        lock = threading.Lock()
+        sc = self.spark.sparkContext
+
+        def run_chain(chain: list[int]) -> None:
+            for i in chain:
+                e, ds, raw = todo[i]
+                sc.setJobDescription(f"{e.source.name} → {e.destination.name}")
+                try:
+                    results[i] = self._run_branch(e, ds, raw)
+                finally:
+                    if e.source.name in cached_left:
+                        with lock:
+                            cached_left[e.source.name] -= 1
+                            last = cached_left[e.source.name] == 0
+                        if last:
+                            raw.unpersist()
+
+        chains = _chains({i: _chain_keys(e) for i, (e, _, _) in todo.items()})
+        if chains:
+            with ThreadPoolExecutor(min(len(chains), sc.defaultParallelism)) as pool:
+                # wrapped per chain in this thread, so each chain runs with
+                # its own copy of the caller's job group and local properties
+                futures = [
+                    pool.submit(inheritable_thread_target(self.spark)(run_chain), c)
+                    for c in chains
+                ]
+                for f in futures:
+                    f.result()
+        run = RunResult(results, time.perf_counter() - started)
         failed = [b for b in results if not b.ok]
+        _log.info(json.dumps({
+            "branches": len(run.branches),
+            "failed_branches": len(failed),
+            "seconds": round(run.seconds, 3),
+        }))
         if failed:
             # end-of-run notification (reference GmailNotifier shape)
             self.error_notifier.notify(failed)
-        return RunResult(results)
+        return run
 
     def _run_branch(self, execution: Execution, ds, raw: DataFrame) -> BranchResult:
+        started = time.perf_counter()
         res = BranchResult(execution)
         dtype = execution.destination.destination_type
         try:
@@ -182,6 +267,15 @@ class Pipeline:
             res.errors.append(str(exc))
         except Exception as exc:  # branch isolation (safe_process)
             res.errors.append(f"{type(exc).__name__}: {exc}")
+        res.seconds = time.perf_counter() - started
+        _log.info(json.dumps({
+            "source": execution.source.name,
+            "destination": execution.destination.name,
+            "rows_read": res.rows_read,
+            "rows_uploaded": res.rows_uploaded,
+            "errors": len(res.errors),
+            "seconds": round(res.seconds, 3),
+        }))
         return res
 
 

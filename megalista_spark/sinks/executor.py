@@ -34,7 +34,6 @@ from __future__ import annotations
 
 import pickle
 import time
-from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
@@ -82,16 +81,6 @@ _OK, _REJECTED, _FAILED = 0, 1, 2  # values of the status column
 # local property carrying the number of upload tasks that run at once to
 # the pacer inside each task; it is known only once the upload is planned
 _UPLOAD_TASKS = "megalista.sink.uploadTasks"
-
-
-def _freeze(v: Any) -> Any:
-    """Hashable canonical form of a row dict (nested dicts/lists allowed)
-    for value-level accepted-row matching."""
-    if isinstance(v, dict):
-        return tuple(sorted((k, _freeze(x)) for k, x in v.items()))
-    if isinstance(v, (list, tuple)):
-        return tuple(_freeze(x) for x in v)
-    return v
 
 
 def _row_converter(dtype: T.DataType) -> Callable[[Any], Any] | None:
@@ -152,24 +141,16 @@ def _chunks(batches: Iterator[Any], size: int) -> Iterator[Any]:
 
 
 def _accepted_mask(chunk: list[dict], accepted: list[dict]) -> list[bool]:
-    """Which rows of ``chunk`` the transport accepted: identity fast path
-    (transports that return the same dict objects), with a value-level
-    multiset fallback for transports that return equal-but-reconstructed
-    dicts — the Transport contract only promises "the ACCEPTED row dicts",
-    not the same objects."""
-    chunk_ids = {id(d) for d in chunk}
+    """Which rows of ``chunk`` the transport accepted. ``Transport.send``
+    returns a subset of the dict objects it was sent, so rows match by
+    identity; a dict it was not sent breaks that contract."""
     accepted_ids = {id(d) for d in accepted}
-    rebuilt = Counter(_freeze(d) for d in accepted if id(d) not in chunk_ids)
-    mask = []
-    for d in chunk:
-        ok = id(d) in accepted_ids
-        if not ok and rebuilt:
-            key = _freeze(d)
-            if rebuilt[key] > 0:
-                rebuilt[key] -= 1
-                ok = True
-        mask.append(ok)
-    return mask
+    if not accepted_ids <= {id(d) for d in chunk}:
+        raise ValueError(
+            "Transport.send returned a row dict it was not sent; it must "
+            "return a subset of the dicts in its payload, not copies"
+        )
+    return [id(d) in accepted_ids for d in chunk]
 
 
 @dataclass
@@ -273,13 +254,14 @@ class SinkExecutor:
                     # chunk pays that
                     try:
                         accepted = retry(lambda: transport.send(rows, ctx))
+                        mask = _accepted_mask(rows, accepted)
                     except Exception as exc:  # error isolation: chunk-level
-                        # whole chunk failed after retries → error records
+                        # whole chunk failed after retries, or its reply
+                        # broke the send contract → error records
                         status = bytes([_FAILED]) * len(rows)
                         err = f"{type(exc).__name__}: {exc}"
                         errors = pa.array([err] * len(rows), pa.string())
                     else:
-                        mask = _accepted_mask(rows, accepted)
                         status = bytes(_OK if ok else _REJECTED for ok in mask)
                         errors = pa.nulls(len(rows), pa.string())
                     if task_rate:  # post-batch floor (reference :131-136)

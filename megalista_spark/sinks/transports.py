@@ -11,10 +11,11 @@ exact request payload). Here the transport is an injectable strategy so:
   in ``sinks/adapters.py`` — lazy client-library imports, injectable
   service/HTTP seams, request-golden tests in tests/test_adapters.py
 
-A transport receives one chunk (list of row dicts) and returns the list of
-ACCEPTED row dicts — partial failure is modeled by returning a subset
-(reference success-filter semantics J3,
-google_ads_offline_conversions_uploader.py:154-161).
+A transport receives one chunk (list of row dicts) and returns the
+ACCEPTED ones, the same dict objects it was sent — partial failure is
+modeled by returning a subset (reference success-filter semantics J3,
+google_ads_offline_conversions_uploader.py:154-161). A returned dict it
+was not sent fails its chunk with an error record.
 """
 
 from __future__ import annotations

@@ -95,6 +95,13 @@ FAST_TESTS = frozenset(
         "test_all_accepted",
         "test_tasks_never_see_before_run_state",
         "test_prehashed_customer_match_is_not_hashed_again",
+        "test_chain_rule_joins_shared_control_tables_and_destinations",
+        "test_independent_branches_run_at_once",
+        "test_branches_sharing_a_control_table_run_in_order",
+        "test_branches_sharing_a_destination_run_in_order",
+        "test_run_logs_one_line_per_branch_and_per_run",
+        "test_many_chains_fill_every_result_and_release_every_scan",
+        "test_rebuilt_row_dicts_fail_the_chunk",
         "test_ads_oci_payload_golden",
         "test_sheet_config_only_yes_schedules",
         "test_required_missing_raises",

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 
 import pytest
@@ -307,3 +308,224 @@ def test_prehashed_customer_match_is_not_hashed_again(spark, tmp_path, conversio
     assert sent("prehashed") == expected(False)
     assert sent("prehashed")[0] == ["u0@x.com", "+55"]
     assert sent("hash") == expected(True)
+
+
+def _executions(pairs):
+    """Executions for (source, destination name, destination type) triples,
+    where each source is a ``(name, parquet path)`` pair."""
+    from megalista_spark.models.execution import (
+        AccountConfig,
+        Destination,
+        Execution,
+        Source,
+        SourceType,
+    )
+
+    return [
+        Execution(
+            AccountConfig("123"),
+            Source(src, SourceType.FILE, ("PARQUET", path)),
+            Destination(dest, dtype, ("act",)),
+        )
+        for (src, path), dest, dtype in pairs
+    ]
+
+
+@pytest.fixture()
+def one_partition_source(spark, tmp_path):
+    """The conversions rows in one parquet file, so each branch uploads in
+    one task and branches that run at once hold one task slot each."""
+
+    def make(name):
+        path = str(tmp_path / name)
+        rows = [(f"g{i}", f"2020-04-09T14:13:{i:02d}.000000", str(float(i)), f"u{i}@x.com", "+55")
+                for i in range(20)]
+        spark.createDataFrame(
+            rows, ["gclid", "time", "amount", "email", "phone"]
+        ).coalesce(1).write.parquet(path)
+        return name, path
+
+    return make
+
+
+def test_chain_rule_joins_shared_control_tables_and_destinations():
+    from megalista_spark.pipeline import _chain_keys, _chains
+
+    a, b = ("a", "/a"), ("b", "/b")
+    oci, cm = DestinationType.ADS_OFFLINE_CONVERSION, DestinationType.ADS_CUSTOMER_MATCH_CONTACT_INFO_UPLOAD
+    executions = _executions([
+        (a, "oci1", oci),  # 0: a's control table
+        (a, "cm1", cm),    # 1: alone
+        (a, "oci2", oci),  # 2: a's control table → chained with 0
+        (b, "oci1", oci),  # 3: destination oci1 → chained with 0
+        (b, "cm2", cm),    # 4: alone, although b is in the chain above
+        (b, "cm1", cm),    # 5: destination cm1 → chained with 1
+    ])
+    keys = {i: _chain_keys(e) for i, e in enumerate(executions)}
+    assert _chains(keys) == [[0, 2, 3], [1, 5], [4]]
+
+
+class BarrierTransport(Transport):
+    """On its first send, marks its destination under ``marker_dir`` and
+    waits up to 20 s for ``expect`` markers; raises if they do not all
+    appear, so it passes only when the branches run at once. Then it
+    sleeps ``delay`` seconds and accepts every row."""
+
+    def __init__(self, marker_dir: str, name: str, expect: int, delay: float = 0.0):
+        self.marker_dir, self.name, self.expect, self.delay = marker_dir, name, expect, delay
+        self.met = None
+
+    def send(self, payload, context):
+        if self.met is None:
+            open(os.path.join(self.marker_dir, self.name), "w").close()
+            deadline = time.monotonic() + 20
+            while len(os.listdir(self.marker_dir)) < self.expect and time.monotonic() < deadline:
+                time.sleep(0.05)
+            self.met = len(os.listdir(self.marker_dir)) >= self.expect
+            time.sleep(self.delay)
+        if not self.met:
+            raise TransportError("the branches did not run at once")
+        return payload
+
+
+def test_independent_branches_run_at_once(spark, tmp_path, one_partition_source):
+    """Three branches on distinct non-transactional destinations upload at
+    once; the slowest, first, branch still comes back first."""
+    if spark.sparkContext.defaultParallelism < 3:
+        pytest.skip("needs 3 task slots to run the 3 branches at once")
+    src = one_partition_source("conv")
+    cm = DestinationType.ADS_CUSTOMER_MATCH_CONTACT_INFO_UPLOAD
+    names = ["slow", "b", "c"]
+    markers = tmp_path / "markers"
+    markers.mkdir()
+    before = _persistent_rdds(spark)
+    r = Pipeline(
+        spark,
+        _executions([(src, n, cm) for n in names]),
+        lambda e: BarrierTransport(
+            str(markers), e.destination.name, 3, 1.0 if e.destination.name == "slow" else 0.0
+        ),
+    ).run()
+    assert [b.errors for b in r.branches] == [[], [], []]
+    assert [b.execution.destination.name for b in r.branches] == names
+    assert [b.rows_uploaded for b in r.branches] == [20, 20, 20]
+    assert r.branches[0].seconds > max(b.seconds for b in r.branches[1:])
+    assert _persistent_rdds(spark) == before
+
+
+class IntervalTransport(Transport):
+    """Writes a (start, end) pair of wall times to a new file under
+    ``out_dir`` for ``before_run`` (one instant) and for each chunk, which
+    it holds ``hold`` seconds."""
+
+    def __init__(self, out_dir: str, hold: float = 0.5):
+        self.out_dir, self.hold = out_dir, hold
+
+    def _span(self, start, end):
+        with open(os.path.join(self.out_dir, uuid.uuid4().hex), "w") as f:
+            json.dump([start, end], f)
+
+    def before_run(self, context):
+        now = time.time()
+        self._span(now, now)
+
+    def send(self, payload, context):
+        start = time.time()
+        time.sleep(self.hold)
+        self._span(start, time.time())
+        return payload
+
+
+def _interval(out_dir):
+    spans = [json.loads(p.read_text()) for p in out_dir.iterdir()]
+    return min(s for s, _ in spans), max(e for _, e in spans)
+
+
+def _run_intervals(spark, tmp_path, executions):
+    """Runs ``executions`` with an IntervalTransport per branch; returns the
+    result and each branch's (first start, last end)."""
+    dirs = [tmp_path / f"spans{i}" for i in range(len(executions))]
+    for d in dirs:
+        d.mkdir()
+    transports = {id(e): IntervalTransport(str(d)) for e, d in zip(executions, dirs)}
+    r = Pipeline(spark, executions, lambda e: transports[id(e)]).run()
+    return r, [_interval(d) for d in dirs]
+
+
+def test_branches_sharing_a_control_table_run_in_order(spark, tmp_path, one_partition_source):
+    """Two ADS_OFFLINE_CONVERSION destinations on one source share its
+    control table: the second branch starts after the first ends and sees
+    its append, so it uploads nothing, and each key is recorded once."""
+    src = one_partition_source("conv")
+    oci = DestinationType.ADS_OFFLINE_CONVERSION
+    r, (first, second) = _run_intervals(
+        spark, tmp_path, _executions([(src, "oci1", oci), (src, "oci2", oci)])
+    )
+    assert r.exit_code == 0
+    assert [b.rows_uploaded for b in r.branches] == [20, 0]
+    assert first[1] <= second[0]
+    ds = get_data_source(spark, r.branches[0].execution.source)
+    keys = [row["gclid"] for row in ds.control_table(TransactionalType.GCLID_TIME).read().collect()]
+    assert sorted(keys) == sorted(f"g{i}" for i in range(20))
+
+
+def test_branches_sharing_a_destination_run_in_order(spark, tmp_path, one_partition_source):
+    """One destination fed by two sources: the branches use two control
+    tables but one destination, so they do not overlap."""
+    a, b = one_partition_source("a"), one_partition_source("b")
+    oci = DestinationType.ADS_OFFLINE_CONVERSION
+    r, (first, second) = _run_intervals(
+        spark, tmp_path, _executions([(a, "oci", oci), (b, "oci", oci)])
+    )
+    assert r.exit_code == 0
+    assert [b.rows_uploaded for b in r.branches] == [20, 20]
+    assert first[1] <= second[0]
+
+
+def test_run_logs_one_line_per_branch_and_per_run(spark, tmp_path, conversions_path, caplog):
+    import logging
+
+    cfg = write_config(
+        tmp_path,
+        conversions_path,
+        [
+            {"Enabled": True, "Source": "conv", "Destination": "oci"},
+            {"Enabled": True, "Source": "conv", "Destination": "cm"},
+        ],
+    )
+    caplog.set_level(logging.INFO, logger="megalista_spark.run")
+    factory = lambda e: AlwaysFail() if e.destination.name == "cm" else MockTransport()  # noqa: E731
+    r = run_from_config(spark, cfg, factory)
+    lines = [json.loads(rec.getMessage()) for rec in caplog.records if rec.name == "megalista_spark.run"]
+    branch_lines = sorted((x for x in lines if "destination" in x), key=lambda x: x["destination"])
+    run_lines = [x for x in lines if "destination" not in x]
+    by_name = {b.execution.destination.name: b for b in r.branches}
+    assert [(x["source"], x["destination"], x["rows_read"], x["rows_uploaded"], x["errors"])
+            for x in branch_lines] == [("conv", "cm", 20, 0, 20), ("conv", "oci", 20, 20, 0)]
+    assert len(by_name["cm"].errors) == 20
+    for x in branch_lines:
+        assert x["seconds"] == round(by_name[x["destination"]].seconds, 3) > 0
+    assert run_lines == [{"branches": 2, "failed_branches": 1, "seconds": round(r.seconds, 3)}]
+    assert r.seconds >= max(b.seconds for b in r.branches)
+
+
+def test_many_chains_fill_every_result_and_release_every_scan(spark, tmp_path, one_partition_source):
+    """Nine independent branches over three cached sources on a pool capped
+    at the task slots, with the interpreter switching threads as often as
+    it can: every result lands in its config slot, and a lost update of a
+    source's branches-left count would leave its scan cached."""
+    import sys
+
+    sources = [one_partition_source(f"s{i}") for i in range(3)]
+    cm = DestinationType.ADS_CUSTOMER_MATCH_CONTACT_INFO_UPLOAD
+    executions = _executions([(s, f"{s[0]}-cm{j}", cm) for s in sources for j in range(3)])
+    before = _persistent_rdds(spark)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        r = Pipeline(spark, executions, lambda e: MockTransport()).run()
+    finally:
+        sys.setswitchinterval(interval)
+    assert [b.execution for b in r.branches] == executions
+    assert [b.rows_uploaded for b in r.branches] == [20] * 9
+    assert _persistent_rdds(spark) == before

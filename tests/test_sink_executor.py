@@ -36,19 +36,25 @@ def test_partial_failure_success_filter(spark):
     assert ok == [i for i in range(50) if i % 5 != 0]
 
 
-def test_accepted_rows_matched_by_value_not_identity(spark):
-    # a Transport that returns equal-but-RECONSTRUCTED dicts (the documented
-    # contract only promises "the accepted row dicts") must still mark rows ok
+def test_rebuilt_row_dicts_fail_the_chunk(spark):
+    # Transport.send returns the dict objects it was sent; rebuilt copies
+    # break that contract, so each chunk fails with an error record naming
+    # it instead of its rows counting as rejected
     from megalista_spark.sinks.transports import Transport
 
     class RebuildingTransport(Transport):
         def send(self, payload, context):
             return [dict(r) for r in payload if r["k"] % 5 != 0]
 
-    df = spark.createDataFrame([(i,) for i in range(50)], ["k"])
+    df = spark.createDataFrame([(i,) for i in range(50)], ["k"]).coalesce(1)
     result = SinkExecutor(RebuildingTransport(), batch_size=10).run(df)
-    ok = sorted(r["k"] for r in result.success.collect())
-    assert ok == [i for i in range(50) if i % 5 != 0]
+    assert (result.rows, result.accepted) == (50, 0)
+    assert len(result.error_messages) == 50
+    assert all(
+        m.startswith("ValueError: Transport.send returned a row dict it was not sent")
+        for m in result.error_messages
+    )
+    result.release()
 
 
 def test_concurrent_sender_bounds_inflight():
@@ -318,15 +324,19 @@ def test_chunks_span_arrow_batches(spark, tmp_path):
     assert ids == list(range(45))
 
 
-def test_one_rebuilt_copy_of_two_equal_rows_accepts_one(spark):
+def test_rebuilt_copy_of_equal_rows_fails_the_chunk(spark):
+    # a copy of one of two equal rows matches neither: the chunk fails with
+    # the contract error and no row is accepted
     class OneCopy(Transport):
         def send(self, payload, context):
             return [dict(payload[0])]
 
     df = spark.createDataFrame([("same", 1), ("same", 1)], ["k", "v"]).coalesce(1)
     result = SinkExecutor(OneCopy(), batch_size=10).run(df)
-    assert (result.rows, result.accepted) == (2, 1)
-    assert [tuple(r) for r in result.success.collect()] == [("same", 1)]
+    assert (result.rows, result.accepted) == (2, 0)
+    assert result.success.count() == 0
+    assert len(result.error_messages) == 2
+    assert "not sent" in result.error_messages[0]
     result.release()
 
 
