@@ -9,7 +9,7 @@ A ground-up rebuild of the capabilities of google/megalista (reference at
   (reference: data_sources/big_query/big_query_data_source.py:76-116)
 - PII hashing / normalization as native Spark SQL expressions
   (reference: mappers/abstract_list_pii_hashing_mapper.py)
-- chunked, retrying, rate-limited sink executor over foreachPartition
+- chunked, retrying, rate-limited sink executor in one ``mapInArrow`` pass
   (reference: uploaders/*)
 - plus large-scale training-data-pipeline operators (dedup, similarity
   search, text analysis) designed for 100 TB scale.

@@ -28,12 +28,20 @@ calling run() (API quota control), not by driver-side loops. ``run``
 caches the tagged rows and fills the cache with one observed no-op write,
 so one job uploads and counts; the success rows and the error records
 are views of that cache, and ``SinkResult.release`` frees it.
+
+``upload`` first installs ``_StampedZipImporter`` in its worker: pyspark
+calls ``importlib.invalidate_caches()`` before every task, and a plain
+zipimporter answers by re-reading its whole archive (pyspark.zip, the
+spark-core jar) although neither changes while the worker lives.
 """
 
 from __future__ import annotations
 
+import os
 import pickle
+import sys
 import time
+import zipimport
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
@@ -119,6 +127,37 @@ def _field_converters(schema: T.StructType) -> list[tuple[str, Callable[[Any], A
     return [(f.name, c) for f in schema.fields if (c := _row_converter(f.dataType))]
 
 
+class _StampedZipImporter(zipimport.zipimporter):
+    """A zipimporter whose ``invalidate_caches`` re-reads the archive's
+    directory only when the archive's (mtime, size) differs from its last
+    re-read, or cannot be stat'ed. Its first invalidation always re-reads,
+    so a directory cached before the stamp was taken is never kept."""
+
+    _stamp: tuple[int, int] | None = None
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != self._stamp:
+            super().invalidate_caches()
+            self._stamp = stamp
+
+
+def _install_stamped_zipimporter() -> None:
+    """Idempotent. New zip entries on ``sys.path`` get the subclass through
+    the path hook; the zipimporters already cached switch class in place,
+    so the modules they loaded keep the loader that is invalidated."""
+    hooks = sys.path_hooks
+    if zipimport.zipimporter in hooks:
+        hooks[hooks.index(zipimport.zipimporter)] = _StampedZipImporter
+    for finder in sys.path_importer_cache.values():
+        if type(finder) is zipimport.zipimporter:
+            finder.__class__ = _StampedZipImporter
+
+
 def _chunks(batches: Iterator[Any], size: int) -> Iterator[Any]:
     """Arrow tables of ``size`` rows (the last one shorter), cut across the
     boundaries of the incoming record batches."""
@@ -202,7 +241,8 @@ class SinkExecutor:
         counts.
 
         The returned success DataFrame has the input schema; errors carry
-        (destination, message). Call ``release()`` when done with both.
+        (destination, message), one record per failed chunk. Call
+        ``release()`` when done with both.
         """
         # the tasks get the transport as run() received it: pickled before
         # before_run, so what before_run builds stays on the driver
@@ -226,6 +266,7 @@ class SinkExecutor:
         )
 
         def upload(batches: Iterator[Any]) -> Iterator[Any]:
+            _install_stamped_zipimporter()
             import pyarrow as pa
             from pyspark import TaskContext
 
@@ -257,10 +298,14 @@ class SinkExecutor:
                         mask = _accepted_mask(rows, accepted)
                     except Exception as exc:  # error isolation: chunk-level
                         # whole chunk failed after retries, or its reply
-                        # broke the send contract → error records
+                        # broke the send contract → one error record, on
+                        # the chunk's first row
                         status = bytes([_FAILED]) * len(rows)
-                        err = f"{type(exc).__name__}: {exc}"
-                        errors = pa.array([err] * len(rows), pa.string())
+                        err = (
+                            f"{type(exc).__name__}: {exc} (partition "
+                            f"{ctx['partition_id']}, chunk {chunk_index}, {len(rows)} rows)"
+                        )
+                        errors = pa.array([err] + [None] * (len(rows) - 1), pa.string())
                     else:
                         status = bytes(_OK if ok else _REJECTED for ok in mask)
                         errors = pa.nulls(len(rows), pa.string())
@@ -293,7 +338,7 @@ class SinkExecutor:
                 observed,
                 F.count(F.lit(1)).alias("rows"),
                 F.count(F.when(status == _OK, True)).alias("accepted"),
-                F.collect_list(F.when(status == _FAILED, F.col(_ERROR_COL))).alias("errors"),
+                F.collect_list(_ERROR_COL).alias("errors"),
             ).write.format("noop").mode("overwrite").save()
             totals = observed.get
         except BaseException:
@@ -302,7 +347,7 @@ class SinkExecutor:
         finally:
             sc.setLocalProperty(_UPLOAD_TASKS, None)
         success = tagged.where(status == _OK).drop(_STATUS_COL, _ERROR_COL)
-        errors = tagged.where(status == _FAILED).select(
+        errors = tagged.where(F.col(_ERROR_COL).isNotNull()).select(
             F.lit(base_context.get("destination_type", "")).alias("destination"),
             F.col(_ERROR_COL).alias("message"),
         )

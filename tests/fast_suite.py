@@ -102,6 +102,8 @@ FAST_TESTS = frozenset(
         "test_run_logs_one_line_per_branch_and_per_run",
         "test_many_chains_fill_every_result_and_release_every_scan",
         "test_rebuilt_row_dicts_fail_the_chunk",
+        "test_stamped_zipimporter_rereads_only_a_changed_archive",
+        "test_reused_upload_worker_rereads_no_zip_directory",
         "test_ads_oci_payload_golden",
         "test_sheet_config_only_yes_schedules",
         "test_required_missing_raises",

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 import uuid
 
@@ -500,9 +501,13 @@ def test_run_logs_one_line_per_branch_and_per_run(spark, tmp_path, conversions_p
     branch_lines = sorted((x for x in lines if "destination" in x), key=lambda x: x["destination"])
     run_lines = [x for x in lines if "destination" not in x]
     by_name = {b.execution.destination.name: b for b in r.branches}
+    cm_errors = by_name["cm"].errors
     assert [(x["source"], x["destination"], x["rows_read"], x["rows_uploaded"], x["errors"])
-            for x in branch_lines] == [("conv", "cm", 20, 0, 20), ("conv", "oci", 20, 20, 0)]
-    assert len(by_name["cm"].errors) == 20
+            for x in branch_lines] == [("conv", "cm", 20, 0, len(cm_errors)), ("conv", "oci", 20, 20, 0)]
+    # one error record per failed chunk, naming its partition and row count
+    chunks = [re.search(r"\(partition (\d+), chunk 1, (\d+) rows\)$", m).groups() for m in cm_errors]
+    assert len({p for p, _ in chunks}) == len(chunks)
+    assert sum(int(n) for _, n in chunks) == 20
     for x in branch_lines:
         assert x["seconds"] == round(by_name[x["destination"]].seconds, 3) > 0
     assert run_lines == [{"branches": 2, "failed_branches": 1, "seconds": round(r.seconds, 3)}]

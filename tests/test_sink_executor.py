@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import pickle
@@ -49,7 +50,7 @@ def test_rebuilt_row_dicts_fail_the_chunk(spark):
     df = spark.createDataFrame([(i,) for i in range(50)], ["k"]).coalesce(1)
     result = SinkExecutor(RebuildingTransport(), batch_size=10).run(df)
     assert (result.rows, result.accepted) == (50, 0)
-    assert len(result.error_messages) == 50
+    assert len(result.error_messages) == 5  # one per failed chunk
     assert all(
         m.startswith("ValueError: Transport.send returned a row dict it was not sent")
         for m in result.error_messages
@@ -114,8 +115,9 @@ def test_exhausted_retries_isolated(spark):
     ).run(df.repartition(1))
     assert result.success.count() == 0
     errs = result.errors.collect()
-    assert len(errs) == 10
+    assert len(errs) == 1  # one record per failed chunk, naming it
     assert "injected failure" in errs[0]["message"]
+    assert errs[0]["message"].endswith("(partition 0, chunk 1, 10 rows)")
 
 
 def test_batch_sizes_parity():
@@ -335,7 +337,7 @@ def test_rebuilt_copy_of_equal_rows_fails_the_chunk(spark):
     result = SinkExecutor(OneCopy(), batch_size=10).run(df)
     assert (result.rows, result.accepted) == (2, 0)
     assert result.success.count() == 0
-    assert len(result.error_messages) == 2
+    assert len(result.error_messages) == 1
     assert "not sent" in result.error_messages[0]
     result.release()
 
@@ -356,3 +358,127 @@ def test_empty_input_counts_zero_and_releases(spark, shape):
     assert (result.rows, result.accepted, result.error_messages) == (0, 0, [])
     result.release()
     assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+
+
+@contextlib.contextmanager
+def _counting_zip_reads():
+    """Yields the list of archives whose zip directory is read while the
+    block runs (calls to ``zipimport._read_directory``)."""
+    import zipimport
+
+    reads: list[str] = []
+    real = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return real(archive)
+
+    zipimport._read_directory = counting
+    try:
+        yield reads
+    finally:
+        zipimport._read_directory = real
+
+
+def test_stamped_zipimporter_rereads_only_a_changed_archive(tmp_path):
+    """Installed over an importer that has already imported from a zip,
+    the stamped zipimporter makes ``importlib.invalidate_caches()`` skip
+    the unchanged archive, and re-reads it once it is rewritten."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from megalista_spark.sinks.executor import (
+        _install_stamped_zipimporter,
+        _StampedZipImporter,
+    )
+
+    archive = str(tmp_path / "stamped.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("stamped_one.py", "X = 1\n")
+    saved_path, saved_hooks = list(sys.path), list(sys.path_hooks)
+    saved_cache = dict(sys.path_importer_cache)
+    try:
+        sys.path.insert(0, archive)
+        assert importlib.import_module("stamped_one").X == 1
+        _install_stamped_zipimporter()
+        _install_stamped_zipimporter()  # idempotent
+        assert sys.path_hooks.count(_StampedZipImporter) == 1
+        assert zipimport.zipimporter not in sys.path_hooks
+        assert type(sys.path_importer_cache[archive]) is _StampedZipImporter
+        importlib.invalidate_caches()  # an importer's first one re-reads
+        with _counting_zip_reads() as reads:
+            importlib.invalidate_caches()
+        assert reads == []
+
+        stat = os.stat(archive)
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("stamped_one.py", "X = 1\n")
+            z.writestr("stamped_two.py", "Y = 2\n")
+        # a later mtime even where the file system's clock is coarse
+        os.utime(archive, ns=(stat.st_atime_ns, stat.st_mtime_ns + 10**9))
+        assert os.stat(archive).st_size != stat.st_size
+        with _counting_zip_reads() as reads:
+            importlib.invalidate_caches()
+        assert reads == [archive]
+        assert importlib.import_module("stamped_two").Y == 2
+    finally:
+        for finder in sys.path_importer_cache.values():
+            if type(finder) is _StampedZipImporter:
+                finder.__class__ = zipimport.zipimporter
+        sys.path[:] = saved_path
+        sys.path_hooks[:] = saved_hooks
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
+        sys.modules.pop("stamped_one", None)
+        sys.modules.pop("stamped_two", None)
+
+
+class _ZipRereadProbe(Transport):
+    """Accepts every row and writes, for its worker process, whether the
+    stamped zipimporter hook is installed and how many zip directories
+    ``importlib.invalidate_caches()`` re-reads."""
+
+    def __init__(self, out_dir):
+        self.out_dir = out_dir
+
+    def send(self, payload, context):
+        import importlib
+        import sys
+
+        from megalista_spark.sinks.executor import _StampedZipImporter
+
+        with _counting_zip_reads() as reads:
+            importlib.invalidate_caches()
+        record = {
+            "pid": os.getpid(),
+            "hooked": _StampedZipImporter in sys.path_hooks,
+            "reads": len(reads),
+        }
+        with open(os.path.join(self.out_dir, uuid.uuid4().hex), "w") as f:
+            json.dump(record, f)
+        return payload
+
+
+def test_reused_upload_worker_rereads_no_zip_directory(spark, tmp_path):
+    """In the upload tasks the hook is installed, and a task on a worker
+    that has run an upload before re-reads no zip directory. One-task
+    uploads run until one lands on a worker seen before; idle workers are
+    handed out in turn, so that takes at most one more run than there are
+    idle workers."""
+    df = spark.range(0, 4, 1, numPartitions=1)
+    seen: dict[int, list[int]] = {}
+    for _ in range(4 * spark.sparkContext.defaultParallelism + 2):
+        out = tmp_path / uuid.uuid4().hex
+        out.mkdir()
+        result = SinkExecutor(_ZipRereadProbe(str(out)), batch_size=4).run(df)
+        assert (result.rows, result.accepted) == (4, 4)
+        result.release()
+        [record] = [json.loads(p.read_text()) for p in out.iterdir()]
+        assert record["hooked"]
+        seen.setdefault(record["pid"], []).append(record["reads"])
+        if len(seen[record["pid"]]) > 1:
+            break
+    repeats = [counts[1:] for counts in seen.values() if len(counts) > 1]
+    assert repeats == [[0]], seen
