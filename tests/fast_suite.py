@@ -114,6 +114,15 @@ FAST_TESTS = frozenset(
         "test_timestamp_key_control_table_dedups",
         "test_empty_input_counts_zero_and_releases",
         "test_add_flow_creates_missing_list_and_per_identifier_ops",
+        # session: driver JVM start-up (no JVM)
+        "test_cpus_counts_the_affinity_mask",
+        "test_merged_java_options_keep_the_callers_tokens",
+        "test_conf_dir_with_a_non_template_file_gives_a_plain_start",
+        "test_archive_key_follows_jar_mtime_and_jvm_options",
+        "test_live_session_gets_no_archive_work",
+        "test_partial_of_a_dead_writer_is_neither_published_nor_used",
+        "test_failed_dump_is_not_retried",
+        "test_cache_keeps_one_archive_per_key",
         # hashing / payloads
         "test_hash_field_golden",
         "test_ads_pii_shaping",
