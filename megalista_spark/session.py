@@ -230,13 +230,13 @@ def _publish_on_exit(proc: subprocess.Popen, launch: _Launch) -> None:
 def _start(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession:
     """getOrCreate, launching the driver JVM with its archive flags when
     this call launches it."""
-    caller_options = conf.get("spark.driver.extraJavaOptions", "")
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return builder.getOrCreate()
     try:
         launch = _plan_launch(conf)
     except (OSError, ValueError):  # a cache or option problem never fails a start
         launch = _Launch()
+    caller_options = conf.get("spark.driver.extraJavaOptions", "")
     options = " ".join(o for o in (caller_options, _LOG_TO_STDERR, launch.flag) if o)
     builder = builder.config("spark.driver.extraJavaOptions", options)
     saved_conf_dir = os.environ.get("SPARK_CONF_DIR")

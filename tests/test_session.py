@@ -46,10 +46,6 @@ def _conf(**extra):
     return {"spark.driver.memory": "8g", **extra}
 
 
-def _cache():
-    return session._cache_dir()
-
-
 class _FakeBuilder:
     """Records its conf and the SPARK_CONF_DIR that getOrCreate sees, and
     puts up ``gateway`` as the launched one."""
@@ -101,10 +97,11 @@ def test_merged_java_options_keep_the_callers_tokens(home, monkeypatch):
     options = builder.conf["spark.driver.extraJavaOptions"].split()
     assert options[:4] == caller.split()
     assert "-Xlog:all=warning:stderr" in options
-    partial = os.path.join(_cache(), f"{session._archive_key(conf, str(home))}.{os.getpid()}.part")
+    key = session._archive_key(conf, str(home))
+    partial = os.path.join(session._cache_dir(), f"{key}.{os.getpid()}.part")
     assert f"-XX:ArchiveClassesAtExit={partial}" in options
     # the empty conf directory for the launch only
-    assert builder.conf_dir_at_launch == os.path.join(_cache(), "conf")
+    assert builder.conf_dir_at_launch == os.path.join(session._cache_dir(), "conf")
     assert "SPARK_CONF_DIR" not in os.environ
     assert [(proc, launch.partial) for _, proc, launch in registered] == [(jvm, partial)]
     # the JVM exits while this process lives on: its dump is published then
@@ -163,14 +160,14 @@ def test_live_session_gets_no_archive_work(home, monkeypatch):
     builder = _FakeBuilder(conf)
     session._start(builder, conf)
     assert builder.conf["spark.driver.extraJavaOptions"] == "-Dkeep=1"
-    assert not os.path.exists(_cache())
+    assert not os.path.exists(session._cache_dir())
 
 
 def test_partial_of_a_dead_writer_is_neither_published_nor_used(home):
     key = session._archive_key(_conf(), str(home))
     session._plan_launch(_conf())  # creates the cache
-    dead = os.path.join(_cache(), f"{key}.{_dead_pid()}.part")
-    live = os.path.join(_cache(), f"{key}.{os.getppid()}.part")
+    dead = os.path.join(session._cache_dir(), f"{key}.{_dead_pid()}.part")
+    live = os.path.join(session._cache_dir(), f"{key}.{os.getppid()}.part")
     for path in (dead, live):
         with open(path, "wb") as f:
             f.write(b"half an archive")
@@ -212,7 +209,8 @@ def test_cache_keeps_one_archive_per_key(home):
     open(stale, "w").close()
     used = session._plan_launch(_conf())
     assert used.flag == f"-XX:SharedArchiveFile={first.archive}" and used.partial is None
-    assert sorted(os.listdir(_cache())) == sorted(["conf", os.path.basename(first.archive)])
+    left = sorted(os.listdir(session._cache_dir()))
+    assert left == sorted(["conf", os.path.basename(first.archive)])
 
 
 _MAPPED = """
