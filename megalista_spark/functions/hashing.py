@@ -17,6 +17,9 @@ in tests/test_hashing.py.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -100,10 +103,6 @@ _ADDRESS_FIELDS = (
 )
 
 
-def _present(df_cols: list[str], name: str) -> bool:
-    return name in df_cols
-
-
 def _data_present(col: Column) -> Column:
     """Reference _is_data_present (abstract_list_pii_hashing_mapper.py:50-51):
     present ⇔ not NULL and not empty string (raw value — NOT trimmed;
@@ -114,6 +113,21 @@ def _data_present(col: Column) -> Column:
 def _hash_if_present(col: Column, hash_enabled: bool, email: bool = False) -> Column:
     expr = hash_email(col, hash_enabled) if email else hash_field(col, hash_enabled)
     return F.when(_data_present(col), expr)
+
+
+def _shaped(df: DataFrame, shaped: dict[str, Column], consumed: set[str]) -> DataFrame:
+    """``df`` with each ``shaped`` column set as ``withColumn`` sets it (in
+    place when the name exists, else appended, in order) and the
+    ``consumed`` columns dropped, as one select. Rows where every output
+    column is NULL are dropped (the reference's ``if element`` filter on
+    the shaped dict, abstract_list_pii_hashing_mapper.py:77-81)."""
+    names = [c for c in df.columns if c not in consumed]
+    names += [c for c in shaped if c not in names]
+    quoted = {c: F.col("`" + c.replace("`", "``") + "`") for c in names}
+    out = df.select(*[shaped[c].alias(c) if c in shaped else quoted[c] for c in names])
+    if not names:
+        return out
+    return out.where(reduce(operator.or_, [quoted[c].isNotNull() for c in names]))
 
 
 def ads_pii_expressions(
@@ -133,56 +147,45 @@ def ads_pii_expressions(
       (ads_user_list_pii_hashing_mapper.py:42-58)
     - mobile_device_id → mobile_id (NOT hashed; empty ≡ absent)
     - user_id → third_party_user_id (hashed)
-    Non-PII columns pass through untouched. Rows where every output column
-    is NULL are dropped (the reference's ``if element`` filter on the
-    shaped dict, abstract_list_pii_hashing_mapper.py:77-81).
+    Non-PII columns pass through untouched; the shaped columns follow them.
+    Rows where every output column is NULL are dropped.
     """
     cols = df.columns
-    out = df
-    if _present(cols, "email"):
-        out = out.withColumn(
-            "hashed_email", _hash_if_present(F.col("email"), hash_enabled, email=True)
-        ).drop("email")
-    if _present(cols, "phone"):
-        out = out.withColumn(
-            "hashed_phone_number", _hash_if_present(F.col("phone"), hash_enabled)
-        ).drop("phone")
+    shaped: dict[str, Column] = {}
+    consumed: set[str] = set()
+    if "email" in cols:
+        shaped["hashed_email"] = _hash_if_present(F.col("email"), hash_enabled, email=True)
+        consumed.add("email")
+    if "phone" in cols:
+        shaped["hashed_phone_number"] = _hash_if_present(F.col("phone"), hash_enabled)
+        consumed.add("phone")
     first, last, country, zipc = address_fields
-    if all(_present(cols, c) for c in address_fields):
+    if all(c in cols for c in address_fields):
         all_present = (
             _data_present(F.col(first))
             & _data_present(F.col(last))
             & _data_present(F.col(country))
             & _data_present(F.col(zipc))
         )
-        out = out.withColumn(
-            "address_info",
-            F.when(
-                all_present,
-                F.struct(
-                    hash_field(F.col(first), hash_enabled).alias("hashed_first_name"),
-                    hash_field(F.col(last), hash_enabled).alias("hashed_last_name"),
-                    F.col(country).alias("country_code"),
-                    F.col(zipc).alias("postal_code"),
-                ),
+        shaped["address_info"] = F.when(
+            all_present,
+            F.struct(
+                hash_field(F.col(first), hash_enabled).alias("hashed_first_name"),
+                hash_field(F.col(last), hash_enabled).alias("hashed_last_name"),
+                F.col(country).alias("country_code"),
+                F.col(zipc).alias("postal_code"),
             ),
-        ).drop(*address_fields)
-    if _present(cols, "mobile_device_id"):
-        out = out.withColumn(
-            "mobile_id", F.when(_data_present(F.col("mobile_device_id")), F.col("mobile_device_id"))
-        ).drop("mobile_device_id")
-    if _present(cols, "user_id"):
-        out = out.withColumn(
-            "third_party_user_id", _hash_if_present(F.col("user_id"), hash_enabled)
-        ).drop("user_id")
-    # drop rows that shaped to nothing at all
-    any_value = None
-    for c in out.columns:
-        cond = F.col(c).isNotNull()
-        any_value = cond if any_value is None else (any_value | cond)
-    if any_value is not None:
-        out = out.where(any_value)
-    return out
+        )
+        consumed.update(address_fields)
+    if "mobile_device_id" in cols:
+        shaped["mobile_id"] = F.when(
+            _data_present(F.col("mobile_device_id")), F.col("mobile_device_id")
+        )
+        consumed.add("mobile_device_id")
+    if "user_id" in cols:
+        shaped["third_party_user_id"] = _hash_if_present(F.col("user_id"), hash_enabled)
+        consumed.add("user_id")
+    return _shaped(df, shaped, consumed)
 
 
 def dv_pii_expressions(df: DataFrame, hash_enabled: bool = True) -> DataFrame:
@@ -198,15 +201,14 @@ def dv_pii_expressions(df: DataFrame, hash_enabled: bool = True) -> DataFrame:
     either (prefer unsuffixed).
     """
     cols = df.columns
-    out = df
+    shaped: dict[str, Column] = {}
+    consumed: set[str] = set()
     if "email" in cols:
-        out = out.withColumn(
-            "hashedEmails", _hash_if_present(F.col("email"), hash_enabled, email=True)
-        ).drop("email")
+        shaped["hashedEmails"] = _hash_if_present(F.col("email"), hash_enabled, email=True)
+        consumed.add("email")
     if "phone" in cols:
-        out = out.withColumn(
-            "hashedPhoneNumbers", _hash_if_present(F.col("phone"), hash_enabled)
-        ).drop("phone")
+        shaped["hashedPhoneNumbers"] = _hash_if_present(F.col("phone"), hash_enabled)
+        consumed.add("phone")
     first, last = "mailing_address_first_name", "mailing_address_last_name"
     country = "mailing_address_country" if "mailing_address_country" in cols else "mailing_address_country_name"
     zipc = "mailing_address_zip" if "mailing_address_zip" in cols else "mailing_address_zip_name"
@@ -217,28 +219,14 @@ def dv_pii_expressions(df: DataFrame, hash_enabled: bool = True) -> DataFrame:
             & _data_present(F.col(country))
             & _data_present(F.col(zipc))
         )
-        out = (
-            out.withColumn(
-                "hashedFirstName",
-                F.when(all_present, hash_field(F.col(first), hash_enabled)),
-            )
-            .withColumn(
-                "hashedLastName",
-                F.when(all_present, hash_field(F.col(last), hash_enabled)),
-            )
-            .withColumn("countryCode", F.when(all_present, F.col(country)))
-            .withColumn("zipCodes", F.when(all_present, F.col(zipc)))
-            .drop(first, last, country, zipc)
-        )
+        shaped["hashedFirstName"] = F.when(all_present, hash_field(F.col(first), hash_enabled))
+        shaped["hashedLastName"] = F.when(all_present, hash_field(F.col(last), hash_enabled))
+        shaped["countryCode"] = F.when(all_present, F.col(country))
+        shaped["zipCodes"] = F.when(all_present, F.col(zipc))
+        consumed.update((first, last, country, zipc))
     if "mobile_device_id" in cols:
-        out = out.withColumn(
-            "mobileDeviceIds",
-            F.when(_data_present(F.col("mobile_device_id")), F.col("mobile_device_id")),
-        ).drop("mobile_device_id")
-    any_value = None
-    for c in out.columns:
-        cond = F.col(c).isNotNull()
-        any_value = cond if any_value is None else (any_value | cond)
-    if any_value is not None:
-        out = out.where(any_value)
-    return out
+        shaped["mobileDeviceIds"] = F.when(
+            _data_present(F.col("mobile_device_id")), F.col("mobile_device_id")
+        )
+        consumed.add("mobile_device_id")
+    return _shaped(df, shaped, consumed)

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from megalista_spark.zip_imports import install_stamped_zipimporter
+
 
 def zscore_by_group(
     df: DataFrame,
@@ -47,6 +49,7 @@ def zscore_by_group(
     )
 
     def kernel(pdf):
+        install_stamped_zipimporter()
         import numpy as np
 
         x = pdf[value_col].to_numpy(dtype=np.int64)

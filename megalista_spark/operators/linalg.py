@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from megalista_spark.zip_imports import install_stamped_zipimporter
+
 
 def embedding_covariance(
     df: DataFrame,
@@ -69,6 +71,7 @@ def embedding_covariance(
     import numpy as np
 
     def partial_gram(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stamped_zipimporter()
         gram = np.zeros((d, d), dtype=np.int64)
         sums = np.zeros(d, dtype=np.int64)
         n = 0

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from megalista_spark.zip_imports import install_stamped_zipimporter
+
 
 # ------------------------------------------------- pure-Python codecs
 
@@ -281,6 +283,7 @@ def extract_image_features(
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stamped_zipimporter()
         decode = (
             (lambda b: _fake_decode_features(b, dim))
             if decode_stub
@@ -326,6 +329,7 @@ def sample_video_frames(
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stamped_zipimporter()
         for pdf in batches:
             if not decode_stub:
                 raise NotImplementedError("video codec not available in this environment")
@@ -387,6 +391,7 @@ def resize_images(
     partition byte size, not the operator."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stamped_zipimporter()
         tag = f"|{width}x{height}".encode()
         for pdf in batches:
             if not decode_stub:
@@ -433,6 +438,7 @@ def extract_audio_features(
     sampler."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_stamped_zipimporter()
         for pdf in batches:
             ids, idxs, energies = [], [], []
             for media_id, content in zip(pdf["media_id"], pdf["content"]):

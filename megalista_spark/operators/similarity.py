@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from megalista_spark.zip_imports import install_stamped_zipimporter
+
 _D38 = "decimal(38,0)"
 
 
@@ -520,6 +522,7 @@ def embedding_lsh_near_dup_pairs(
     )
 
     def signatures(batches):
+        install_stamped_zipimporter()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -555,6 +558,7 @@ def embedding_lsh_near_dup_pairs(
     )
 
     def bucket_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        install_stamped_zipimporter()
         n = len(pdf)
         empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []}).astype(
             {"id_a": "int64", "id_b": "int64", "cos_sim": "float64"}
@@ -1171,6 +1175,7 @@ def cosine_topk_gemm(
     )
 
     def kernel(batches):
+        install_stamped_zipimporter()
         import pandas as pd
 
         for pdf in batches:
@@ -1251,6 +1256,7 @@ def embedding_near_dup_pairs_gemm(
     )
 
     def kernel(batches):
+        install_stamped_zipimporter()
         import pandas as pd
 
         for pdf in batches:
@@ -1329,6 +1335,7 @@ def embedding_near_dup_pairs_blocked(
     )
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        install_stamped_zipimporter()
         a = pdf[pdf["side"] == 0]
         b = pdf[pdf["side"] == 1]
         if a.empty or b.empty:

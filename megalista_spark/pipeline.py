@@ -12,9 +12,11 @@ Spark shape:
   "read-once-per-source"); the cache is released when the source's last
   branch finishes;
 - each branch is lazy DataFrame work ending in one upload action, which
-  returns the branch's row, accepted and error counts; a transactional
-  branch then appends its accepted keys from the cached upload, and the
-  branch releases that cache;
+  returns the branch's row, accepted and error counts. In a transactional
+  branch the upload tasks also stage the keys they got accepted under the
+  control table, and the driver then commits the winning task attempts'
+  files by rename (``DataSource.record_uploaded``), so the branch runs no
+  second Spark job; the branch then releases the upload's cache;
 - branches run at once on a driver thread pool, as the reference's
   parallel Beam branches do, except where they share state: branches that
   share a control table (a transactional branch's source) or a destination
@@ -244,6 +246,9 @@ class Pipeline:
         try:
             schema = get_schema(dtype)
             txn = schema.transactional_type
+            # first: a control table pyarrow cannot open fails the branch
+            # before anything is read or sent
+            staging = ds.key_staging(txn)
             df = ds.retrieve_data(schema, txn, raw)
             transform = _TRANSFORMS.get(dtype)
             if transform in _PII_TRANSFORMS:
@@ -253,14 +258,14 @@ class Pipeline:
             sink = SinkExecutor.for_destination(
                 self.transport_factory(execution), dtype
             )
-            outcome = sink.run(df)
+            outcome = sink.run(df, staging)
             try:
                 res.rows_read = outcome.rows
                 res.rows_uploaded = outcome.accepted
                 res.errors.extend(outcome.error_messages)
-                if txn != TransactionalType.NOT_TRANSACTIONAL and res.rows_uploaded > 0:
+                if txn != TransactionalType.NOT_TRANSACTIONAL:
                     # U20/D5: persist successfully-uploaded keys
-                    res.errors.extend(ds.record_uploaded(txn, outcome.success))
+                    res.errors.extend(ds.record_uploaded(txn, outcome))
             finally:
                 outcome.release()
         except SchemaValidationError as exc:

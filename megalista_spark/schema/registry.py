@@ -23,7 +23,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from megalista_spark.models.execution import DestinationType, TransactionalType
@@ -97,13 +97,11 @@ class DestinationSchema:
         if validate:
             self.validate(df.columns)
         keep = self.resolve_columns(df.columns)
-        out = df.select(*keep)
+        casts: dict[str, Column] = {}
         for spec in self.columns:
-            if spec.data_type == "string" or spec.is_pattern:
-                continue
-            if spec.name in keep:
-                out = out.withColumn(spec.name, F.col(spec.name).cast(spec.data_type))
-        return out
+            if spec.data_type != "string" and not spec.is_pattern and spec.name in keep:
+                casts[spec.name] = casts.get(spec.name, F.col(spec.name)).cast(spec.data_type)
+        return df.select(*[casts[c].alias(c) if c in casts else c for c in keep])
 
 
 def _c(name: str, required: bool = False, data_type: str = "string", pattern: bool = False) -> ColumnSpec:

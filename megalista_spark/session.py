@@ -32,6 +32,9 @@ launches that JVM itself, it starts it from a JDK dynamic class-data-sharing
   can crash the JVM, so a partial file is never passed to it, and one
   whose writer is gone is deleted.
 - With a published archive, the JVM maps it (``-XX:SharedArchiveFile``).
+- Publishing a key's archive deletes the archives and failure marks of
+  every other key, which no start would use again (a JDK update, a Spark
+  jar change, new driver options). A JVM still mapping one keeps working.
 - The JVM refuses to dump or map when a non-empty directory is on its class
   path. The Spark conf directory is one: when it holds only ``*.template``
   files, which Spark never reads, the launch uses an empty conf directory
@@ -159,6 +162,19 @@ def _remove_stale_partials(cache: str) -> None:
                 pass
 
 
+def _remove_other_keys(archive: str) -> None:
+    """Delete the archives and failure marks of every key but ``archive``'s:
+    no start maps them again once a key is published. A JVM that maps one
+    of them keeps working, as an unlinked file stays mapped."""
+    cache, name = os.path.split(archive)
+    for other in os.listdir(cache):
+        if other != name and other.endswith((".jsa", ".failed")):
+            try:
+                os.unlink(os.path.join(cache, other))
+            except FileNotFoundError:
+                pass
+
+
 def _plan_launch(conf: dict[str, str]) -> _Launch:
     """Where this driver JVM launch stands with its archive (see the module
     docstring). ``conf`` is the session conf the JVM is launched with."""
@@ -206,6 +222,7 @@ def _publish(proc: subprocess.Popen, launch: _Launch) -> None:
     try:
         if proc.returncode == 0:
             os.replace(launch.partial, launch.archive)
+            _remove_other_keys(launch.archive)
             return
         os.unlink(launch.partial)
     except FileNotFoundError:

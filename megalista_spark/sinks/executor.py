@@ -15,33 +15,37 @@ Reference behaviors folded in (SURVEY §4 "custom pieces"):
   chunk of n rows takes at least n / per-task rate seconds
 - per-batch error isolation: a failing chunk records an error and the
   partition continues (safe_process, uploaders/utils.py:69-88)
-- partial-failure success semantics: the executor RETURNS a DataFrame of
-  accepted rows so downstream (control-table append, summary) stays
-  relational (J3)
+- partial-failure success semantics: the accepted rows stay a DataFrame
+  (``SinkResult.success``), so downstream stays relational (J3)
+- the upload step persists the keys it got accepted (reference
+  transactional_events_results_writer.py:29-78): given a ``KeyStaging``,
+  each upload task writes the key columns of its accepted rows, with the
+  driver's timestamp, to one parquet file per task attempt (written under a
+  dot-prefixed name, then renamed), and reports the file's name in the
+  upload's observed metrics. Those apply once per partition, so
+  ``SinkResult.staged`` names the winning attempts' files only; the caller
+  commits them (``ControlTable.commit``)
 
 Scale design: the upload is a collect-free ``mapInArrow`` pass — each
 partition's Arrow batches are cut into chunks, the transport gets each
 chunk as row dicts (``RecordBatch.to_pylist``), and the chunk goes back
 as Arrow with a status and an error column appended; row values are never
-rebuilt in Python. Parallelism is bounded by `repartition(n)` before
-calling run() (API quota control), not by driver-side loops. ``run``
-caches the tagged rows and fills the cache with one observed no-op write,
-so one job uploads and counts; the success rows and the error records
-are views of that cache, and ``SinkResult.release`` frees it.
-
-``upload`` first installs ``_StampedZipImporter`` in its worker: pyspark
-calls ``importlib.invalidate_caches()`` before every task, and a plain
-zipimporter answers by re-reading its whole archive (pyspark.zip, the
-spark-core jar) although neither changes while the worker lives.
+rebuilt in Python, and the appended columns, the staged keys and their
+timestamp are built from buffers (building them from Python lists imports
+pandas into the upload worker). Parallelism is bounded by `repartition(n)`
+before calling run() (API quota control), not by driver-side loops.
+``run`` caches the tagged rows and fills the cache with one observed no-op
+write, so one job uploads, stages and counts; the success rows and the
+error records are views of that cache, and ``SinkResult.release`` frees it.
 """
 
 from __future__ import annotations
 
-import os
+import datetime as dt
 import pickle
-import sys
+import struct
 import time
-import zipimport
+import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator
 
@@ -52,6 +56,7 @@ from pyspark.sql import types as T
 
 from megalista_spark.models.execution import DestinationType
 from megalista_spark.sinks.transports import Transport, retry
+from megalista_spark.zip_imports import install_stamped_zipimporter
 
 # Per-destination upload batch sizes (reference processing_steps.py +
 # third_party/steps.py:31; default batches_from_executions.py:147).
@@ -85,6 +90,8 @@ RATE_LIMITS: dict[DestinationType, float] = {
 
 _STATUS_COL = "__megalista_status"
 _ERROR_COL = "__megalista_error"
+# the name of the key file a task staged, on the first row of its last chunk
+_STAGED_COL = "__megalista_staged"
 _OK, _REJECTED, _FAILED = 0, 1, 2  # values of the status column
 # local property carrying the number of upload tasks that run at once to
 # the pacer inside each task; it is known only once the upload is planned
@@ -127,37 +134,6 @@ def _field_converters(schema: T.StructType) -> list[tuple[str, Callable[[Any], A
     return [(f.name, c) for f in schema.fields if (c := _row_converter(f.dataType))]
 
 
-class _StampedZipImporter(zipimport.zipimporter):
-    """A zipimporter whose ``invalidate_caches`` re-reads the archive's
-    directory only when the archive's (mtime, size) differs from its last
-    re-read, or cannot be stat'ed. Its first invalidation always re-reads,
-    so a directory cached before the stamp was taken is never kept."""
-
-    _stamp: tuple[int, int] | None = None
-
-    def invalidate_caches(self) -> None:
-        try:
-            st = os.stat(self.archive)
-            stamp = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            stamp = None
-        if stamp is None or stamp != self._stamp:
-            super().invalidate_caches()
-            self._stamp = stamp
-
-
-def _install_stamped_zipimporter() -> None:
-    """Idempotent. New zip entries on ``sys.path`` get the subclass through
-    the path hook; the zipimporters already cached switch class in place,
-    so the modules they loaded keep the loader that is invalidated."""
-    hooks = sys.path_hooks
-    if zipimport.zipimporter in hooks:
-        hooks[hooks.index(zipimport.zipimporter)] = _StampedZipImporter
-    for finder in sys.path_importer_cache.values():
-        if type(finder) is zipimport.zipimporter:
-            finder.__class__ = _StampedZipImporter
-
-
 def _chunks(batches: Iterator[Any], size: int) -> Iterator[Any]:
     """Arrow tables of ``size`` rows (the last one shorter), cut across the
     boundaries of the incoming record batches."""
@@ -192,23 +168,124 @@ def _accepted_mask(chunk: list[dict], accepted: list[dict]) -> list[bool]:
     return [id(d) in accepted_ids for d in chunk]
 
 
+def _name_column(name: str | None, n: int) -> Any:
+    """A string column of ``n`` rows holding ``name`` on its first row (all
+    null for None), built from buffers."""
+    import pyarrow as pa
+
+    if name is None:
+        return pa.nulls(n, pa.string())
+    data = name.encode()
+    first = pa.Array.from_buffers(
+        pa.string(), 1, [None, pa.py_buffer(struct.pack("<ii", 0, len(data))), pa.py_buffer(data)]
+    )
+    return pa.concat_arrays([first, pa.nulls(n - 1, pa.string())])
+
+
+@dataclass(frozen=True)
+class KeyStaging:
+    """Where the upload tasks of one run stage the keys of their accepted
+    rows: ``directory`` is a path or URI that
+    ``pyarrow.fs.FileSystem.from_uri`` opens, ``keys`` are the key columns,
+    and ``timestamp`` (UTC, fixed before the upload) is the value of every
+    staged row's ``timestamp`` column."""
+
+    directory: str
+    keys: tuple[str, ...]
+    timestamp: dt.datetime
+
+    def filesystem(self) -> tuple[Any, str]:
+        from pyarrow.fs import FileSystem
+
+        return FileSystem.from_uri(self.directory)
+
+    def discard(self) -> None:
+        """Delete the staging directory with every file in it."""
+        from pyarrow.fs import FileType
+
+        fs, path = self.filesystem()
+        if fs.get_file_info(path).type != FileType.NotFound:
+            fs.delete_dir(path)
+
+
+class _StagedKeys:
+    """One task attempt's staged keys: the key columns of its accepted rows
+    and the staging timestamp, streamed to ``.<name>`` in the staging
+    directory and renamed to ``<name>`` once complete. A task with no
+    accepted rows writes nothing."""
+
+    def __init__(self, staging: KeyStaging, name: str):
+        import pyarrow as pa
+
+        self.staging = staging
+        self.name = name
+        epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+        self.micros = struct.pack("<q", (staging.timestamp - epoch) // dt.timedelta(microseconds=1))
+        self.ok = pa.Array.from_buffers(pa.int8(), 1, [None, pa.py_buffer(bytes([_OK]))])[0]
+        self.writer: Any = None
+
+    def add(self, chunk: Any, status: Any) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        keys = chunk.select(list(self.staging.keys)).filter(pc.equal(status, self.ok))
+        if keys.num_rows == 0:
+            return
+        stamp = pa.Array.from_buffers(
+            pa.timestamp("us", "UTC"), keys.num_rows, [None, pa.py_buffer(self.micros * keys.num_rows)]
+        )
+        keys = keys.add_column(0, "timestamp", stamp)
+        if self.writer is None:
+            import pyarrow.parquet as pq
+
+            self.fs, self.dir = self.staging.filesystem()
+            self.fs.create_dir(self.dir, recursive=True)
+            self.writer = pq.ParquetWriter(f"{self.dir}/.{self.name}", keys.schema, filesystem=self.fs)
+        self.writer.write_table(keys)
+
+    def finish(self) -> str | None:
+        """The name of the complete file, or None when nothing was staged."""
+        if self.writer is None:
+            return None
+        self.writer.close()
+        self.fs.move(f"{self.dir}/.{self.name}", f"{self.dir}/{self.name}")
+        return self.name
+
+
 @dataclass
 class SinkResult:
-    """Outcome of one sink run: accepted rows + error records, both views
-    of the cached upload, and the counts the upload observed."""
+    """Outcome of one sink run: the counts the upload observed, the names
+    of the key files its winning task attempts wrote in ``staging``, and
+    the cached upload, of which ``success`` and ``errors`` are views built
+    on access."""
 
-    success: DataFrame
-    errors: DataFrame
+    tagged: DataFrame
     rows: int = 0  # rows that entered the sink
     accepted: int = 0
     error_messages: list[str] = field(default_factory=list)
-    tagged: DataFrame | None = None
+    staging: KeyStaging | None = None
+    staged: list[str] = field(default_factory=list)
+    destination: str = ""
+
+    @property
+    def success(self) -> DataFrame:
+        """The accepted rows, with the input schema."""
+        return self.tagged.where(F.col(_STATUS_COL) == _OK).drop(
+            _STATUS_COL, _ERROR_COL, _STAGED_COL
+        )
+
+    @property
+    def errors(self) -> DataFrame:
+        """(destination, message), one record per failed chunk."""
+        return self.tagged.where(F.col(_ERROR_COL).isNotNull()).select(
+            F.lit(self.destination).alias("destination"),
+            F.col(_ERROR_COL).alias("message"),
+        )
 
     def release(self) -> None:
         """Unpersist the cached upload; ``success``/``errors`` must not be
         read afterwards (reading them would upload again)."""
-        if self.tagged is not None:
-            self.tagged.unpersist()
+        self.tagged.unpersist()
 
 
 class SinkExecutor:
@@ -235,14 +312,11 @@ class SinkExecutor:
         kw.setdefault("context", {"destination_type": destination_type.value})
         return cls(transport, **kw)
 
-    def run(self, df: DataFrame) -> SinkResult:
-        """One action, an observed no-op write: upload, then return
-        (success rows, error records) with the row, accepted and error
-        counts.
-
-        The returned success DataFrame has the input schema; errors carry
-        (destination, message), one record per failed chunk. Call
-        ``release()`` when done with both.
+    def run(self, df: DataFrame, staging: KeyStaging | None = None) -> SinkResult:
+        """One action, an observed no-op write: upload (staging the accepted
+        keys when ``staging`` is given), then return the row, accepted and
+        error counts and the staged files. A failed upload discards the
+        staging directory. Call ``release()`` when done with the result.
         """
         # the tasks get the transport as run() received it: pickled before
         # before_run, so what before_run builds stays on the driver
@@ -257,16 +331,18 @@ class SinkExecutor:
         sc = df.sparkSession.sparkContext
         slots = sc.defaultParallelism
         converters = _field_converters(df.schema)
+        run_id = uuid.uuid4().hex
         out_schema = T.StructType(
             list(df.schema.fields)
             + [
                 T.StructField(_STATUS_COL, T.ByteType(), False),
                 T.StructField(_ERROR_COL, T.StringType(), True),
+                T.StructField(_STAGED_COL, T.StringType(), True),
             ]
         )
 
         def upload(batches: Iterator[Any]) -> Iterator[Any]:
-            _install_stamped_zipimporter()
+            install_stamped_zipimporter()
             import pyarrow as pa
             from pyspark import TaskContext
 
@@ -277,9 +353,18 @@ class SinkExecutor:
             # run at once (all task slots if the count was not passed)
             running = (tc and tc.getLocalProperty(_UPLOAD_TASKS)) or slots
             task_rate = budget / max(int(running), 1)
+            key_file = None
+            if staging is not None:
+                attempt = tc.taskAttemptId() if tc else 0
+                key_file = _StagedKeys(
+                    staging, f"part-{ctx['partition_id']:05d}-{run_id}-{attempt}.parquet"
+                )
             transport = pickle.loads(shipped)
             transport.open(ctx)
             try:
+                # the last chunk is held back until the staged file is
+                # complete, so its first row can carry the file's name
+                last = None
                 for chunk_index, table in enumerate(_chunks(batches, batch_size), 1):
                     ctx["chunk_index"] = chunk_index
                     ctx["iteration"] = chunk_index  # reference Batch.iteration
@@ -312,11 +397,23 @@ class SinkExecutor:
                     if task_rate:  # post-batch floor (reference :131-136)
                         done_at = started + len(rows) / task_rate
                         time.sleep(max(0.0, done_at - time.monotonic()))
-                    out = table.append_column(
-                        _STATUS_COL,
-                        pa.Array.from_buffers(pa.int8(), len(rows), [None, pa.py_buffer(status)]),
-                    ).append_column(_ERROR_COL, errors)
-                    yield from out.to_batches()
+                    status = pa.Array.from_buffers(
+                        pa.int8(), len(rows), [None, pa.py_buffer(status)]
+                    )
+                    if key_file is not None:
+                        key_file.add(table, status)
+                    if last is not None:
+                        yield from last.append_column(
+                            _STAGED_COL, _name_column(None, last.num_rows)
+                        ).to_batches()
+                    last = table.append_column(_STATUS_COL, status).append_column(
+                        _ERROR_COL, errors
+                    )
+                if last is not None:
+                    name = key_file.finish() if key_file is not None else None
+                    yield from last.append_column(
+                        _STAGED_COL, _name_column(name, last.num_rows)
+                    ).to_batches()
             finally:
                 transport.close(ctx)
 
@@ -331,26 +428,32 @@ class SinkExecutor:
                 # would start as a second Python worker pool
                 partitions = tagged._jdf.rdd().getNumPartitions()
                 sc.setLocalProperty(_UPLOAD_TASKS, str(min(partitions, slots)))
-            # the one action: uploads, fills the cache and counts in the
-            # result stage, whose metrics Spark applies once per partition
+            # the one action: uploads, stages, fills the cache and counts in
+            # the result stage, whose metrics Spark applies once per
+            # partition: a failed or retried attempt's staged file is not
+            # among ``staged``
             observed = Observation()
             tagged.observe(
                 observed,
                 F.count(F.lit(1)).alias("rows"),
                 F.count(F.when(status == _OK, True)).alias("accepted"),
                 F.collect_list(_ERROR_COL).alias("errors"),
+                F.collect_list(_STAGED_COL).alias("staged"),
             ).write.format("noop").mode("overwrite").save()
             totals = observed.get
         except BaseException:
             tagged.unpersist()
+            if staging is not None:
+                staging.discard()
             raise
         finally:
             sc.setLocalProperty(_UPLOAD_TASKS, None)
-        success = tagged.where(status == _OK).drop(_STATUS_COL, _ERROR_COL)
-        errors = tagged.where(F.col(_ERROR_COL).isNotNull()).select(
-            F.lit(base_context.get("destination_type", "")).alias("destination"),
-            F.col(_ERROR_COL).alias("message"),
-        )
         return SinkResult(
-            success, errors, totals["rows"], totals["accepted"], list(totals["errors"]), tagged
+            tagged,
+            totals["rows"],
+            totals["accepted"],
+            list(totals["errors"]),
+            staging,
+            list(totals["staged"]),
+            base_context.get("destination_type", ""),
         )

@@ -13,6 +13,15 @@ Reference behaviors re-expressed Spark-first:
   file_data_source.py:141-147); missing control table reads as a typed,
   optimizer-known empty frame (file_data_source.py:127-138); the control
   side is not deduplicated
+- recording uploaded keys is part of the upload step (reference
+  transactional_events_results_writer.py:29-78): ``key_staging`` gives the
+  sink a ``_staging/<uuid>/`` directory under the control table, the upload
+  tasks write the keys they got accepted there, and ``record_uploaded``
+  moves the winning attempts' files into the ``dt=`` layout, so no Spark
+  job appends. Tasks and the driver reach the table through
+  ``pyarrow.fs.FileSystem.from_uri`` (local paths, ``file://``, ``gs://``,
+  ``s3://``; ``s3a://`` maps to ``s3://``), at the path Spark reads, which
+  Hadoop qualifies when it has no scheme
 
 At 100 TB: the anti-join's control side is usually small relative to the
 source (only the last 15 days of uploaded keys) — AQE picks a broadcast
@@ -22,8 +31,12 @@ No collect()s, no driver-side loops.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import posixpath
+import uuid
 from dataclasses import dataclass
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +49,7 @@ from megalista_spark.models.execution import (
     TransactionalType,
 )
 from megalista_spark.schema.registry import DestinationSchema
+from megalista_spark.sinks.executor import KeyStaging, SinkResult
 from megalista_spark.sources import bigquery_control
 
 RETENTION_DAYS = 15  # reference big_query_data_source.py:125,132,139
@@ -47,7 +61,9 @@ class ControlTable:
 
     Parquet-backed here (Delta would be the production choice; parquet
     append has the same semantics for this access pattern — we only ever
-    append and scan with a time filter).
+    append and scan with a time filter). The pipeline appends by
+    ``staging`` + ``commit`` (files the upload tasks wrote); ``append``
+    writes a DataFrame of keys for direct callers.
     """
 
     spark: SparkSession
@@ -86,9 +102,9 @@ class ControlTable:
         )
 
     def append(self, success_keys: DataFrame) -> None:
-        """Record uploaded keys (reference
+        """Record uploaded keys with one Spark write (reference
         transactional_events_results_writer.py:29-78 + D5/D11). Input must
-        contain exactly the dedup key columns. Written date-partitioned so
+        contain the dedup key columns. Written date-partitioned so
         retention reads prune (see read())."""
         (
             success_keys.select(*self.keys)
@@ -99,6 +115,40 @@ class ControlTable:
             .partitionBy("dt")
             .parquet(self.path)
         )
+
+    def staging(self) -> KeyStaging:
+        """Where one upload stages the keys it gets accepted:
+        ``_staging/<uuid>/`` under the table, with the timestamp of this
+        append. Fails, naming the table, when pyarrow cannot open it."""
+        from pyarrow import ArrowException
+        from pyarrow.fs import FileSystem, FileType
+
+        location = self._arrow_location()
+        try:
+            fs, path = FileSystem.from_uri(location)
+            if fs.get_file_info(path).type == FileType.File:
+                raise NotADirectoryError(path)
+        except (OSError, ArrowException) as exc:
+            raise ValueError(
+                f"control table {self.path}: pyarrow cannot open {location}: {exc}"
+            ) from exc
+        return KeyStaging(
+            f"{location}/_staging/{uuid.uuid4().hex}", self.keys, dt.datetime.now(dt.timezone.utc)
+        )
+
+    def commit(self, staging: KeyStaging, files: list[str]) -> None:
+        """Move the staged ``files`` into the ``dt=`` partition of the
+        staging timestamp's UTC date, then delete the staging directory with
+        whatever else is in it (files of failed task attempts). With no
+        files nothing is written, so an absent table stays absent."""
+        fs, path = staging.filesystem()
+        if files:
+            table = posixpath.dirname(posixpath.dirname(path))  # <table>/_staging/<uuid>
+            partition = f"{table}/dt={staging.timestamp.date().isoformat()}"
+            fs.create_dir(partition, recursive=True)
+            for name in files:
+                fs.move(f"{path}/{name}", f"{partition}/{name}")
+        staging.discard()
 
     def vacuum(self) -> list[str]:
         """Reclaim storage for partitions the retention window can never
@@ -122,6 +172,24 @@ class ControlTable:
         path = sc._jvm.org.apache.hadoop.fs.Path(self.path)
         fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
         return fs.exists(path) and len(fs.listStatus(path)) > 0
+
+    def _arrow_location(self) -> str:
+        """The table's path as ``pyarrow.fs.FileSystem.from_uri`` takes it:
+        one without a scheme is qualified against Hadoop's default file
+        system, as Spark reads it; a local one becomes a plain path and
+        ``s3a://`` becomes ``s3://``."""
+        path = self.path
+        if not urlsplit(path).scheme:
+            jvm = self.spark.sparkContext._jvm
+            conf = self.spark.sparkContext._jsc.hadoopConfiguration()
+            hpath = jvm.org.apache.hadoop.fs.Path(path)
+            path = jvm.org.apache.hadoop.fs.FileSystem.get(conf).makeQualified(hpath).toString()
+        parts = urlsplit(path)
+        if parts.scheme == "file":
+            return parts.path
+        if parts.scheme == "s3a":
+            return "s3" + path[len("s3a"):]
+        return path
 
 
 class DataSource:
@@ -166,14 +234,22 @@ class DataSource:
             df = anti_join_uploaded(df, uploaded, transactional_type)
         return df
 
+    def key_staging(self, transactional_type: TransactionalType) -> KeyStaging | None:
+        """Where the upload of a ``transactional_type`` branch stages its
+        accepted keys (None for a non-transactional one). Called before the
+        upload, so a control table pyarrow cannot open fails the branch
+        before any row is sent."""
+        if transactional_type == TransactionalType.NOT_TRANSACTIONAL:
+            return None
+        return self.control_table(transactional_type).staging()
+
     def record_uploaded(
-        self, transactional_type: TransactionalType, uploaded: DataFrame
+        self, transactional_type: TransactionalType, outcome: SinkResult
     ) -> list[str]:
-        """Append the keys of ``uploaded`` to the control table (reference
+        """Commit the keys the upload staged (``outcome`` of a sink run given
+        ``key_staging(transactional_type)``) to the control table (reference
         transactional_events_results_writer.py:29-78); returns errors."""
-        self.control_table(transactional_type).append(
-            uploaded.select(*transactional_type.keys)
-        )
+        self.control_table(transactional_type).commit(outcome.staging, outcome.staged)
         return []
 
 
@@ -351,14 +427,21 @@ class BigQueryDataSource(DataSource):
         df = self.read_raw(transactional_type, cols)
         return schema.apply(df) if schema is not None else df
 
+    def key_staging(self, transactional_type: TransactionalType) -> KeyStaging | None:
+        if self._native_dedup(transactional_type):
+            return None
+        return super().key_staging(transactional_type)
+
     def record_uploaded(
-        self, transactional_type: TransactionalType, uploaded: DataFrame
+        self, transactional_type: TransactionalType, outcome: SinkResult
     ) -> list[str]:
-        """With an ops dataset the keys go to BigQuery in ``insert_rows``
-        pages (reference big_query_data_source.py:153-176)."""
+        """With an ops dataset the accepted keys go to BigQuery in
+        ``insert_rows`` pages (reference big_query_data_source.py:153-176)."""
         if not self._native_dedup(transactional_type):
-            return super().record_uploaded(transactional_type, uploaded)
-        rows = [r.asDict() for r in uploaded.select(*transactional_type.keys).collect()]
+            return super().record_uploaded(transactional_type, outcome)
+        if outcome.accepted == 0:
+            return []
+        rows = [r.asDict() for r in outcome.success.select(*transactional_type.keys).collect()]
         errors = self.bq_control_table(transactional_type).append(rows)
         return [f"control table insert failed: {e}" for e in errors]
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from megalista_spark.sinks.executor import SinkExecutor
+from megalista_spark.zip_imports import install_stamped_zipimporter
 
 
 def _exact_value_sum(value_col: str):
@@ -389,6 +390,7 @@ def stream_user_running_stats(
     touched groups' running values)."""
 
     def update(key, pdfs, state):
+        install_stamped_zipimporter()
         import pandas as pd
 
         # NB: GroupState.get is a PROPERTY (calling it would invoke the
@@ -455,6 +457,7 @@ def stream_silence_monitor(
     """
 
     def update(key, pdfs, state):
+        install_stamped_zipimporter()
         import pandas as pd
 
         if state.hasTimedOut:

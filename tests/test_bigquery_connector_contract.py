@@ -15,6 +15,8 @@ from __future__ import annotations
 import pytest
 
 from megalista_spark.models.execution import Source, SourceType, TransactionalType
+from megalista_spark.sinks.executor import SinkExecutor
+from megalista_spark.sinks.transports import MockTransport
 from megalista_spark.sources.data_source import BigQueryDataSource
 
 
@@ -181,7 +183,6 @@ def test_pipeline_run_dedups_in_bigquery_with_ops_dataset(
     dataset: the control DDL runs, the dedup query ships to the connector
     with no Spark-side join, and the accepted keys go to ``insert_rows``."""
     from megalista_spark.pipeline import Pipeline
-    from megalista_spark.sinks.transports import MockTransport
     from megalista_spark.sources import bigquery_control
     from megalista_spark.sources.config_json import parse_config
 
@@ -237,5 +238,7 @@ def test_bq_control_insert_errors_are_returned(spark):
     src = Source("s1", SourceType.BIG_QUERY, ("ds1", "calls"))
     ds = BigQueryDataSource(spark, src, ops_dataset="ops", bq_client=_RejectingClient())
     uploaded = spark.createDataFrame([("u1", "+1")], ["uuid", "caller_id"])
-    messages = ds.record_uploaded(TransactionalType.UUID, uploaded)
+    outcome = SinkExecutor(MockTransport()).run(uploaded)
+    messages = ds.record_uploaded(TransactionalType.UUID, outcome)
+    outcome.release()
     assert len(messages) == 1 and "invalid" in messages[0]

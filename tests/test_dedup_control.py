@@ -14,6 +14,8 @@ from megalista_spark.models.execution import (
     TransactionalType,
 )
 from megalista_spark.schema.registry import get_schema
+from megalista_spark.sinks.executor import SinkExecutor
+from megalista_spark.sinks.transports import MockTransport
 from megalista_spark.sources.data_source import (
     ControlTable,
     anti_join_uploaded,
@@ -141,8 +143,8 @@ def test_duplicate_control_keys_drop_each_row_once(spark, tmp_path):
 
 def test_timestamp_key_control_table_dedups(spark, tmp_path):
     """A parquet source whose ``time`` key is a timestamp: schema.apply
-    leaves it uncast, the control table stores it as a timestamp, and the
-    next transactional read drops every recorded row."""
+    leaves it uncast, the upload tasks stage it as a timestamp, and after
+    the commit the next transactional read drops every recorded row."""
     path = str(tmp_path / "ts.parquet")
     rows = [(f"g{i}", dt.datetime(2020, 4, 9, 14, 13, i), "1.0") for i in range(5)]
     spark.createDataFrame(rows, ["gclid", "time", "amount"]).write.parquet(path)
@@ -151,5 +153,7 @@ def test_timestamp_key_control_table_dedups(spark, tmp_path):
     txn = schema.transactional_type
     first = ds.retrieve_data(schema, txn)
     assert first.count() == 5
-    ds.record_uploaded(txn, first)
+    outcome = SinkExecutor(MockTransport()).run(first, ds.key_staging(txn))
+    ds.record_uploaded(txn, outcome)
+    outcome.release()
     assert ds.retrieve_data(schema, txn).count() == 0

@@ -215,3 +215,53 @@ def test_dv_address_all_or_nothing(spark):
     # first row: zip empty → whole address absent → row shapes to nothing → dropped
     assert len(rows) == 1
     assert rows[0]["countryCode"] == "BR" and rows[0]["zipCodes"] == "123"
+
+
+# Output columns, in order, of schema projection + PII shaping per PII
+# destination type. ADS_ENHANCED_CONVERSION declares only ``.*``, so its
+# source is _ENHANCED_SOURCE; every other source has the schema's columns.
+_ENHANCED_SOURCE = [
+    "gclid", "email", "phone", "mailing_address_first_name", "mailing_address_last_name",
+    "mailing_address_country", "mailing_address_zip", "time",
+]
+_PII_OUTPUT_COLUMNS = {
+    "ADS_CUSTOMER_MATCH_CONTACT_INFO_UPLOAD": ["hashed_email", "hashed_phone_number", "address_info"],
+    "ADS_CUSTOMER_MATCH_MOBILE_DEVICE_ID_UPLOAD": ["mobile_id"],
+    "ADS_CUSTOMER_MATCH_USER_ID_UPLOAD": ["third_party_user_id"],
+    "ADS_SSD_UPLOAD": ["time", "amount", "hashed_email", "hashed_phone_number", "address_info"],
+    "ADS_SSI_UPLOAD": [
+        "time", "amount", "currency_code", "custom_value",
+        "hashed_email", "hashed_phone_number", "address_info",
+    ],
+    "ADS_ENHANCED_CONVERSION": ["gclid", "time", "hashed_email", "hashed_phone_number", "address_info"],
+    "ADS_ENHANCED_CONVERSION_LEADS": [
+        "uuid", "time", "amount", "external_attribution_credit", "external_attribution_model",
+        "consent_ad_user_data", "consent_ad_personalization", "hashed_email", "hashed_phone_number",
+    ],
+    "DV_CUSTOMER_MATCH_CONTACT_INFO_UPLOAD": [
+        "hashedEmails", "hashedPhoneNumbers", "hashedFirstName", "hashedLastName",
+        "countryCode", "zipCodes",
+    ],
+    "DV_CUSTOMER_MATCH_DEVICE_ID_UPLOAD": ["mobileDeviceIds"],
+}
+
+
+def test_pii_shaping_output_columns_per_destination_type(spark):
+    """Every destination type the pipeline PII-shapes keeps the pinned
+    output columns and order; each shaping is one projection (and one
+    all-NULL filter) over the schema's projection."""
+    from megalista_spark.pipeline import _PII_TRANSFORMS, _TRANSFORMS
+    from megalista_spark.schema.registry import get_schema
+
+    pii = {d: t for d, t in _TRANSFORMS.items() if t in _PII_TRANSFORMS}
+    assert sorted(d.name for d in pii) == sorted(_PII_OUTPUT_COLUMNS)
+    for dtype, transform in pii.items():
+        name = dtype.name
+        schema = get_schema(dtype)
+        cols = [c.name for c in schema.columns if not c.is_pattern] or _ENHANCED_SOURCE
+        df = spark.createDataFrame([tuple(f"{c}@example.com" for c in cols)], cols)
+        out = transform(schema.apply(df))
+        assert out.columns == _PII_OUTPUT_COLUMNS[name], name
+        assert out.count() == 1, name
+        plan = out._jdf.queryExecution().logical().toString()
+        assert plan.count("Project [") == 2 and plan.count("Filter ") == 1, (name, plan)

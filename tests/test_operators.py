@@ -3598,3 +3598,67 @@ def test_semdedup_hot_cell_pruning_is_subquadratic_and_exact(spark):
             )
         )
         assert routed == plain
+
+
+_KERNEL_REREADS = r'''
+import importlib, json, os, sys, zipimport
+
+from megalista_spark.operators.groupedmap import zscore_by_group
+from megalista_spark.session import get_spark
+
+
+def probe(batches):
+    """One row: this worker's pid, whether the stamped zipimporter hook is
+    installed, and how many zip directories invalidate_caches() re-reads."""
+    import pandas as pd
+
+    from megalista_spark.zip_imports import StampedZipImporter
+
+    reads = []
+    real = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return real(archive)
+
+    zipimport._read_directory = counting
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = real
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"pid": [os.getpid()], "hooked": [StampedZipImporter in sys.path_hooks],
+                        "reads": [len(reads)]})
+
+
+spark = get_spark(master="local[1]")
+one = spark.range(0, 1, 1, numPartitions=1)
+docs = spark.createDataFrame([(i, "en", i) for i in range(4)], "doc_id long, lang string, n_chars long")
+runs = [one.mapInPandas(probe, "pid long, hooked boolean, reads long").collect()[0].asDict()]
+zscore_by_group(docs).collect()
+runs.append(one.mapInPandas(probe, "pid long, hooked boolean, reads long").collect()[0].asDict())
+print(json.dumps(runs))
+'''
+
+
+def test_reused_worker_rereads_no_zip_directory_after_a_kernel_task(tmp_path):
+    """On one task slot every Python task runs in one reused worker. Before
+    any kernel ran there, invalidate_caches() re-reads zip directories;
+    after an applyInPandas kernel task (``zscore_by_group``) it re-reads
+    none, as the kernel installed the stamped zipimporter."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "1", "SPARK_DRIVER_MEMORY": "1g"}
+    job = subprocess.run(
+        [sys.executable, "-c", _KERNEL_REREADS], env=env, cwd=tmp_path,
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, timeout=600,
+    )
+    assert job.returncode == 0, job.stderr[-3000:]
+    before, after = json.loads(job.stdout.splitlines()[-1])
+    assert before["pid"] == after["pid"], (before, after)
+    assert not before["hooked"] and before["reads"] > 0, before
+    assert after["hooked"] and after["reads"] == 0, after

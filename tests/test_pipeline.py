@@ -215,11 +215,12 @@ class KeyLogTransport(Transport):
 
 
 # Spark jobs of one transactional branch on a fresh control table: one
-# infers the source's schema, one is the upload (an observed no-op write;
-# the anti-join against the absent control table plans away) and one is
-# the control-table append. A re-added count, collect, shuffle or second
+# infers the source's schema and one is the upload (an observed no-op write
+# whose tasks also stage the accepted keys; the anti-join against the absent
+# control table plans away). The keys are committed by rename, not by a
+# Spark write. A re-added count, collect, shuffle, append job or second
 # upload raises it.
-BRANCH_JOBS = 3
+BRANCH_JOBS = 2
 
 
 def test_each_row_sent_once_and_keys_recorded_once(spark, tmp_path, conversions_path):
@@ -250,6 +251,157 @@ def test_each_row_sent_once_and_keys_recorded_once(spark, tmp_path, conversions_
     control = ds.control_table(TransactionalType.GCLID_TIME).read()
     assert sorted(row["gclid"] for row in control.collect()) == sorted(accepted)
     assert len(jobs) <= BRANCH_JOBS, len(jobs)
+
+
+def _control_files(control: str) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(root, name), control)
+        for root, _, names in os.walk(control)
+        for name in names
+    )
+
+
+def test_file_uri_control_table_commits_staged_keys(spark, tmp_path, conversions_path):
+    """A ``file://`` source keeps its control table at a ``file://`` path.
+    The upload tasks stage the accepted keys there and the commit moves them
+    into the ``dt=`` partition of their one UTC timestamp, leaving no staged
+    file behind; the next run uploads nothing."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+
+    cfg = write_config(
+        tmp_path,
+        "file://" + conversions_path,
+        [{"Enabled": True, "Source": "conv", "Destination": "oci"}],
+    )
+    sent_dir = tmp_path / "sent"
+    sent_dir.mkdir()
+    r1 = run_from_config(spark, cfg, lambda e: KeyLogTransport(str(sent_dir)))
+    assert r1.exit_code == 0 and r1.branches[0].rows_uploaded == 18
+
+    control = conversions_path + "_uploaded"
+    files = _control_files(control)
+    assert files and all(re.fullmatch(r"dt=[\d-]+/part-[\w-]+\.parquet", f) for f in files), files
+    keys, stamps = [], set()
+    for f in files:
+        t = pq.read_table(os.path.join(control, f))
+        assert t.column_names == ["timestamp", "gclid", "time"]
+        assert str(t.schema.field("timestamp").type) == "timestamp[us, tz=UTC]"
+        keys += t.column("gclid").to_pylist()
+        stamps |= set(t.column("timestamp").to_pylist())
+    assert sorted(keys) == sorted(f"g{i}" for i in range(20) if i % 10 != 3)
+    [stamp] = stamps
+    assert {f.split("/")[0] for f in files} == {f"dt={stamp.astimezone(dt.timezone.utc).date()}"}
+
+    r2 = run_from_config(spark, cfg, lambda e: KeyLogTransport(str(sent_dir)))
+    assert (r2.branches[0].rows_read, r2.branches[0].rows_uploaded) == (2, 0)
+    assert _control_files(control) == files
+
+
+def test_control_table_pyarrow_cannot_open_fails_before_any_send(
+    spark, tmp_path, conversions_path, monkeypatch
+):
+    """A control table at a location pyarrow cannot open fails its branch,
+    naming the location, before any row reaches the transport."""
+    from megalista_spark.sources.data_source import FileDataSource
+
+    bad = f"ftp://localhost:1{conversions_path}_uploaded"
+    monkeypatch.setattr(FileDataSource, "control_path", lambda self: bad)
+    cfg = write_config(
+        tmp_path,
+        conversions_path,
+        [{"Enabled": True, "Source": "conv", "Destination": "oci"}],
+    )
+    sent_dir = tmp_path / "sent"
+    sent_dir.mkdir()
+    r = run_from_config(spark, cfg, lambda e: KeyLogTransport(str(sent_dir)))
+    assert r.exit_code == 1
+    [error] = r.branches[0].errors
+    assert bad in error and "pyarrow cannot open" in error, error
+    assert list(sent_dir.iterdir()) == []
+
+
+_RETRIED_UPLOAD = r'''
+import json, os, sys, uuid
+
+from pyspark import TaskContext
+
+from megalista_spark.pipeline import run_from_config
+from megalista_spark.session import get_spark
+from megalista_spark.sinks.transports import Transport
+
+
+class FailsAfterStaging(Transport):
+    """Rejects the gclids ending in 3 and fails each task's first attempt in
+    close(), after the task staged its keys. Each send writes the gclids it
+    was sent, and each close writes its task attempt and whether pandas is
+    imported in its worker, to a new file under out_dir."""
+
+    def __init__(self, out_dir):
+        self.out_dir = out_dir
+
+    def send(self, payload, context):
+        with open(os.path.join(self.out_dir, "sent-" + uuid.uuid4().hex), "w") as f:
+            f.write("".join(r["gclid"] + "\n" for r in payload))
+        return [r for r in payload if not r["gclid"].endswith("3")]
+
+    def close(self, context):
+        tc = TaskContext.get()
+        with open(os.path.join(self.out_dir, "close-" + uuid.uuid4().hex), "w") as f:
+            json.dump({"partition": tc.partitionId(), "attempt": tc.attemptNumber(),
+                       "pandas": "pandas" in sys.modules}, f)
+        if tc.attemptNumber() == 0:
+            raise RuntimeError("first attempt fails after staging its keys")
+
+
+spark = get_spark(master="local[2,2]")
+r = run_from_config(spark, sys.argv[1], lambda e: FailsAfterStaging(sys.argv[2]))
+print(json.dumps({"uploaded": r.branches[0].rows_uploaded, "errors": r.branches[0].errors}))
+'''
+
+
+def test_retried_upload_task_commits_each_key_once(tmp_path, conversions_path):
+    """On ``local[2,2]`` every upload task fails its first attempt after
+    staging its keys. The control table then holds each accepted key once:
+    only the winning attempts' files are committed, and the failed ones'
+    are deleted with the staging directory. No upload worker imports
+    pandas. (The retry sends its rows again; see ROADMAP item 3.)"""
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    cfg = write_config(
+        tmp_path,
+        conversions_path,
+        [{"Enabled": True, "Source": "conv", "Destination": "oci"}],
+    )
+    out = tmp_path / "out"
+    out.mkdir()
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"}
+    job = subprocess.run(
+        [sys.executable, "-c", _RETRIED_UPLOAD, cfg, str(out)], env=env, cwd=tmp_path,
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, timeout=600,
+    )
+    assert job.returncode == 0, job.stderr[-3000:]
+    accepted = sorted(f"g{i}" for i in range(20) if i % 10 != 3)
+    assert json.loads(job.stdout.splitlines()[-1]) == {"uploaded": len(accepted), "errors": []}
+
+    closes = [json.loads(p.read_text()) for p in out.glob("close-*")]
+    partitions = {c["partition"] for c in closes}
+    assert sorted((c["partition"], c["attempt"]) for c in closes) == sorted(
+        (p, a) for p in partitions for a in (0, 1)
+    )
+    assert not any(c["pandas"] for c in closes), closes
+    sent = {k for p in out.glob("sent-*") for k in p.read_text().split()}
+    assert sent == {f"g{i}" for i in range(20)}
+
+    control = conversions_path + "_uploaded"
+    files = _control_files(control)
+    assert all(f.startswith("dt=") for f in files), files
+    keys = [k for f in files for k in pq.read_table(os.path.join(control, f)).column("gclid").to_pylist()]
+    assert sorted(keys) == accepted
 
 
 class PiiLogTransport(Transport):

@@ -213,6 +213,24 @@ def test_cache_keeps_one_archive_per_key(home):
     assert left == sorted(["conf", os.path.basename(first.archive)])
 
 
+def test_publishing_an_archive_deletes_other_keys_archives(home):
+    """A published archive replaces the archives and failure marks of every
+    other key; partial files and the conf directory stay, and a file the
+    caller still has open (as a JVM maps its archive) stays readable."""
+    launch = session._plan_launch(_conf())
+    cache = session._cache_dir()
+    others = [os.path.join(cache, n) for n in ("0ld.jsa", "0ther.failed")]
+    live_partial = os.path.join(cache, f"0ld.{os.getppid()}.part")
+    for path in others + [launch.partial, live_partial]:
+        with open(path, "wb") as f:
+            f.write(b"archive")
+    with open(others[0], "rb") as mapped:
+        session._publish(_exits(0), launch)
+        assert mapped.read() == b"archive"
+    left = sorted(os.listdir(cache))
+    assert left == sorted(["conf", os.path.basename(launch.archive), os.path.basename(live_partial)])
+
+
 _MAPPED = """
 import os
 from megalista_spark.session import get_spark

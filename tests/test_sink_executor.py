@@ -389,10 +389,7 @@ def test_stamped_zipimporter_rereads_only_a_changed_archive(tmp_path):
     import zipfile
     import zipimport
 
-    from megalista_spark.sinks.executor import (
-        _install_stamped_zipimporter,
-        _StampedZipImporter,
-    )
+    from megalista_spark.zip_imports import StampedZipImporter, install_stamped_zipimporter
 
     archive = str(tmp_path / "stamped.zip")
     with zipfile.ZipFile(archive, "w") as z:
@@ -402,11 +399,11 @@ def test_stamped_zipimporter_rereads_only_a_changed_archive(tmp_path):
     try:
         sys.path.insert(0, archive)
         assert importlib.import_module("stamped_one").X == 1
-        _install_stamped_zipimporter()
-        _install_stamped_zipimporter()  # idempotent
-        assert sys.path_hooks.count(_StampedZipImporter) == 1
+        install_stamped_zipimporter()
+        install_stamped_zipimporter()  # idempotent
+        assert sys.path_hooks.count(StampedZipImporter) == 1
         assert zipimport.zipimporter not in sys.path_hooks
-        assert type(sys.path_importer_cache[archive]) is _StampedZipImporter
+        assert type(sys.path_importer_cache[archive]) is StampedZipImporter
         importlib.invalidate_caches()  # an importer's first one re-reads
         with _counting_zip_reads() as reads:
             importlib.invalidate_caches()
@@ -425,7 +422,7 @@ def test_stamped_zipimporter_rereads_only_a_changed_archive(tmp_path):
         assert importlib.import_module("stamped_two").Y == 2
     finally:
         for finder in sys.path_importer_cache.values():
-            if type(finder) is _StampedZipImporter:
+            if type(finder) is StampedZipImporter:
                 finder.__class__ = zipimport.zipimporter
         sys.path[:] = saved_path
         sys.path_hooks[:] = saved_hooks
@@ -447,13 +444,13 @@ class _ZipRereadProbe(Transport):
         import importlib
         import sys
 
-        from megalista_spark.sinks.executor import _StampedZipImporter
+        from megalista_spark.zip_imports import StampedZipImporter
 
         with _counting_zip_reads() as reads:
             importlib.invalidate_caches()
         record = {
             "pid": os.getpid(),
-            "hooked": _StampedZipImporter in sys.path_hooks,
+            "hooked": StampedZipImporter in sys.path_hooks,
             "reads": len(reads),
         }
         with open(os.path.join(self.out_dir, uuid.uuid4().hex), "w") as f:
