@@ -12,7 +12,9 @@ Byte-for-byte parity with the reference mappers:
 
 Everything is a Column expression (JVM-side, whole-stage codegen) — no
 Python UDFs. Golden SHA-256 vectors from the reference's tests are asserted
-in tests/test_hashing.py.
+in tests/test_hashing.py. Parity relies on Spark's ICU case mappings staying
+on (``spark.sql.icu.caseMappings.enabled``, the default): without them
+``lower`` differs from ``str.lower`` on more letters (U+2C2F, for one).
 """
 
 from __future__ import annotations

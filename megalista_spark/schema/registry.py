@@ -96,12 +96,14 @@ class DestinationSchema:
         optimizable transformation (select reaches the parquet scan)."""
         if validate:
             self.validate(df.columns)
-        keep = self.resolve_columns(df.columns)
+        # quoted, so a literal name such as customVariables.type is one
+        # column, not a struct field
+        keep = {c: F.col("`" + c.replace("`", "``") + "`") for c in self.resolve_columns(df.columns)}
         casts: dict[str, Column] = {}
         for spec in self.columns:
             if spec.data_type != "string" and not spec.is_pattern and spec.name in keep:
-                casts[spec.name] = casts.get(spec.name, F.col(spec.name)).cast(spec.data_type)
-        return df.select(*[casts[c].alias(c) if c in casts else c for c in keep])
+                casts[spec.name] = casts.get(spec.name, keep[spec.name]).cast(spec.data_type)
+        return df.select(*[casts[c].alias(c) if c in casts else col for c, col in keep.items()])
 
 
 def _c(name: str, required: bool = False, data_type: str = "string", pattern: bool = False) -> ColumnSpec:

@@ -42,6 +42,11 @@ launches that JVM itself, it starts it from a JDK dynamic class-data-sharing
 - The driver JVM's unified log goes to stderr, so stdout stays the job's.
 - Nothing happens when a gateway already exists: a live session, or a
   Python driver that ``spark-submit`` started.
+- A call that creates a ``local`` SparkContext, launched here or by
+  ``spark-submit``, initializes Spark's ICU case-mapping class on a daemon
+  thread as it returns. Its static initializer (about 1.5 s, once per JVM)
+  would otherwise run inside the first task that calls ``lower``/``upper``.
+  On a cluster the executors pay it at their first ``lower`` instead.
 
 Deleting the cache directory resets it; the next start builds again.
 """
@@ -72,6 +77,10 @@ _ENV_JAVA_OPTIONS = ("SPARK_SUBMIT_OPTS", "JDK_JAVA_OPTIONS", "JAVA_TOOL_OPTIONS
 _ENV_CLASS_PATH = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
 _COMPRESSED_OOPS_MIB = 32 * 1024  # a heap this large turns compressed oops off
 _DUMP_TIMEOUT_S = 300
+# The first lower()/upper() of a JVM initializes this class, whose static
+# initializer title-cases every code point through ICU to build a lookup
+# table: a one-time, JVM-wide cost of about 1.5 s (Spark 4.1, 4-core host).
+_CASE_MAPPING_CLASS = "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String"
 
 
 def _cpus() -> int:
@@ -244,7 +253,35 @@ def _publish_on_exit(proc: subprocess.Popen, launch: _Launch) -> None:
     atexit.register(_publish, proc, launch)
 
 
+def _initialize_case_mapping(sc: SparkContext) -> threading.Thread:
+    """Initialize the case-mapping class on a daemon thread that no caller
+    joins. Any failure (a class a later Spark renamed, a gateway shutting
+    down, a py4j network error) is dropped quietly: the thread only moves a
+    cost, so it must never fail or slow a start."""
+
+    def initialize() -> None:
+        try:
+            sc._jvm.java.lang.Class.forName(_CASE_MAPPING_CLASS)
+        except Exception:
+            pass
+
+    thread = threading.Thread(target=initialize, name="case-mapping-init", daemon=True)
+    thread.start()
+    return thread
+
+
 def _start(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession:
+    """getOrCreate; see the module docstring for what a new local context
+    starts."""
+    new_context = SparkContext._active_spark_context is None
+    session = _get_or_create(builder, conf)
+    sc = SparkContext._active_spark_context
+    if new_context and sc is not None and sc.master.startswith("local"):
+        _initialize_case_mapping(sc)
+    return session
+
+
+def _get_or_create(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession:
     """getOrCreate, launching the driver JVM with its archive flags when
     this call launches it."""
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
@@ -271,6 +308,15 @@ def _start(builder: SparkSession.Builder, conf: dict[str, str]) -> SparkSession:
     return session
 
 
+def _submitted_master() -> str | None:
+    """The master of a gateway that already exists: the one spark-submit
+    gave the Python driver it started, or a live session's."""
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkContext._jvm.java.lang.System.getProperty("spark.master")
+
+
 def get_spark(
     app_name: str = "megalista_spark",
     master: str | None = None,
@@ -279,15 +325,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-aware defaults.
 
-    On a real cluster, pass ``master=None`` and submit via spark-submit;
-    locally this defaults to ``local[$SPARK_GRAFT_CPUS]``. A driver JVM this
-    call launches starts from the class-data-sharing archive (module
-    docstring); the archive flags are added to the caller's
+    On a real cluster, pass ``master=None`` and submit via spark-submit,
+    whose master is kept; a process that launches its own driver JVM
+    defaults to ``local[$SPARK_GRAFT_CPUS]``. A driver JVM this call
+    launches starts from the class-data-sharing archive (module docstring);
+    the archive flags are added to the caller's
     ``spark.driver.extraJavaOptions``.
     """
     cpus = _cpus()
     if master is None:
-        master = f"local[{cpus}]"
+        master = _submitted_master() or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local: ~cores. AQE coalesces down when partitions are tiny.
         shuffle_partitions = cpus

@@ -47,6 +47,14 @@ def test_hash_field_strips_like_python(spark):
     assert got[0] == got[1] == got[2] == got[3]
 
 
+def test_hash_field_lowers_like_python_through_icu(spark):
+    # Python and ICU lower U+2C2F to U+2C5F; the JDK 17 case tables Spark
+    # uses without ICU leave it as it is
+    df = spark.createDataFrame([("\u2c2f",)], ["x"])
+    assert df.select(hash_field(F.col("x"))).first()[0] == _ref_hash("\u2c2f")
+    assert "\u2c2f".lower() == "\u2c5f"
+
+
 def test_hash_email_golden(spark):
     df = spark.createDataFrame([(v,) for v, _ in GOLDEN_EMAIL], ["x"])
     got = [r[0] for r in df.select(hash_email(F.col("x"))).collect()]

@@ -70,6 +70,22 @@ def test_custom_variables_aggregation_golden(spark):
     assert rows["999"]["customVariables"] is None
 
 
+def test_apply_keeps_dotted_column_names_for_custom_variables(spark):
+    # customVariables.type/.value are literal column names, not struct fields
+    df = spark.createDataFrame(
+        [("123", "g1", "10", "U1", "123"), ("123", "g1", "10", "U2", "456")],
+        ["uuid", "gclid", "value", "customVariables.type", "customVariables.value"],
+    )
+    applied = get_schema(DestinationType.CM_OFFLINE_CONVERSION).apply(df)
+    assert applied.columns == df.columns
+    assert dict(applied.dtypes)["value"] == "int"
+    rows = aggregate_custom_variables(applied).collect()
+    assert [(r["uuid"], r["value"]) for r in rows] == [("123", 10)]
+    assert [(x["type"], x["value"]) for x in rows[0]["customVariables"]] == [
+        ("U1", "123"), ("U2", "456"),
+    ]
+
+
 def test_transactional_type_wiring():
     assert get_schema(
         DestinationType.ADS_OFFLINE_CONVERSION

@@ -1,10 +1,12 @@
 """Driver JVM start-up: the class-data-sharing archive that `get_spark`
 builds once and starts from afterwards, the flags it launches the JVM with,
-and the core count it sizes the session by.
+the core count it sizes the session by, the master it keeps and the
+case-mapping class it initializes in the background.
 
-All but the last test run no JVM: they drive `_plan_launch`, `_publish` and
-`_start` against a fake Spark home, a cache under `tmp_path` and a fake
-session builder. The last one starts two fresh processes in turn."""
+Most tests run no JVM: they drive `_plan_launch`, `_publish` and `_start`
+against a fake Spark home, a cache under `tmp_path` and a fake session
+builder. The others use the test session's JVM or start fresh processes
+(a plain Python driver, or one that spark-submit starts), and say so."""
 
 from __future__ import annotations
 
@@ -13,10 +15,12 @@ import os
 import shutil
 import subprocess
 import sys
+import threading
 import time
 import types
 
 import pytest
+from py4j.protocol import Py4JError, Py4JNetworkError
 from pyspark import SparkContext
 
 from megalista_spark import session
@@ -281,3 +285,163 @@ def test_archive_is_built_by_one_process_and_mapped_by_the_next(tmp_path):
         assert mapped.stdout.split() == ["True"], mapped.stderr[-3000:]
     finally:
         shutil.rmtree(cache, ignore_errors=True)
+
+
+class _FakeContext:
+    """A SparkContext with a master and a JVM whose Class.forName records
+    the names it is asked for and then runs ``then`` (wait, raise)."""
+
+    def __init__(self, master, then=lambda: None):
+        self.master = master
+        self.loaded = []
+
+        def for_name(name):
+            self.loaded.append(name)
+            then()
+
+        lang = types.SimpleNamespace(Class=types.SimpleNamespace(forName=for_name))
+        self._jvm = types.SimpleNamespace(java=types.SimpleNamespace(lang=lang))
+
+
+class _ContextBuilder(_FakeBuilder):
+    """A builder whose getOrCreate puts up ``context`` as the active one."""
+
+    def __init__(self, conf, context):
+        super().__init__(conf)
+        self.context = context
+
+    def getOrCreate(self):
+        SparkContext._active_spark_context = self.context  # the home fixture restores it
+        return self
+
+
+def _case_mapping_threads():
+    return [t for t in threading.enumerate() if t.name == "case-mapping-init"]
+
+
+def test_new_local_context_initializes_case_mapping_on_one_daemon_thread(home, monkeypatch):
+    monkeypatch.setattr(SparkContext, "_gateway", object())  # as under spark-submit
+    release = threading.Event()
+    context = _FakeContext("local[2]", then=lambda: release.wait(60))
+    before = _case_mapping_threads()
+    session._start(_ContextBuilder(_conf(), context), _conf())
+    started = [t for t in _case_mapping_threads() if t not in before]
+    release.set()
+    assert len(started) == 1 and started[0].daemon
+    started[0].join(60)
+    assert context.loaded == [session._CASE_MAPPING_CLASS]
+    # a second call finds the context live and starts nothing
+    session._start(_ContextBuilder(_conf(), context), _conf())
+    assert context.loaded == [session._CASE_MAPPING_CLASS]
+    assert [t for t in _case_mapping_threads() if t not in before] == []
+
+
+def test_cluster_master_gets_no_case_mapping_thread(home, monkeypatch):
+    """On a cluster the executors run lower(), not the driver."""
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    context = _FakeContext("yarn")
+    before = _case_mapping_threads()
+    session._start(_ContextBuilder(_conf(), context), _conf())
+    assert [t for t in _case_mapping_threads() if t not in before] == []
+    assert context.loaded == []
+
+
+def _initialize_quietly(sc, capfd):
+    """Run the initializing thread to its end; assert that it raised nothing
+    (an uncaught exception goes to threading.excepthook) and printed
+    nothing."""
+    capfd.readouterr()
+    hooked = []
+    previous, threading.excepthook = threading.excepthook, hooked.append
+    try:
+        thread = session._initialize_case_mapping(sc)
+        thread.join(60)
+    finally:
+        threading.excepthook = previous
+    assert not thread.is_alive()
+    assert hooked == []
+    assert capfd.readouterr().err == ""
+
+
+@pytest.mark.parametrize("error", [Py4JNetworkError("Answer from Java side is empty"),
+                                   Py4JError("gateway is shutting down"), AttributeError("_jvm")])
+def test_case_mapping_failure_is_quiet(error, capfd):
+    def fail():
+        raise error
+
+    _initialize_quietly(_FakeContext("local[2]", then=fail), capfd)
+
+
+def test_unknown_case_mapping_class_is_quiet(spark, monkeypatch, capfd):
+    """A later Spark may rename the class: the JVM's ClassNotFoundException
+    goes nowhere."""
+    monkeypatch.setattr(session, "_CASE_MAPPING_CLASS", "org.example.NoSuchClass")
+    with pytest.raises(Py4JError):
+        spark.sparkContext._jvm.java.lang.Class.forName(session._CASE_MAPPING_CLASS)
+    _initialize_quietly(spark.sparkContext, capfd)
+
+
+_FRESH = """
+import io, json, sys, threading
+from pyspark import SparkContext
+from megalista_spark.session import get_spark
+
+def named():
+    return [t for t in threading.enumerate() if t.name == "case-mapping-init"]
+
+spark = get_spark()
+err, sys.stderr = sys.stderr, io.StringIO()
+first = named()
+get_spark()
+second = [t for t in named() if t not in first]
+out = {"master": spark.sparkContext.master, "threads": len(first),
+       "daemon": all(t.daemon for t in first), "second": len(second)}
+if sys.argv[1:] == ["stop"]:
+    # the gateway goes away under the running thread
+    out["alive_at_stop"] = first[0].is_alive()
+    proc = SparkContext._gateway.proc
+    spark.stop()
+    SparkContext._gateway.shutdown()
+    proc.stdin.close()
+    proc.wait(timeout=120)
+for t in first:
+    t.join(120)
+out["stderr"] = sys.stderr.getvalue()
+print(json.dumps(out))
+"""
+
+
+def _run_fresh(tmp_path, launcher, script_args=(), **env):
+    """Run _FRESH in a new process started by ``launcher``; its JSON line."""
+    script = tmp_path / "fresh.py"
+    script.write_text(_FRESH)
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g", "PYSPARK_PYTHON": sys.executable, **env,
+           "PYTHONPATH": os.pathsep.join(p for p in (_REPO, os.environ.get("PYTHONPATH")) if p)}
+    job = subprocess.run([*launcher, str(script), *script_args], env=env, cwd=tmp_path,
+                         stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, timeout=600)
+    assert job.returncode == 0, job.stderr[-3000:]
+    return json.loads(job.stdout.strip().splitlines()[-1])
+
+
+def test_fresh_session_initializes_case_mapping_then_survives_a_stopped_gateway(tmp_path):
+    """A fresh process: its new local session starts one daemon thread, a
+    second get_spark starts none, and stopping the gateway while the thread
+    waits on it prints nothing."""
+    conf = tmp_path / "conf"  # a plain start: no archive work in this test
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("# empty\n")
+    out = _run_fresh(tmp_path, [sys.executable], ["stop"], SPARK_GRAFT_CPUS="2",
+                     SPARK_CONF_DIR=str(conf))
+    assert out == {"master": "local[2]", "threads": 1, "daemon": True, "second": 0,
+                   "alive_at_stop": True, "stderr": ""}
+
+
+@pytest.mark.skipif(not os.path.exists(os.path.join(session._find_spark_home(), "bin", "spark-submit")),
+                    reason="needs spark-submit")
+def test_spark_submit_master_is_kept(tmp_path):
+    """get_spark(master=None) keeps spark-submit's master, not local[<cpus>];
+    the driver runs the tasks under it, so the thread starts there too."""
+    submit = os.path.join(session._find_spark_home(), "bin", "spark-submit")
+    out = _run_fresh(tmp_path, [submit, "--master", "local[2]"], SPARK_GRAFT_CPUS="3",
+                     PYSPARK_DRIVER_PYTHON=sys.executable)
+    assert out == {"master": "local[2]", "threads": 1, "daemon": True, "second": 0, "stderr": ""}
