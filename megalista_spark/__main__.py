@@ -39,13 +39,13 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--setup_sheet_id",
-        help="Spreadsheet id with execution info (requires the Sheets "
-        "client library — absent in this environment)",
+        help="Spreadsheet id with execution info (requires "
+        "google-api-python-client)",
     )
     p.add_argument(
         "--setup_firestore_collection",
-        help="Firestore collection with execution info (requires the "
-        "Firestore client library — absent in this environment)",
+        help="Firestore collection with execution info (requires "
+        "google-cloud-firestore)",
     )
     # OAuth (models/options.py OAUTH block) — consumed by live adapters
     p.add_argument("--client_id", default="")
@@ -97,24 +97,27 @@ def select_config_channel(args: argparse.Namespace) -> str:
 
 
 def _load_executions(args: argparse.Namespace):
+    from megalista_spark.sources import config_external
     from megalista_spark.sources.config_json import (
         load_executions_from_json,
         parse_config,
     )
 
     channel = select_config_channel(args)
-    if channel == "sheets":
+    try:
+        if channel == "sheets":
+            return config_external.load_executions_from_sheet(args.setup_sheet_id)
+        if channel == "firestore":
+            return config_external.load_executions_from_firestore(
+                args.setup_firestore_collection, reference_layout=True
+            )
+    except RuntimeError as exc:
+        if not isinstance(exc.__cause__, ImportError):
+            raise
         raise SystemExit(
-            "--setup_sheet_id needs the Google Sheets client library, which "
-            "is not available here; see sources/config_external.py for the "
-            "injectable fetcher seam"
-        )
-    if channel == "firestore":
-        raise SystemExit(
-            "--setup_firestore_collection needs the Firestore client "
-            "library, which is not available here; see "
-            "sources/config_external.py for the injectable fetcher seam"
-        )
+            f"the {channel.title()} client library is not available here "
+            f"({exc.__cause__})"
+        ) from exc
     if channel == "json_url":
         import urllib.request
 

@@ -166,7 +166,7 @@ class Execution:
 def group_executions_by_source(
     executions: Sequence[Execution],
 ) -> dict[str, list[Execution]]:
-    """Group jobs sharing a source so the source is read (and cached) once.
+    """Group jobs sharing a source so the source is read once.
 
     Reference steps/load_executions_step.py:25-31 + G1 in SURVEY §2.4.
     The config plane is tiny, so this is a driver-side dict, not a shuffle.

@@ -7,10 +7,12 @@ upload, control-write) → consolidate summary → exit 1 if any error.
 
 Spark shape:
 - the config plane stays on the driver (it is tiny);
-- each source is READ ONCE, in the calling thread, and cached across the
-  branches that share it (reference reads per source group; SURVEY §4
-  "read-once-per-source"); the cache is released when the source's last
-  branch finishes;
+- each source is READ ONCE, in the calling thread (reference reads per
+  source group; SURVEY §4 "read-once-per-source"): ``read_raw`` fixes its
+  file listing and schema, with one schema-inference job, and every branch
+  of the source plans from that one DataFrame. It is not cached, so each
+  branch's upload scans only the columns its projection keeps, and lists
+  no files and infers no schema again;
 - each branch is lazy DataFrame work ending in one upload action, which
   returns the branch's row, accepted and error counts. In a transactional
   branch the upload tasks also stage the keys they got accepted under the
@@ -35,7 +37,6 @@ from __future__ import annotations
 
 import json
 import logging
-import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -180,8 +181,7 @@ class Pipeline:
         started = time.perf_counter()
         results: list[BranchResult | None] = []
         todo: dict[int, tuple[Execution, Any, DataFrame]] = {}  # by results index
-        cached_left: dict[str, int] = {}  # branches yet to finish per cached scan
-        for source_name, execs in group_executions_by_source(self.executions).items():
+        for execs in group_executions_by_source(self.executions).values():
             ds = get_data_source(self.spark, execs[0].source, self.bq_ops_dataset)
             try:
                 raw = ds.read_raw()
@@ -191,30 +191,17 @@ class Pipeline:
                         BranchResult(e, errors=[f"source read failed: {exc}"])
                     )
                 continue
-            # read-once-per-source: cache only when >1 branch shares the scan
-            if len(execs) > 1:
-                raw = raw.cache()
-                cached_left[source_name] = len(execs)
             for e in execs:
                 todo[len(results)] = (e, ds, raw)
                 results.append(None)
 
-        lock = threading.Lock()
         sc = self.spark.sparkContext
 
         def run_chain(chain: list[int]) -> None:
             for i in chain:
                 e, ds, raw = todo[i]
                 sc.setJobDescription(f"{e.source.name} → {e.destination.name}")
-                try:
-                    results[i] = self._run_branch(e, ds, raw)
-                finally:
-                    if e.source.name in cached_left:
-                        with lock:
-                            cached_left[e.source.name] -= 1
-                            last = cached_left[e.source.name] == 0
-                        if last:
-                            raw.unpersist()
+                results[i] = self._run_branch(e, ds, raw)
 
         chains = _chains({i: _chain_keys(e) for i, (e, _, _) in todo.items()})
         if chains:

@@ -2,9 +2,9 @@
 
 The defaults here are chosen for the 100 TB design point:
 - AQE on (runtime coalescing, skew-join splitting, dynamic join strategy)
-- shuffle partitions sized to cores locally; on a real cluster AQE
-  coalesces from a high initial number, so we set the *initial* number
-  high and let AQE shrink it.
+- shuffle partitions sized to cores locally; on a real cluster set the
+  *initial* number high with spark-submit, whose keys are kept (see
+  ``get_spark``), and let AQE shrink it.
 - Arrow enabled for the (rare) pandas-UDF paths.
 - session timezone pinned to UTC so results are reproducible and
   comparable with external oracles (DuckDB timestamps are UTC-naive).
@@ -63,7 +63,7 @@ import subprocess
 import threading
 from dataclasses import dataclass
 
-from pyspark import SparkContext
+from pyspark import SparkConf, SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -308,13 +308,15 @@ def _get_or_create(builder: SparkSession.Builder, conf: dict[str, str]) -> Spark
     return session
 
 
-def _submitted_master() -> str | None:
-    """The master of a gateway that already exists: the one spark-submit
-    gave the Python driver it started, or a live session's."""
+def _submitted_conf() -> dict[str, str]:
+    """The Spark conf of a gateway that already exists: what spark-submit
+    gave the Python driver it started (``--master``, ``--conf``,
+    ``spark-defaults.conf``), or a live session's launch conf. Empty when
+    this process has no gateway yet."""
     if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        return None
+        return {}
     SparkContext._ensure_initialized()
-    return SparkContext._jvm.java.lang.System.getProperty("spark.master")
+    return dict(SparkConf().getAll())
 
 
 def get_spark(
@@ -325,22 +327,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-aware defaults.
 
-    On a real cluster, pass ``master=None`` and submit via spark-submit,
-    whose master is kept; a process that launches its own driver JVM
-    defaults to ``local[$SPARK_GRAFT_CPUS]``. A driver JVM this call
-    launches starts from the class-data-sharing archive (module docstring);
-    the archive flags are added to the caller's
+    On a real cluster, submit via spark-submit and pass ``master=None``: a
+    key that spark-submit set (its master, its ``--conf`` values) keeps its
+    value over the defaults below, and a process that launches its own
+    driver JVM defaults to ``local[$SPARK_GRAFT_CPUS]``. ``master``,
+    ``shuffle_partitions`` and ``extra_conf`` win over both. A driver JVM
+    this call launches starts from the class-data-sharing archive (module
+    docstring); the archive flags are added to the caller's
     ``spark.driver.extraJavaOptions``.
     """
     cpus = _cpus()
-    if master is None:
-        master = _submitted_master() or f"local[{cpus}]"
-    if shuffle_partitions is None:
+    defaults = {
+        "spark.master": f"local[{cpus}]",
         # local: ~cores. AQE coalesces down when partitions are tiny.
-        shuffle_partitions = cpus
-
-    conf = {
-        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.shuffle.partitions": str(cpus),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -354,10 +354,6 @@ def get_spark(
         "spark.sql.session.timeZone": "UTC",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
-        # split small single-file inputs across cores (a lone parquet file
-        # would otherwise scan in ~1 task locally); harmless on clusters
-        # where inputs arrive multi-split anyway
-        "spark.sql.files.minPartitionNum": str(cpus),
         "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
         "spark.ui.enabled": "false",
         "spark.sql.parquet.filterPushdown": "true",
@@ -369,9 +365,15 @@ def get_spark(
         # TIMESTAMP_NTZ, so timestamp arithmetic (unix_micros, watermarks)
         # and oracle renderings behave identically for both encodings
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        **(extra_conf or {}),
     }
-    builder = SparkSession.builder.appName(app_name).master(master)
+    submitted = _submitted_conf()
+    conf = {k: v for k, v in defaults.items() if k not in submitted}
+    if master is not None:
+        conf["spark.master"] = master
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    builder = SparkSession.builder.appName(app_name)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return _start(builder, conf)

@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from megalista_spark.functions.hashing import _PY_WHITESPACE
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -61,9 +63,11 @@ def register_sql_functions(spark: SparkSession) -> None:
           substr(lower(e), length(substring_index(lower(e), '@', 1)) + 2))
         ELSE e END"""
     )
+    # twin of hash_field: trims what str.strip() strips, as \uXXXX escapes
+    whitespace = "".join(f"\\u{ord(c):04x}" for c in _PY_WHITESPACE)
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION hash_pii(x STRING) "
-        "RETURNS STRING RETURN sha2(lower(trim(x)), 256)"
+        f"RETURNS STRING RETURN sha2(lower(btrim(x, '{whitespace}')), 256)"
     )
 
 

@@ -169,7 +169,8 @@ def stream_sink_foreach_batch(
     """Drive the batch SinkExecutor from a stream: each micro-batch is
     uploaded with the same chunk/retry/partial-failure semantics. Replays
     are NOT idempotent: ``epoch_id`` is not used to skip committed epochs,
-    so an epoch replayed after a failure is sent again (ROADMAP item 3).
+    so an epoch replayed after a failure is sent again (ROADMAP,
+    "Exactly-once under failure").
 
     Returns the started StreamingQuery.
     """

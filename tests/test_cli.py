@@ -39,6 +39,43 @@ def test_unavailable_channels_fail_cleanly():
         main(["--setup_firestore_collection", "col"])
 
 
+def test_sheet_channel_loads_executions_through_the_sheets_client(monkeypatch):
+    """With a (stub) ``googleapiclient.discovery`` importable, the CLI's
+    sheet channel reads the account cells and the three ranges through it."""
+    import sys
+    import types
+
+    from megalista_spark.__main__ import _load_executions
+
+    ranges = {
+        "GoogleAdsAccountId": [["111-222"]],
+        "SourcesRange": [["s1", "FILE", "PARQUET", "/data/s1"]],
+        "DestinationsRange": [["d1", "ADS_OFFLINE_CONVERSION", "conv"]],
+        "SchedulesRange": [["YES", "s1", "d1"]],
+    }
+    asked = []
+
+    class Values:
+        def get(self, spreadsheetId, range):
+            asked.append((spreadsheetId, range))
+            return types.SimpleNamespace(execute=lambda: {"values": ranges.get(range, [])})
+
+    service = types.SimpleNamespace(
+        spreadsheets=lambda: types.SimpleNamespace(values=Values)
+    )
+    discovery = types.ModuleType("googleapiclient.discovery")
+    discovery.build = lambda name, version: service
+    package = types.ModuleType("googleapiclient")
+    package.discovery = discovery
+    monkeypatch.setitem(sys.modules, "googleapiclient", package)
+    monkeypatch.setitem(sys.modules, "googleapiclient.discovery", discovery)
+
+    execs = _load_executions(_args(["--setup_sheet_id", "sheet1"]))
+    assert [(e.source.name, e.destination.name) for e in execs] == [("s1", "d1")]
+    assert execs[0].account_config.google_ads_account_id == "111222"
+    assert ("sheet1", "SchedulesRange") in asked
+
+
 def test_cli_end_to_end_dry_run(spark, tmp_path):
     src = str(tmp_path / "conv")
     spark.createDataFrame(

@@ -185,7 +185,7 @@ def _persistent_rdds(spark) -> int:
 
 def test_run_releases_every_cache(spark, tmp_path, conversions_path):
     """A transactional and a non-transactional branch on one shared source:
-    the run unpersists the shared scan and each branch's upload."""
+    the run leaves no cache behind; each branch unpersists its upload."""
     cfg = write_config(
         tmp_path,
         conversions_path,
@@ -199,6 +199,42 @@ def test_run_releases_every_cache(spark, tmp_path, conversions_path):
     assert r.exit_code == 0
     assert [b.rows_uploaded for b in r.branches] == [20, 20]
     assert _persistent_rdds(spark) == before
+
+
+class CacheProbeTransport(Transport):
+    """Accepts every row. Its ``before_run``, on the driver, appends to
+    ``seen`` whether Spark's cache manager is empty."""
+
+    def __init__(self, spark, seen: list):
+        self.spark, self.seen = spark, seen
+
+    def __getstate__(self):
+        return {}  # the upload tasks need neither the session nor the record
+
+    def send(self, payload, context):
+        return payload
+
+    def before_run(self, context):
+        self.seen.append(self.spark._jsparkSession.sharedState().cacheManager().isEmpty())
+
+
+def test_branches_plan_from_the_uncached_source_scan(spark, tmp_path, one_partition_source):
+    """Two transactional branches on one source share its control table, so
+    they run one after the other and no other upload's cache is live when
+    each starts: both find nothing cached, as the shared source scan is not
+    cached."""
+    src = one_partition_source("conv")
+    oci = DestinationType.ADS_OFFLINE_CONVERSION
+    spark.catalog.clearCache()  # what earlier tests may have left cached
+    seen: list = []
+    r = Pipeline(
+        spark,
+        _executions([(src, "oci1", oci), (src, "oci2", oci)]),
+        lambda e: CacheProbeTransport(spark, seen),
+    ).run()
+    assert r.exit_code == 0
+    assert [b.rows_uploaded for b in r.branches] == [20, 0]
+    assert seen == [True, True]
 
 
 class KeyLogTransport(Transport):
@@ -366,7 +402,8 @@ def test_retried_upload_task_commits_each_key_once(tmp_path, conversions_path):
     staging its keys. The control table then holds each accepted key once:
     only the winning attempts' files are committed, and the failed ones'
     are deleted with the staging directory. No upload worker imports
-    pandas. (The retry sends its rows again; see ROADMAP item 3.)"""
+    pandas. (The retry sends its rows again; see ROADMAP, "Exactly-once
+    under failure".)"""
     import subprocess
     import sys
 
@@ -667,10 +704,10 @@ def test_run_logs_one_line_per_branch_and_per_run(spark, tmp_path, conversions_p
 
 
 def test_many_chains_fill_every_result_and_release_every_scan(spark, tmp_path, one_partition_source):
-    """Nine independent branches over three cached sources on a pool capped
+    """Nine independent branches over three shared sources on a pool capped
     at the task slots, with the interpreter switching threads as often as
-    it can: every result lands in its config slot, and a lost update of a
-    source's branches-left count would leave its scan cached."""
+    it can: every result lands in its config slot, and no branch leaves a
+    cache behind."""
     import sys
 
     sources = [one_partition_source(f"s{i}") for i in range(3)]

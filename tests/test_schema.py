@@ -110,6 +110,8 @@ def test_sql_function_registry_matches_column_twins(spark):
         "no-at-sign",
         "a@b@gmail.com",
         "MiXeD@GMAIL.COM",
+        "\tpadded@x.com\n",
+        "\u00a0nbsp@x.com",
     ]
     df = spark.createDataFrame([(c,) for c in cases], ["e"])
     df.createOrReplaceTempView("_sqlfn_cases")

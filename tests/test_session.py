@@ -395,7 +395,9 @@ first = named()
 get_spark()
 second = [t for t in named() if t not in first]
 out = {"master": spark.sparkContext.master, "threads": len(first),
-       "daemon": all(t.daemon for t in first), "second": len(second)}
+       "daemon": all(t.daemon for t in first), "second": len(second),
+       "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+       "min_partitions": spark.conf.get("spark.sql.files.minPartitionNum", None)}
 if sys.argv[1:] == ["stop"]:
     # the gateway goes away under the running thread
     out["alive_at_stop"] = first[0].is_alive()
@@ -433,15 +435,19 @@ def test_fresh_session_initializes_case_mapping_then_survives_a_stopped_gateway(
     out = _run_fresh(tmp_path, [sys.executable], ["stop"], SPARK_GRAFT_CPUS="2",
                      SPARK_CONF_DIR=str(conf))
     assert out == {"master": "local[2]", "threads": 1, "daemon": True, "second": 0,
+                   "shuffle_partitions": "2", "min_partitions": None,
                    "alive_at_stop": True, "stderr": ""}
 
 
 @pytest.mark.skipif(not os.path.exists(os.path.join(session._find_spark_home(), "bin", "spark-submit")),
                     reason="needs spark-submit")
 def test_spark_submit_master_is_kept(tmp_path):
-    """get_spark(master=None) keeps spark-submit's master, not local[<cpus>];
-    the driver runs the tasks under it, so the thread starts there too."""
+    """get_spark(master=None) keeps spark-submit's master, not local[<cpus>],
+    and the shuffle partitions spark-submit set, not <cpus>; the driver runs
+    the tasks under that master, so the thread starts there too."""
     submit = os.path.join(session._find_spark_home(), "bin", "spark-submit")
-    out = _run_fresh(tmp_path, [submit, "--master", "local[2]"], SPARK_GRAFT_CPUS="3",
-                     PYSPARK_DRIVER_PYTHON=sys.executable)
-    assert out == {"master": "local[2]", "threads": 1, "daemon": True, "second": 0, "stderr": ""}
+    out = _run_fresh(tmp_path, [submit, "--master", "local[2]",
+                                "--conf", "spark.sql.shuffle.partitions=7"],
+                     SPARK_GRAFT_CPUS="3", PYSPARK_DRIVER_PYTHON=sys.executable)
+    assert out == {"master": "local[2]", "threads": 1, "daemon": True, "second": 0,
+                   "shuffle_partitions": "7", "min_partitions": None, "stderr": ""}
