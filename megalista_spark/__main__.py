@@ -40,14 +40,16 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--setup_sheet_id",
         help="Spreadsheet id with execution info (requires "
-        "google-api-python-client)",
+        "google-api-python-client; signs in with the OAuth flags below when "
+        "any is given, else with Application Default Credentials)",
     )
     p.add_argument(
         "--setup_firestore_collection",
         help="Firestore collection with execution info (requires "
-        "google-cloud-firestore)",
+        "google-cloud-firestore; signs in with Application Default "
+        "Credentials, not the OAuth flags)",
     )
-    # OAuth (models/options.py OAUTH block) — consumed by live adapters
+    # OAuth (models/options.py OAUTH block) — the Sheets config channel's sign-in
     p.add_argument("--client_id", default="")
     p.add_argument("--client_secret", default="")
     p.add_argument("--refresh_token", default="")
@@ -106,7 +108,12 @@ def _load_executions(args: argparse.Namespace):
     channel = select_config_channel(args)
     try:
         if channel == "sheets":
-            return config_external.load_executions_from_sheet(args.setup_sheet_id)
+            oauth = OAuthCredentials(
+                args.client_id, args.client_secret, args.access_token, args.refresh_token
+            )
+            return config_external.load_executions_from_sheet(
+                args.setup_sheet_id, credentials=oauth if oauth != OAuthCredentials() else None
+            )
         if channel == "firestore":
             return config_external.load_executions_from_firestore(
                 args.setup_firestore_collection, reference_layout=True
@@ -136,11 +143,6 @@ def main(argv: list[str] | None = None) -> int:
         hconf.set("fs.s3a.access.key", args.aws_access_key_id)
         hconf.set("fs.s3a.secret.key", args.aws_secret_access_key)
 
-    # credentials object travels to whatever live transport adapter the
-    # deployment wires (ADAPTERS.md §1-2); the default remains dry-run
-    _ = OAuthCredentials(
-        args.client_id, args.client_secret, args.access_token, args.refresh_token
-    )
     notifier = (
         GmailErrorNotifier(args.errors_destination_emails)
         if args.notify_errors_by_email

@@ -329,8 +329,10 @@ def get_spark(
 
     On a real cluster, submit via spark-submit and pass ``master=None``: a
     key that spark-submit set (its master, its ``--conf`` values) keeps its
-    value over the defaults below, and a process that launches its own
-    driver JVM defaults to ``local[$SPARK_GRAFT_CPUS]``. ``master``,
+    value over the defaults below. Only a process that launches its own
+    driver JVM gets the CPU-derived ``local[$SPARK_GRAFT_CPUS]`` master and
+    as many shuffle partitions; under spark-submit an unset
+    ``spark.sql.shuffle.partitions`` keeps Spark's default. ``master``,
     ``shuffle_partitions`` and ``extra_conf`` win over both. A driver JVM
     this call launches starts from the class-data-sharing archive (module
     docstring); the archive flags are added to the caller's
@@ -367,6 +369,10 @@ def get_spark(
         "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     }
     submitted = _submitted_conf()
+    if submitted:
+        # the launcher sized the job, not this host's CPU count; a key it
+        # left unset keeps Spark's default (200 shuffle partitions)
+        del defaults["spark.master"], defaults["spark.sql.shuffle.partitions"]
     conf = {k: v for k, v in defaults.items() if k not in submitted}
     if master is not None:
         conf["spark.master"] = master

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from typing import Any, Callable
 
+from megalista_spark.models.credentials import OAuthCredentials
 from megalista_spark.models.execution import (
     AccountConfig,
     Destination,
@@ -100,17 +101,26 @@ def load_account_config_from_sheet(
     )
 
 
-def _live_sheets_fetcher() -> Callable[[str, str], list[list[str]]]:
+def _live_sheets_fetcher(
+    credentials: OAuthCredentials | None = None,
+) -> Callable[[str, str], list[list[str]]]:
     """google-api-python-client fetcher (reference asks Sheets for named
-    ranges via the same values().get API its SheetsConfig wraps)."""
-    try:
-        from googleapiclient.discovery import build  # type: ignore
-    except ImportError as exc:
-        raise RuntimeError(
-            "google-api-python-client not available; pass fetch_values"
-        ) from exc
+    ranges via the same values().get API its SheetsConfig wraps). It signs
+    in as the OAuth user of ``credentials``, as the reference does, or with
+    Application Default Credentials when there are none."""
+    if credentials is not None:
+        from megalista_spark.sinks.adapters import build_discovery_service
 
-    service = build("sheets", "v4")
+        scopes = ("https://www.googleapis.com/auth/spreadsheets.readonly",)
+        service = build_discovery_service("sheets", "v4", scopes, credentials)
+    else:
+        try:
+            from googleapiclient.discovery import build  # type: ignore
+        except ImportError as exc:
+            raise RuntimeError(
+                "google-api-python-client not available; pass fetch_values"
+            ) from exc
+        service = build("sheets", "v4")
 
     def fetch_values(sid: str, rng: str) -> list[list[str]]:
         resp = (
@@ -128,14 +138,16 @@ def load_executions_from_sheet(
     sheet_id: str,
     account: AccountConfig | None = None,
     fetch_values: Callable[[str, str], list[list[str]]] | None = None,
+    credentials: OAuthCredentials | None = None,
 ) -> list[Execution]:
     """``fetch_values(sheet_id, named_range) -> rows``. Without an injected
-    fetcher this needs google-api-python-client (not bundled here).
+    fetcher this needs google-api-python-client (not bundled here), which
+    signs in with ``credentials`` (see ``_live_sheets_fetcher``).
     When ``account`` is omitted the account config is read from the
     sheet's named cells (reference :47-59) through the same fetcher
     (single-cell ranges → first cell; a missing range → None)."""
     if fetch_values is None:
-        fetch_values = _live_sheets_fetcher()
+        fetch_values = _live_sheets_fetcher(credentials)
 
     if account is None:
 

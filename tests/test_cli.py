@@ -5,6 +5,8 @@ megalista_spark` run shape (reference main.py:53-121)."""
 from __future__ import annotations
 
 import json
+import sys
+import types
 
 import pytest
 
@@ -39,21 +41,16 @@ def test_unavailable_channels_fail_cleanly():
         main(["--setup_firestore_collection", "col"])
 
 
-def test_sheet_channel_loads_executions_through_the_sheets_client(monkeypatch):
-    """With a (stub) ``googleapiclient.discovery`` importable, the CLI's
-    sheet channel reads the account cells and the three ranges through it."""
-    import sys
-    import types
-
-    from megalista_spark.__main__ import _load_executions
-
+def _stub_sheets(monkeypatch):
+    """A stub ``googleapiclient.discovery`` serving one sheet; returns the
+    ranges asked for and the keyword arguments ``build`` was called with."""
     ranges = {
         "GoogleAdsAccountId": [["111-222"]],
         "SourcesRange": [["s1", "FILE", "PARQUET", "/data/s1"]],
         "DestinationsRange": [["d1", "ADS_OFFLINE_CONVERSION", "conv"]],
         "SchedulesRange": [["YES", "s1", "d1"]],
     }
-    asked = []
+    asked, built = [], []
 
     class Values:
         def get(self, spreadsheetId, range):
@@ -63,17 +60,62 @@ def test_sheet_channel_loads_executions_through_the_sheets_client(monkeypatch):
     service = types.SimpleNamespace(
         spreadsheets=lambda: types.SimpleNamespace(values=Values)
     )
+
+    def build(name, version, **kwargs):
+        built.append((name, version, kwargs))
+        return service
+
     discovery = types.ModuleType("googleapiclient.discovery")
-    discovery.build = lambda name, version: service
+    discovery.build = build
     package = types.ModuleType("googleapiclient")
     package.discovery = discovery
     monkeypatch.setitem(sys.modules, "googleapiclient", package)
     monkeypatch.setitem(sys.modules, "googleapiclient.discovery", discovery)
+    return asked, built
 
+
+def test_sheet_channel_loads_executions_through_the_sheets_client(monkeypatch):
+    """With a (stub) ``googleapiclient.discovery`` importable, the CLI's
+    sheet channel reads the account cells and the three ranges through it;
+    with no OAuth flag it builds the client on Application Default
+    Credentials."""
+    from megalista_spark.__main__ import _load_executions
+
+    asked, built = _stub_sheets(monkeypatch)
     execs = _load_executions(_args(["--setup_sheet_id", "sheet1"]))
     assert [(e.source.name, e.destination.name) for e in execs] == [("s1", "d1")]
     assert execs[0].account_config.google_ads_account_id == "111222"
     assert ("sheet1", "SchedulesRange") in asked
+    assert built == [("sheets", "v4", {})]
+
+
+def test_sheet_channel_signs_in_with_the_oauth_flags(monkeypatch):
+    """The CLI's OAuth flags reach the Sheets client as user credentials,
+    as the reference's SheetsConfig builds them."""
+    from megalista_spark.__main__ import _load_executions
+
+    _, built = _stub_sheets(monkeypatch)
+
+    class Credentials:
+        def __init__(self, **kwargs):
+            self.kwargs = kwargs
+
+    oauth2 = types.ModuleType("google.oauth2")
+    oauth2.credentials = types.ModuleType("google.oauth2.credentials")
+    oauth2.credentials.Credentials = Credentials
+    for name, module in (("google", types.ModuleType("google")), ("google.oauth2", oauth2),
+                         ("google.oauth2.credentials", oauth2.credentials)):
+        monkeypatch.setitem(sys.modules, name, module)
+
+    execs = _load_executions(_args(["--setup_sheet_id", "sheet1", "--client_id", "cid",
+                                    "--client_secret", "sec", "--refresh_token", "rt"]))
+    assert [e.destination.name for e in execs] == ["d1"]
+    [(name, version, kwargs)] = built
+    assert (name, version) == ("sheets", "v4")
+    creds = kwargs["credentials"].kwargs
+    assert (creds["client_id"], creds["client_secret"], creds["refresh_token"], creds["token"]) == (
+        "cid", "sec", "rt", "")
+    assert creds["scopes"] == ["https://www.googleapis.com/auth/spreadsheets.readonly"]
 
 
 def test_cli_end_to_end_dry_run(spark, tmp_path):

@@ -451,3 +451,15 @@ def test_spark_submit_master_is_kept(tmp_path):
                      SPARK_GRAFT_CPUS="3", PYSPARK_DRIVER_PYTHON=sys.executable)
     assert out == {"master": "local[2]", "threads": 1, "daemon": True, "second": 0,
                    "shuffle_partitions": "7", "min_partitions": None, "stderr": ""}
+
+
+@pytest.mark.skipif(not os.path.exists(os.path.join(session._find_spark_home(), "bin", "spark-submit")),
+                    reason="needs spark-submit")
+def test_spark_submit_without_shuffle_conf_gets_sparks_default(tmp_path):
+    """Under spark-submit the driver host's CPU count sizes nothing: a job
+    that sets no ``spark.sql.shuffle.partitions`` gets Spark's default
+    (200, which AQE coalesces), not SPARK_GRAFT_CPUS."""
+    submit = os.path.join(session._find_spark_home(), "bin", "spark-submit")
+    out = _run_fresh(tmp_path, [submit, "--master", "local[2]"],
+                     SPARK_GRAFT_CPUS="3", PYSPARK_DRIVER_PYTHON=sys.executable)
+    assert (out["master"], out["shuffle_partitions"]) == ("local[2]", "200")
