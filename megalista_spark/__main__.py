@@ -57,8 +57,8 @@ def build_parser() -> argparse.ArgumentParser:
     # per-API keys
     p.add_argument("--developer_token", default="", help="Google Ads API")
     p.add_argument("--appsflyer_dev_key", default="", help="AppsFlyer S2S API")
-    # BigQuery ops dataset: holds the control tables of BigQuery sources
-    # and selects BigQuery-native dedup for them
+    # BigQuery ops dataset: holds the control tables of BigQuery sources;
+    # required for transactional BigQuery sources, which dedup in BigQuery
     p.add_argument("--bq_ops_dataset", default="")
     p.add_argument("--bq_location", default="")
     # AWS S3 — wired straight into the Hadoop FS config, the Spark
@@ -115,9 +115,7 @@ def _load_executions(args: argparse.Namespace):
                 args.setup_sheet_id, credentials=oauth if oauth != OAuthCredentials() else None
             )
         if channel == "firestore":
-            return config_external.load_executions_from_firestore(
-                args.setup_firestore_collection, reference_layout=True
-            )
+            return config_external.load_executions_from_firestore(args.setup_firestore_collection)
     except RuntimeError as exc:
         if not isinstance(exc.__cause__, ImportError):
             raise

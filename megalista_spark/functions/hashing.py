@@ -132,11 +132,7 @@ def _shaped(df: DataFrame, shaped: dict[str, Column], consumed: set[str]) -> Dat
     return out.where(reduce(operator.or_, [quoted[c].isNotNull() for c in names]))
 
 
-def ads_pii_expressions(
-    df: DataFrame,
-    hash_enabled: bool = True,
-    address_fields: tuple[str, str, str, str] = _ADDRESS_FIELDS,
-) -> DataFrame:
+def ads_pii_expressions(df: DataFrame, hash_enabled: bool = True) -> DataFrame:
     """Google Ads customer-match PII shaping.
 
     Reference mappers/ads_user_list_pii_hashing_mapper.py:26-79:
@@ -161,8 +157,8 @@ def ads_pii_expressions(
     if "phone" in cols:
         shaped["hashed_phone_number"] = _hash_if_present(F.col("phone"), hash_enabled)
         consumed.add("phone")
-    first, last, country, zipc = address_fields
-    if all(c in cols for c in address_fields):
+    first, last, country, zipc = _ADDRESS_FIELDS
+    if all(c in cols for c in _ADDRESS_FIELDS):
         all_present = (
             _data_present(F.col(first))
             & _data_present(F.col(last))
@@ -178,7 +174,7 @@ def ads_pii_expressions(
                 F.col(zipc).alias("postal_code"),
             ),
         )
-        consumed.update(address_fields)
+        consumed.update(_ADDRESS_FIELDS)
     if "mobile_device_id" in cols:
         shaped["mobile_id"] = F.when(
             _data_present(F.col("mobile_device_id")), F.col("mobile_device_id")

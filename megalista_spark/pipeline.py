@@ -157,7 +157,7 @@ class RunResult:
 
 class Pipeline:
     """``bq_ops_dataset`` (``--bq_ops_dataset``) holds the control tables of
-    BigQuery sources and selects BigQuery-native dedup for them."""
+    BigQuery sources; transactional BigQuery sources require it."""
 
     def __init__(
         self,

@@ -91,11 +91,10 @@ class DestinationSchema:
         """Columns of the source that match a declared pattern, in source order."""
         return [c for c in df_columns if any(s.matches(c) for s in self.columns)]
 
-    def apply(self, df: DataFrame, validate: bool = True) -> DataFrame:
+    def apply(self, df: DataFrame) -> DataFrame:
         """validate → project → cast. The whole contract as one Catalyst-
         optimizable transformation (select reaches the parquet scan)."""
-        if validate:
-            self.validate(df.columns)
+        self.validate(df.columns)
         # quoted, so a literal name such as customVariables.type is one
         # column, not a struct field
         keep = {c: F.col("`" + c.replace("`", "``") + "`") for c in self.resolve_columns(df.columns)}

@@ -90,7 +90,8 @@ RATE_LIMITS: dict[DestinationType, float] = {
 
 _STATUS_COL = "__megalista_status"
 _ERROR_COL = "__megalista_error"
-# the name of the key file a task staged, on the first row of its last chunk
+# the name of the key file a task staged, on the first row of the chunk
+# whose accepted rows open it
 _STAGED_COL = "__megalista_staged"
 _OK, _REJECTED, _FAILED = 0, 1, 2  # values of the status column
 # local property carrying the number of upload tasks that run at once to
@@ -224,32 +225,34 @@ class _StagedKeys:
         self.ok = pa.Array.from_buffers(pa.int8(), 1, [None, pa.py_buffer(bytes([_OK]))])[0]
         self.writer: Any = None
 
-    def add(self, chunk: Any, status: Any) -> None:
+    def add(self, chunk: Any, status: Any) -> str | None:
+        """Stage the keys of ``chunk``'s accepted rows; returns the file's
+        name when they are the first the file gets."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         keys = chunk.select(list(self.staging.keys)).filter(pc.equal(status, self.ok))
         if keys.num_rows == 0:
-            return
+            return None
         stamp = pa.Array.from_buffers(
             pa.timestamp("us", "UTC"), keys.num_rows, [None, pa.py_buffer(self.micros * keys.num_rows)]
         )
         keys = keys.add_column(0, "timestamp", stamp)
-        if self.writer is None:
+        opened = self.writer is None
+        if opened:
             import pyarrow.parquet as pq
 
             self.fs, self.dir = self.staging.filesystem()
             self.fs.create_dir(self.dir, recursive=True)
             self.writer = pq.ParquetWriter(f"{self.dir}/.{self.name}", keys.schema, filesystem=self.fs)
         self.writer.write_table(keys)
+        return self.name if opened else None
 
-    def finish(self) -> str | None:
-        """The name of the complete file, or None when nothing was staged."""
-        if self.writer is None:
-            return None
-        self.writer.close()
-        self.fs.move(f"{self.dir}/.{self.name}", f"{self.dir}/{self.name}")
-        return self.name
+    def finish(self) -> None:
+        """Complete the file, if anything was staged."""
+        if self.writer is not None:
+            self.writer.close()
+            self.fs.move(f"{self.dir}/.{self.name}", f"{self.dir}/{self.name}")
 
 
 @dataclass
@@ -362,9 +365,10 @@ class SinkExecutor:
             transport = pickle.loads(shipped)
             transport.open(ctx)
             try:
-                # the last chunk is held back until the staged file is
-                # complete, so its first row can carry the file's name
-                last = None
+                # each chunk goes out at once; the key file's name rides on
+                # the first row of the chunk that opened it. Only attempts
+                # that succeed count in the observed metrics, and those have
+                # run this generator to its end, through finish()
                 for chunk_index, table in enumerate(_chunks(batches, batch_size), 1):
                     ctx["chunk_index"] = chunk_index
                     ctx["iteration"] = chunk_index  # reference Batch.iteration
@@ -400,20 +404,15 @@ class SinkExecutor:
                     status = pa.Array.from_buffers(
                         pa.int8(), len(rows), [None, pa.py_buffer(status)]
                     )
-                    if key_file is not None:
-                        key_file.add(table, status)
-                    if last is not None:
-                        yield from last.append_column(
-                            _STAGED_COL, _name_column(None, last.num_rows)
-                        ).to_batches()
-                    last = table.append_column(_STATUS_COL, status).append_column(
-                        _ERROR_COL, errors
+                    opened = key_file.add(table, status) if key_file is not None else None
+                    yield from (
+                        table.append_column(_STATUS_COL, status)
+                        .append_column(_ERROR_COL, errors)
+                        .append_column(_STAGED_COL, _name_column(opened, len(rows)))
+                        .to_batches()
                     )
-                if last is not None:
-                    name = key_file.finish() if key_file is not None else None
-                    yield from last.append_column(
-                        _STAGED_COL, _name_column(name, last.num_rows)
-                    ).to_batches()
+                if key_file is not None:
+                    key_file.finish()
             finally:
                 transport.close(ctx)
 

@@ -1,10 +1,9 @@
 """BigQuery-side transactional control: the BQ twin of the parquet
 ``ControlTable`` (reference big_query_data_source.py:58-202).
 
-A BigQuery source without an ops dataset dedups by connector read +
-Spark-side broadcast anti-join (sources/data_source.py). With an ops
-dataset (``--bq_ops_dataset``) its control table lives in BigQuery and
-this module supplies the reference's BQ-NATIVE semantics:
+A transactional BigQuery source requires an ops dataset
+(``--bq_ops_dataset``), as the reference does: its control table lives
+there, and this module supplies the reference's BQ-NATIVE semantics:
 
 - control-table DDL with ``PARTITION BY _PARTITIONDATE`` and
   ``partition_expiration_days=15`` (reference :118-148) — BigQuery
@@ -157,8 +156,15 @@ def control_schema_fields(transactional_type: TransactionalType) -> tuple:
     raise ValueError(f"Unrecognized TransactionalType: {transactional_type}")
 
 
+def require_ops_dataset(ops_dataset: str) -> None:
+    """reference __init__(:48-52) refuses transactional BQ without an ops
+    dataset."""
+    if not ops_dataset:
+        raise ValueError("bq_ops_dataset is required for transactional BigQuery sources")
+
+
 def bigquery_client() -> BigQueryJobClient:
-    """The live client; only deployments with an ops dataset import it. Its
+    """The live client; only transactional BigQuery sources import it. Its
     ``insert_rows`` reads ``.name`` from each selected field, so the
     (name, type) pairs of control_schema_fields become SchemaField here."""
     from google.cloud import bigquery
@@ -185,12 +191,7 @@ class BigQueryControlTable:
     ):
         if transactional_type == TransactionalType.NOT_TRANSACTIONAL:
             raise ValueError("control table needs a transactional type")
-        if not ops_dataset:
-            # reference __init__(:48-52) refuses transactional BQ without
-            # an ops dataset
-            raise ValueError(
-                "bq_ops_dataset is required for transactional BigQuery sources"
-            )
+        require_ops_dataset(ops_dataset)
         self.client = client
         self.source_metadata = list(source_metadata)
         self.ops_dataset = ops_dataset

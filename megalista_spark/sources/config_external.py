@@ -6,7 +6,8 @@ reference's readers:
   named ranges SourcesRange / DestinationsRange / SchedulesRange; only
   schedules marked 'YES' become executions.
 - FirestoreExecutionSource (sources/firestore_execution_source.py:41-137):
-  documents where active == 'yes', per-type metadata-list assembly.
+  an account_config document plus entry documents where active == 'yes',
+  per-type metadata-list assembly.
 
 The Google client libraries are not available in this environment, so the
 network fetch is injectable: pass ``fetch_values`` / ``fetch_documents``
@@ -74,21 +75,17 @@ def _strtobool(s: str) -> bool:
 
 
 def load_account_config_from_sheet(
-    sheet_id: str,
-    get_value: Callable[[str, str], str | None],
-    check_if_range_exists: Callable[[str, str], bool] | None = None,
+    sheet_id: str, get_value: Callable[[str, str], str | None]
 ) -> AccountConfig:
     """Account config from the sheet's named single-cell ranges
     (reference spreadsheet_execution_source.py:47-59), including the
-    CampaignManagerProfileId → CampaignManagerAccountId fallback and
-    strtobool MCC parsing."""
+    CampaignManagerProfileId → CampaignManagerAccountId fallback (taken
+    when ``get_value`` gives None for ProfileId, as it does for a missing
+    or empty range) and strtobool MCC parsing."""
     mcc_trix = get_value(sheet_id, "GoogleAdsMCC")
     mcc = False if mcc_trix is None else _strtobool(mcc_trix)
-    if check_if_range_exists is None or check_if_range_exists(
-        sheet_id, "CampaignManagerProfileId"
-    ):
-        cm_profile = get_value(sheet_id, "CampaignManagerProfileId")
-    else:
+    cm_profile = get_value(sheet_id, "CampaignManagerProfileId")
+    if cm_profile is None:
         cm_profile = get_value(sheet_id, "CampaignManagerAccountId")
     return AccountConfig(
         google_ads_account_id=get_value(sheet_id, "GoogleAdsAccountId") or "",
@@ -166,33 +163,6 @@ def load_executions_from_sheet(
         fetch_values(sheet_id, "DestinationsRange"),
         fetch_values(sheet_id, "SchedulesRange"),
     )
-
-
-def parse_firestore_documents(
-    account: AccountConfig, documents: list[dict[str, Any]]
-) -> list[Execution]:
-    """Each document describes one connection; only active == 'yes' runs
-    (reference firestore_execution_source.py:44-48). Expected keys:
-    active, source_name, source_type, source metadata (dataset/table or
-    file_type/path), destination_name, destination_type, metadata list.
-    """
-    out = []
-    for doc in documents:
-        if str(doc.get("active", "")).lower() != "yes":
-            continue
-        stype = SourceType[str(doc["source_type"]).upper()]
-        if stype == SourceType.BIG_QUERY:
-            smeta = (doc.get("dataset", ""), doc.get("table", ""))
-        else:
-            smeta = (doc.get("file_type", "PARQUET"), doc.get("path", ""))
-        source = Source(doc["source_name"], stype, smeta)
-        destination = Destination(
-            doc["destination_name"],
-            DestinationType[str(doc["destination_type"]).upper()],
-            tuple(str(m) for m in doc.get("metadata", [])),
-        )
-        out.append(Execution(account, source, destination))
-    return out
 
 
 # reference firestore_execution_source.py:93-115 — per-destination-type
@@ -310,20 +280,14 @@ def load_executions_from_firestore(
     account: AccountConfig | None = None,
     fetch_documents: Callable[[str], list[dict[str, Any]]] | None = None,
     fetch_account_doc: Callable[[str], dict[str, Any]] | None = None,
-    reference_layout: bool = False,
 ) -> list[Execution]:
-    """Two layouts:
-    - default: generic documents (parse_firestore_documents) with an
-      externally supplied ``account``
-    - ``reference_layout=True``: the reference's exact collection shape —
-      an ``account_config`` document (fetched via ``fetch_account_doc``
-      or live) plus entry documents with bq_dataset/bq_table and
-      per-type metadata fields
-    """
+    """The reference's collection layout (firestore_execution_source.py:
+    41-137): an ``account_config`` document (``fetch_account_doc``, or
+    ``account`` when given) plus entry documents with bq_dataset/bq_table
+    sources and per-type metadata fields. The live fetchers use
+    google-cloud-firestore."""
     live_client = None
-    if fetch_documents is None or (
-        reference_layout and account is None and fetch_account_doc is None
-    ):
+    if fetch_documents is None or (account is None and fetch_account_doc is None):
         try:
             from google.cloud import firestore  # type: ignore
         except ImportError as exc:
@@ -336,26 +300,15 @@ def load_executions_from_firestore(
 
         def fetch_documents(coll: str) -> list[dict[str, Any]]:
             # reference :52 filters active == 'yes' server-side
-            q = live_client.collection(coll)
-            if reference_layout:
-                q = q.where("active", "==", "yes")
+            q = live_client.collection(coll).where("active", "==", "yes")
             return [d.to_dict() for d in q.stream()]
 
-    if reference_layout:
-        if account is None:
-            if fetch_account_doc is None:
-
-                def fetch_account_doc(coll: str) -> dict[str, Any]:
-                    doc = (
-                        live_client.collection(coll)
-                        .document("account_config")
-                        .get()
-                    )
-                    return doc.to_dict() if doc.exists else {}
-
-            account = parse_firestore_account_config(fetch_account_doc(collection))
-        return parse_firestore_entries(account, fetch_documents(collection))
-
     if account is None:
-        raise ValueError("account is required for the generic document layout")
-    return parse_firestore_documents(account, fetch_documents(collection))
+        if fetch_account_doc is None:
+
+            def fetch_account_doc(coll: str) -> dict[str, Any]:
+                doc = live_client.collection(coll).document("account_config").get()
+                return doc.to_dict() if doc.exists else {}
+
+        account = parse_firestore_account_config(fetch_account_doc(collection))
+    return parse_firestore_entries(account, fetch_documents(collection))

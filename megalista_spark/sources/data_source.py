@@ -6,8 +6,9 @@ Reference behaviors re-expressed Spark-first:
 - CSV read all-string then cast / Parquet columns pushdown
   (file_data_source.py:182-216) → plain ``spark.read`` with select —
   Catalyst prunes columns down to the scan
-- transactional dedup = LEFT ANTI join against the control table
-  (big_query_data_source.py:76-116, file_data_source.py:71-92)
+- transactional dedup of a FILE source = LEFT ANTI join against its
+  parquet control table (file_data_source.py:71-92); a BigQuery source
+  dedups inside BigQuery (``BigQueryDataSource``, sources/bigquery_control.py)
 - control table: append-only (key..., timestamp) with 15-day retention
   applied at READ time (big_query_data_source.py:118-148,
   file_data_source.py:141-147); missing control table reads as a typed,
@@ -193,7 +194,10 @@ class ControlTable:
 
 
 class DataSource:
-    """Base: read a source table, drop already-uploaded rows, record keys."""
+    """Base: read a source table and project it to a destination's schema.
+    Each source type drops the rows a transactional branch already uploaded
+    (``retrieve_data``) and records the keys it uploads (``key_staging``,
+    ``record_uploaded``) in its own control table."""
 
     def __init__(self, spark: SparkSession, source: Source):
         self.spark = spark
@@ -202,55 +206,20 @@ class DataSource:
     def read_raw(self) -> DataFrame:
         raise NotImplementedError
 
-    def control_table(self, transactional_type: TransactionalType) -> ControlTable:
-        return ControlTable(
-            self.spark,
-            self.control_path(),
-            keys=transactional_type.keys,
-        )
-
-    def control_path(self) -> str:
-        return f"{self.source.path}_uploaded"
-
     def retrieve_data(
         self,
         schema: DestinationSchema | None = None,
         transactional_type: TransactionalType = TransactionalType.NOT_TRANSACTIONAL,
         raw: DataFrame | None = None,
     ) -> DataFrame:
-        """validate/project/cast then anti-join dedup — the reference's D2/D3.
+        """validate/project/cast — the reference's D2 — of a
+        non-transactional branch (subclasses dedup a transactional one).
 
         ``raw`` is a scan of the source the caller already holds (the
-        pipeline shares one per source). The select is applied BEFORE the
-        join so column pruning reaches the scan and the anti-join only
-        shuffles the projected columns.
+        pipeline shares one per source); the select reaches the scan.
         """
         df = self.read_raw() if raw is None else raw
-        if schema is not None:
-            df = schema.apply(df)
-        if transactional_type != TransactionalType.NOT_TRANSACTIONAL:
-            key_types = {k: df.schema[k].dataType for k in transactional_type.keys}
-            uploaded = self.control_table(transactional_type).read(key_types)
-            df = anti_join_uploaded(df, uploaded, transactional_type)
-        return df
-
-    def key_staging(self, transactional_type: TransactionalType) -> KeyStaging | None:
-        """Where the upload of a ``transactional_type`` branch stages its
-        accepted keys (None for a non-transactional one). Called before the
-        upload, so a control table pyarrow cannot open fails the branch
-        before any row is sent."""
-        if transactional_type == TransactionalType.NOT_TRANSACTIONAL:
-            return None
-        return self.control_table(transactional_type).staging()
-
-    def record_uploaded(
-        self, transactional_type: TransactionalType, outcome: SinkResult
-    ) -> list[str]:
-        """Commit the keys the upload staged (``outcome`` of a sink run given
-        ``key_staging(transactional_type)``) to the control table (reference
-        transactional_events_results_writer.py:29-78); returns errors."""
-        self.control_table(transactional_type).commit(outcome.staging, outcome.staged)
-        return []
+        return schema.apply(df) if schema is not None else df
 
 
 def anti_join_uploaded(
@@ -310,6 +279,43 @@ class FileDataSource(DataSource):
         root, ext = os.path.splitext(base)
         return f"{root}_uploaded"
 
+    def control_table(self, transactional_type: TransactionalType) -> ControlTable:
+        return ControlTable(self.spark, self.control_path(), keys=transactional_type.keys)
+
+    def retrieve_data(
+        self,
+        schema: DestinationSchema | None = None,
+        transactional_type: TransactionalType = TransactionalType.NOT_TRANSACTIONAL,
+        raw: DataFrame | None = None,
+    ) -> DataFrame:
+        """validate/project/cast, then the anti-join dedup against the
+        control table (the reference's D3). The select is applied BEFORE
+        the join, so the anti-join only shuffles the projected columns."""
+        df = super().retrieve_data(schema, raw=raw)
+        if transactional_type != TransactionalType.NOT_TRANSACTIONAL:
+            key_types = {k: df.schema[k].dataType for k in transactional_type.keys}
+            uploaded = self.control_table(transactional_type).read(key_types)
+            df = anti_join_uploaded(df, uploaded, transactional_type)
+        return df
+
+    def key_staging(self, transactional_type: TransactionalType) -> KeyStaging | None:
+        """Where the upload of a ``transactional_type`` branch stages its
+        accepted keys (None for a non-transactional one). Called before the
+        upload, so a control table pyarrow cannot open fails the branch
+        before any row is sent."""
+        if transactional_type == TransactionalType.NOT_TRANSACTIONAL:
+            return None
+        return self.control_table(transactional_type).staging()
+
+    def record_uploaded(
+        self, transactional_type: TransactionalType, outcome: SinkResult
+    ) -> list[str]:
+        """Commit the keys the upload staged (``outcome`` of a sink run given
+        ``key_staging(transactional_type)``) to the control table (reference
+        transactional_events_results_writer.py:29-78); returns errors."""
+        self.control_table(transactional_type).commit(outcome.staging, outcome.staged)
+        return []
+
 
 def get_data_source(
     spark: SparkSession, source: Source, ops_dataset: str = ""
@@ -333,14 +339,13 @@ class BigQueryDataSource(DataSource):
     projection/filters server-side. The jar is not bundled in this
     environment, so the read raises a clear error if absent.
 
-    The ops dataset selects how a transactional source deduplicates:
-    - with an ``ops_dataset`` (the reference requires one): BigQuery-native
-      dedup, big_query_data_source.py:76-176 — control DDL with 15-day
-      partition expiry runs in BQ, the dedup LEFT JOIN ships to the
-      connector as a ``query`` option, and accepted keys go back with
-      ``insert_rows`` (sources/bigquery_control.py)
-    - without one: connector table read + Spark-side broadcast anti-join
-      against the parquet ControlTable
+    A transactional source dedups inside BigQuery, as the reference does
+    (big_query_data_source.py:76-176), and needs an ops dataset
+    (``--bq_ops_dataset``) for its control table: the control DDL with
+    15-day partition expiry runs in BQ, the dedup LEFT JOIN ships to the
+    connector as a ``query`` option, and accepted keys go back with
+    ``insert_rows`` (sources/bigquery_control.py). Without an ops dataset a
+    transactional branch fails before anything is read or sent.
     """
 
     def __init__(
@@ -354,10 +359,10 @@ class BigQueryDataSource(DataSource):
         self.ops_dataset = ops_dataset
         self.bq_client = bq_client
 
-    def _native_dedup(self, txn: TransactionalType) -> bool:
-        return bool(self.ops_dataset) and txn != TransactionalType.NOT_TRANSACTIONAL
-
     def bq_control_table(self, transactional_type: TransactionalType):
+        """Fails, naming ``bq_ops_dataset``, before a client is built when
+        there is no ops dataset."""
+        bigquery_control.require_ops_dataset(self.ops_dataset)
         if self.bq_client is None:
             self.bq_client = bigquery_control.bigquery_client()
         return bigquery_control.BigQueryControlTable(
@@ -373,15 +378,13 @@ class BigQueryDataSource(DataSource):
         """The exact spark-bigquery options a read will use — pure, so the
         contract is testable without the jar. Query-mode reads need
         viewsEnabled + a materialization dataset (connector contract)."""
-        if self._native_dedup(transactional_type):
-            return {
-                "query": self.bq_control_table(transactional_type).dedup_sql(
-                    cols or ["*"]
-                ),
-                "viewsEnabled": "true",
-                "materializationDataset": self.ops_dataset,
-            }
-        return {"table": self.source.path}
+        if transactional_type == TransactionalType.NOT_TRANSACTIONAL:
+            return {"table": self.source.path}
+        return {
+            "query": self.bq_control_table(transactional_type).dedup_sql(cols or ["*"]),
+            "viewsEnabled": "true",
+            "materializationDataset": self.ops_dataset,
+        }
 
     def read_raw(
         self,
@@ -405,14 +408,13 @@ class BigQueryDataSource(DataSource):
         transactional_type: TransactionalType = TransactionalType.NOT_TRANSACTIONAL,
         raw: DataFrame | None = None,
     ) -> DataFrame:
-        """BQ-native dedup (reference big_query_data_source.py:76-148):
-        with an ops dataset the anti-join LEFT JOIN ships INSIDE the
-        connector ``query`` option, so BigQuery filters already-uploaded
-        rows server-side and only the remainder crosses the Storage API —
-        the shared table scan ``raw`` does not apply and no Spark-side
-        anti-join runs. Without one, the base scan + Spark anti-join."""
-        if not self._native_dedup(transactional_type):
-            return super().retrieve_data(schema, transactional_type, raw)
+        """BQ-native dedup (reference big_query_data_source.py:76-148): the
+        anti-join LEFT JOIN ships INSIDE the connector ``query`` option, so
+        BigQuery filters already-uploaded rows server-side and only the
+        remainder crosses the Storage API — the shared table scan ``raw``
+        does not apply and no Spark-side anti-join runs."""
+        if transactional_type == TransactionalType.NOT_TRANSACTIONAL:
+            return super().retrieve_data(schema, raw=raw)
         # the pushed LEFT JOIN references the control table — create it
         # (idempotent DDL with 15-day expiry) BEFORE the read, or the
         # first run fails with table-not-found (reference
@@ -427,18 +429,19 @@ class BigQueryDataSource(DataSource):
         df = self.read_raw(transactional_type, cols)
         return schema.apply(df) if schema is not None else df
 
-    def key_staging(self, transactional_type: TransactionalType) -> KeyStaging | None:
-        if self._native_dedup(transactional_type):
-            return None
-        return super().key_staging(transactional_type)
+    def key_staging(self, transactional_type: TransactionalType) -> None:
+        """Nothing is staged: ``record_uploaded`` inserts the accepted keys.
+        Called before the upload, so a transactional branch without an ops
+        dataset fails before anything is read or sent (the reference
+        refuses it, big_query_data_source.py:48-52)."""
+        if transactional_type != TransactionalType.NOT_TRANSACTIONAL:
+            bigquery_control.require_ops_dataset(self.ops_dataset)
 
     def record_uploaded(
         self, transactional_type: TransactionalType, outcome: SinkResult
     ) -> list[str]:
-        """With an ops dataset the accepted keys go to BigQuery in
-        ``insert_rows`` pages (reference big_query_data_source.py:153-176)."""
-        if not self._native_dedup(transactional_type):
-            return super().record_uploaded(transactional_type, outcome)
+        """The accepted keys go to BigQuery in ``insert_rows`` pages
+        (reference big_query_data_source.py:153-176)."""
         if outcome.accepted == 0:
             return []
         rows = [r.asDict() for r in outcome.success.select(*transactional_type.keys).collect()]

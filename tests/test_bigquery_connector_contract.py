@@ -6,8 +6,8 @@ every option it receives back as rows, then drive the REAL read path —
 exact options + pushed dedup query that the spark-bigquery connector
 would receive. Reference parity: big_query_data_source.py:58-148 (table
 read, transactional LEFT-JOIN dedup shipped to BQ). The fake also serves
-one data table, so a whole ``Pipeline.run`` over a BigQuery source with
-an ops dataset runs against it.
+one data table, so a whole ``Pipeline.run`` over a BigQuery source runs
+against it.
 """
 
 from __future__ import annotations
@@ -25,8 +25,9 @@ def _norm(sql: str) -> str:
 
 
 # The one table the fake serves as data: ADS_OFFLINE_CONVERSION_CALLS rows,
-# returned only to the dedup query a source with ops dataset "ops" ships.
-# Every other read echoes its options.
+# returned to the dedup query a source with ops dataset "ops" ships and to
+# a plain read of ``_PLAIN_CALLS``, a table no dedup query names. Every
+# other read echoes its options.
 _CALLS_COLUMNS = [
     "uuid", "caller_id", "call_time", "time", "amount",
     "consent_ad_user_data", "consent_ad_personalization",
@@ -44,9 +45,14 @@ _CALLS_DEDUP_SQL = (
 )
 
 
+_PLAIN_CALLS = "ds1.plain_calls"
+
+
 def _serves_calls(options) -> bool:
-    query = {str(k).lower(): v for k, v in options.items()}.get("query", "")
-    return _norm(query) == _norm(_CALLS_DEDUP_SQL)
+    options = {str(k).lower(): v for k, v in options.items()}
+    return options.get("table") == _PLAIN_CALLS or _norm(
+        options.get("query", "")
+    ) == _norm(_CALLS_DEDUP_SQL)
 
 
 class _FakeBqClient:
@@ -184,7 +190,6 @@ def test_pipeline_run_dedups_in_bigquery_with_ops_dataset(
     with no Spark-side join, and the accepted keys go to ``insert_rows``."""
     from megalista_spark.pipeline import Pipeline
     from megalista_spark.sources import bigquery_control
-    from megalista_spark.sources.config_json import parse_config
 
     client = _FakeBqClient()
     monkeypatch.setattr(bigquery_control, "bigquery_client", lambda: client)
@@ -196,20 +201,8 @@ def test_pipeline_run_dedups_in_bigquery_with_ops_dataset(
         return frames[-1]
 
     monkeypatch.setattr(BigQueryDataSource, "retrieve_data", spy)
-    executions = parse_config(
-        {
-            "GoogleAdsAccountId": "123",
-            "Sources": [
-                {"Name": "calls", "Type": "BIG_QUERY", "Dataset": "ds1", "Table": "calls"}
-            ],
-            "Destinations": [
-                {"Name": "c", "Type": "ADS_OFFLINE_CONVERSION_CALLS", "Metadata": ["act"]}
-            ],
-            "Connections": [{"Enabled": True, "Source": "calls", "Destination": "c"}],
-        }
-    )
     result = Pipeline(
-        spark, executions, lambda e: MockTransport(), bq_ops_dataset="ops"
+        spark, _calls_executions("calls"), lambda e: MockTransport(), bq_ops_dataset="ops"
     ).run()
 
     assert result.exit_code == 0, result.branches[0].errors
@@ -217,14 +210,64 @@ def test_pipeline_run_dedups_in_bigquery_with_ops_dataset(
     assert any(
         "CREATE TABLE IF NOT EXISTS `ops.calls_uploaded`" in q for q in client.queries
     )
-    # the fake serves rows only to the dedup query, and BigQuery already
-    # excluded uploaded keys, so the plan has no join
+    # the fake serves this table's rows only to the dedup query, and
+    # BigQuery already excluded uploaded keys, so the plan has no join
     assert len(frames) == 1
     assert "Join" not in frames[0]._jdf.queryExecution().optimizedPlan().toString()
     assert [table for table, _ in client.inserts] == ["table:ops.calls_uploaded"]
     inserted = client.inserts[0][1]
     assert sorted(r["uuid"] for r in inserted) == [r[0] for r in _CALLS_ROWS]
     assert all(set(r) == {"uuid", "timestamp"} for r in inserted)
+
+
+def _calls_executions(table: str):
+    from megalista_spark.sources.config_json import parse_config
+
+    return parse_config(
+        {
+            "GoogleAdsAccountId": "123",
+            "Sources": [
+                {"Name": "calls", "Type": "BIG_QUERY", "Dataset": "ds1", "Table": table}
+            ],
+            "Destinations": [
+                {"Name": "c", "Type": "ADS_OFFLINE_CONVERSION_CALLS", "Metadata": ["act"]}
+            ],
+            "Connections": [{"Enabled": True, "Source": "calls", "Destination": "c"}],
+        }
+    )
+
+
+class _BeforeRunProbe(MockTransport):
+    """Accepts every row and records whether its driver-side ``before_run``
+    ran."""
+
+    before_run_ran = False
+
+    def before_run(self, context):
+        self.before_run_ran = True
+
+
+def test_transactional_bq_source_without_ops_dataset_fails_first(
+    fake_bigquery, spark, tmp_path, monkeypatch
+):
+    """Without an ops dataset a transactional BigQuery branch is refused, as
+    the reference refuses it: the branch fails naming ``bq_ops_dataset``
+    before the transport prepares the run, and no control table is written
+    anywhere (a relative ``<dataset>.<table>_uploaded`` would land under
+    Hadoop's working directory), although the source serves rows."""
+    from megalista_spark.pipeline import Pipeline
+
+    monkeypatch.chdir(tmp_path)
+    transport = _BeforeRunProbe()
+    result = Pipeline(spark, _calls_executions("plain_calls"), lambda e: transport).run()
+
+    [error] = result.branches[0].errors
+    assert "bq_ops_dataset" in error, error
+    assert not transport.before_run_ran
+    assert list(tmp_path.glob("**/*_uploaded")) == []
+    jvm = spark.sparkContext._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(spark.sparkContext._jsc.hadoopConfiguration())
+    assert not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{_PLAIN_CALLS}_uploaded"))
 
 
 def test_bq_control_insert_errors_are_returned(spark):

@@ -156,15 +156,15 @@ def test_bq_control_lifecycle_and_paging():
 def test_connector_options_contract(spark):
     """The exact options the spark-bigquery reader receives: plain table
     read vs BQ-side-dedup query read (viewsEnabled + materialization
-    dataset are the connector's query-mode requirements)."""
+    dataset are the connector's query-mode requirements). A transactional
+    read without an ops dataset is refused."""
     from megalista_spark.sources.data_source import BigQueryDataSource
 
     src = Source("s1", SourceType.BIG_QUERY, ("ds1", "conv"))
     plain = BigQueryDataSource(spark, src)
     assert plain.connector_options() == {"table": "ds1.conv"}
-    assert plain.connector_options(TransactionalType.GCLID_TIME) == {
-        "table": "ds1.conv"
-    }
+    with pytest.raises(ValueError, match="bq_ops_dataset"):
+        plain.connector_options(TransactionalType.GCLID_TIME)
 
     bq_dedup = BigQueryDataSource(
         spark, src, ops_dataset="ops", bq_client=FakeBqClient()

@@ -7,10 +7,7 @@ import json
 from megalista_spark.models.execution import AccountConfig, DestinationType, SourceType
 from megalista_spark.sinks.executor import SinkExecutor
 from megalista_spark.sinks.transports import MockTransport
-from megalista_spark.sources.config_external import (
-    load_executions_from_sheet,
-    parse_firestore_documents,
-)
+from megalista_spark.sources.config_external import load_executions_from_sheet
 
 ACCOUNT = AccountConfig(google_ads_account_id="123")
 
@@ -32,27 +29,6 @@ def test_sheet_config_only_yes_schedules():
     assert e.source.source_type == SourceType.FILE
     assert e.source.path == "/data/src1"
     assert e.destination.destination_type == DestinationType.ADS_OFFLINE_CONVERSION
-
-
-def test_firestore_config_active_filter():
-    docs = [
-        {
-            "active": "yes",
-            "source_name": "s",
-            "source_type": "BIG_QUERY",
-            "dataset": "ds",
-            "table": "t",
-            "destination_name": "d",
-            "destination_type": "GA_4_MEASUREMENT_PROTOCOL",
-            "metadata": ["web", "secret", "mid"],
-        },
-        {"active": "no", "source_name": "x", "source_type": "FILE",
-         "destination_name": "d", "destination_type": "GA_DATA_IMPORT"},
-    ]
-    execs = parse_firestore_documents(ACCOUNT, docs)
-    assert len(execs) == 1
-    assert execs[0].source.path == "ds.t"
-    assert execs[0].destination.metadata == ("web", "secret", "mid")
 
 
 def test_cli_main(spark, tmp_path, capsys):
@@ -124,22 +100,14 @@ def test_sheet_account_config_with_profile_fallback():
         "GoogleAnalyticsAccountId": "UA-9",
         "CampaignManagerAccountId": "555",
     }
-    acc = load_account_config_from_sheet(
-        "sheet1",
-        get_value=lambda sid, rng: cells.get(rng),
-        check_if_range_exists=lambda sid, rng: rng in cells,
-    )
+    acc = load_account_config_from_sheet("sheet1", lambda sid, rng: cells.get(rng))
     assert acc.google_ads_account_id == "1234567890"  # digits-filtered
     assert acc.mcc is True
     assert acc.campaign_manager_profile_id == "555"  # fallback range
     assert acc.app_id == "com.app"
 
     cells["CampaignManagerProfileId"] = "777"
-    acc2 = load_account_config_from_sheet(
-        "sheet1",
-        get_value=lambda sid, rng: cells.get(rng),
-        check_if_range_exists=lambda sid, rng: rng in cells,
-    )
+    acc2 = load_account_config_from_sheet("sheet1", lambda sid, rng: cells.get(rng))
     assert acc2.campaign_manager_profile_id == "777"
 
 
@@ -151,6 +119,7 @@ def test_sheet_loader_reads_account_from_sheet():
     ranges = {
         "GoogleAdsAccountId": [["111-222"]],
         "GoogleAdsMCC": [["FALSE"]],
+        "CampaignManagerAccountId": [["555"]],
         "SourcesRange": [["s1", "FILE", "csv", "/tmp/x.csv"]],
         "DestinationsRange": [["d1", "ADS_OFFLINE_CONVERSION", "conv"]],
         "SchedulesRange": [["YES", "s1", "d1"], ["NO", "s1", "d1"]],
@@ -165,6 +134,9 @@ def test_sheet_loader_reads_account_from_sheet():
     assert len(execs) == 1
     assert execs[0].account_config.google_ads_account_id == "111222"
     assert execs[0].account_config.mcc is False
+    # no CampaignManagerProfileId range: the reference falls back to
+    # CampaignManagerAccountId
+    assert execs[0].account_config.campaign_manager_profile_id == "555"
 
 
 def test_firestore_reference_layout():
@@ -201,7 +173,6 @@ def test_firestore_reference_layout():
         "coll",
         fetch_documents=lambda c: entries,
         fetch_account_doc=lambda c: account_doc,
-        reference_layout=True,
     )
     assert len(execs) == 1
     e = execs[0]

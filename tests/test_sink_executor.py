@@ -21,18 +21,33 @@ from megalista_spark.sinks.transports import (
 )
 
 
-def test_all_accepted(spark):
+@pytest.fixture
+def released():
+    """Wraps a sink result and releases it when the test ends, so no cached
+    upload outlives its test."""
+    results = []
+
+    def keep(result):
+        results.append(result)
+        return result
+
+    yield keep
+    for result in results:
+        result.release()
+
+
+def test_all_accepted(spark, released):
     df = spark.createDataFrame([(i,) for i in range(100)], ["k"])
-    result = SinkExecutor(DryRunTransport(), batch_size=7).run(df)
+    result = released(SinkExecutor(DryRunTransport(), batch_size=7).run(df))
     assert result.success.count() == 100
     assert result.errors.count() == 0
 
 
-def test_partial_failure_success_filter(spark):
+def test_partial_failure_success_filter(spark, released):
     # reference J3: only accepted rows flow onward
     df = spark.createDataFrame([(i,) for i in range(50)], ["k"])
     transport = MockTransport(fail_predicate=lambda r: r["k"] % 5 == 0)
-    result = SinkExecutor(transport, batch_size=10).run(df)
+    result = released(SinkExecutor(transport, batch_size=10).run(df))
     ok = sorted(r["k"] for r in result.success.collect())
     assert ok == [i for i in range(50) if i % 5 != 0]
 
@@ -97,22 +112,22 @@ def test_concurrent_sender_bounds_inflight():
     assert t.attempts[7] == 2 and t.attempts[13] == 1
 
 
-def test_retry_then_succeed(spark):
+def test_retry_then_succeed(spark, released):
     df = spark.createDataFrame([(i,) for i in range(10)], ["k"])
     transport = MockTransport(fail_chunks_until_attempt=2)  # 1st attempt fails
-    result = SinkExecutor(transport, batch_size=100).run(df.repartition(1))
+    result = released(SinkExecutor(transport, batch_size=100).run(df.repartition(1)))
     assert result.success.count() == 10
     assert result.errors.count() == 0
 
 
-def test_exhausted_retries_isolated(spark):
+def test_exhausted_retries_isolated(spark, released):
     # a chunk failing all retries becomes error records; run continues
     df = spark.createDataFrame([(i,) for i in range(10)], ["k"])
     transport = MockTransport(fail_chunks_until_attempt=99)
-    result = SinkExecutor(
+    result = released(SinkExecutor(
         transport, batch_size=100,
         context={"destination_type": "TEST"},
-    ).run(df.repartition(1))
+    ).run(df.repartition(1)))
     assert result.success.count() == 0
     errs = result.errors.collect()
     assert len(errs) == 1  # one record per failed chunk, naming it
@@ -129,7 +144,7 @@ def test_batch_sizes_parity():
     assert BATCH_SIZES[DestinationType.APPSFLYER_S2S_EVENTS] == 1000
 
 
-def test_concurrent_sender_overlaps_through_executor(spark):
+def test_concurrent_sender_overlaps_through_executor(spark, released):
     """End-to-end throughput: a per-row transport with 20ms latency and
     max_concurrency=8 must overlap I/O inside each chunk — 32 rows in one
     partition complete in ~rows/concurrency*latency, not rows*latency
@@ -147,7 +162,7 @@ def test_concurrent_sender_overlaps_through_executor(spark):
 
     df = spark.createDataFrame([(i,) for i in range(32)], ["k"]).coalesce(1)
     t = SlowSender(max_concurrency=8)
-    result = SinkExecutor(t, batch_size=16).run(df)
+    result = released(SinkExecutor(t, batch_size=16).run(df))
     assert result.success.count() == 32
     # the overlap assertion measures the transport directly (Spark job
     # overhead would swamp a wall-clock check through the executor):
@@ -190,7 +205,10 @@ def _paced_rate(spark, out_dir, budget, tasks, rows_per_task):
     result = SinkExecutor(
         _PacedSender(str(out_dir)), batch_size=50, rate_limit_per_sec=budget
     ).run(df)
-    assert result.success.count() == tasks * rows_per_task
+    try:
+        assert result.success.count() == tasks * rows_per_task
+    finally:
+        result.release()
 
     stats = [json.loads(p.read_text()) for p in out_dir.iterdir()]
     assert len(stats) == tasks and all(n == rows_per_task for _, _, n in stats)
