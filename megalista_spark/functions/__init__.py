@@ -5,12 +5,6 @@ from megalista_spark.functions.hashing import (
     normalize_email,
     normalize_phone,
 )
-from megalista_spark.functions.dates import (
-    format_date,
-    timestamp_micros,
-    convert_datetime_tz,
-)
-from megalista_spark.functions.text import only_numbers, trim_col
 
 __all__ = [
     "ads_pii_expressions",
@@ -18,9 +12,4 @@ __all__ = [
     "hash_field",
     "normalize_email",
     "normalize_phone",
-    "format_date",
-    "timestamp_micros",
-    "convert_datetime_tz",
-    "only_numbers",
-    "trim_col",
 ]

@@ -70,6 +70,11 @@ class TransactionalType(Enum):
         return self.value
 
 
+# Days a control table keeps uploaded keys: BigQuery expires older
+# partitions, the parquet table stops reading them (reference
+# big_query_data_source.py:125,132,139).
+RETENTION_DAYS = 15
+
 _NON_DIGITS = re.compile(r"[^0-9]")
 
 

@@ -12,7 +12,10 @@ Spark shape:
   file listing and schema, with one schema-inference job, and every branch
   of the source plans from that one DataFrame. It is not cached, so each
   branch's upload scans only the columns its projection keeps, and lists
-  no files and infers no schema again;
+  no files and infers no schema again. A source none of whose branches
+  plans from that scan (``DataSource.uses_scan``: a BigQuery source whose
+  branches are all transactional) is not scanned, and a failed scan fails
+  only the branches that use it;
 - each branch is lazy DataFrame work ending in one upload action, which
   returns the branch's row, accepted and error counts. In a transactional
   branch the upload tasks also stage the keys they got accepted under the
@@ -89,12 +92,16 @@ def _hash_enabled(execution: Execution) -> bool:
     return len(md) < 3 or str(md[2] or "").strip().lower() != "false"
 
 
+def _transactional_type(execution: Execution) -> TransactionalType:
+    schema = SCHEMAS.get(execution.destination.destination_type)
+    return schema.transactional_type if schema else TransactionalType.NOT_TRANSACTIONAL
+
+
 def _chain_keys(execution: Execution) -> set[tuple[str, str]]:
     """The shared state a branch touches: its destination and, when it is
     transactional, its source's control table."""
     keys = {("destination", execution.destination.name)}
-    schema = SCHEMAS.get(execution.destination.destination_type)
-    if schema and schema.transactional_type != TransactionalType.NOT_TRANSACTIONAL:
+    if _transactional_type(execution) != TransactionalType.NOT_TRANSACTIONAL:
         keys.add(("control", execution.source.name))
     return keys
 
@@ -180,20 +187,22 @@ class Pipeline:
     def run(self) -> RunResult:
         started = time.perf_counter()
         results: list[BranchResult | None] = []
-        todo: dict[int, tuple[Execution, Any, DataFrame]] = {}  # by results index
+        todo: dict[int, tuple[Execution, Any, DataFrame | None]] = {}  # by results index
         for execs in group_executions_by_source(self.executions).values():
             ds = get_data_source(self.spark, execs[0].source, self.bq_ops_dataset)
-            try:
-                raw = ds.read_raw()
-            except Exception as exc:
-                for e in execs:
-                    results.append(
-                        BranchResult(e, errors=[f"source read failed: {exc}"])
-                    )
-                continue
-            for e in execs:
-                todo[len(results)] = (e, ds, raw)
-                results.append(None)
+            scans = [ds.uses_scan(_transactional_type(e)) for e in execs]
+            raw = failed = None
+            if any(scans):
+                try:
+                    raw = ds.read_raw()
+                except Exception as exc:
+                    failed = f"source read failed: {exc}"
+            for e, scan in zip(execs, scans):
+                if scan and failed:
+                    results.append(BranchResult(e, errors=[failed]))
+                else:
+                    todo[len(results)] = (e, ds, raw)
+                    results.append(None)
 
         sc = self.spark.sparkContext
 
@@ -226,7 +235,7 @@ class Pipeline:
             self.error_notifier.notify(failed)
         return run
 
-    def _run_branch(self, execution: Execution, ds, raw: DataFrame) -> BranchResult:
+    def _run_branch(self, execution: Execution, ds, raw: DataFrame | None) -> BranchResult:
         started = time.perf_counter()
         res = BranchResult(execution)
         dtype = execution.destination.destination_type

@@ -27,10 +27,9 @@ from __future__ import annotations
 import datetime as dt
 from typing import Any, Iterable, Protocol, Sequence
 
-from megalista_spark.models.execution import TransactionalType
+from megalista_spark.models.execution import RETENTION_DAYS, TransactionalType
 
 BQ_PAGE_SIZE = 20_000  # reference big_query_data_source.py:33
-CONTROL_EXPIRATION_DAYS = 15
 
 
 class BigQueryJobClient(Protocol):
@@ -99,7 +98,7 @@ def control_table_ddl(
         "timestamp TIMESTAMP OPTIONS(description= 'Event timestamp'), "
         f"{_KEY_COLUMN_DDL[transactional_type]}) "
         "PARTITION BY _PARTITIONDATE "
-        f"OPTIONS(partition_expiration_days={CONTROL_EXPIRATION_DAYS})"
+        f"OPTIONS(partition_expiration_days={RETENTION_DAYS})"
     )
 
 

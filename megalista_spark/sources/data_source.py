@@ -9,20 +9,23 @@ Reference behaviors re-expressed Spark-first:
 - transactional dedup of a FILE source = LEFT ANTI join against its
   parquet control table (file_data_source.py:71-92); a BigQuery source
   dedups inside BigQuery (``BigQueryDataSource``, sources/bigquery_control.py)
-- control table: append-only (key..., timestamp) with 15-day retention
-  applied at READ time (big_query_data_source.py:118-148,
-  file_data_source.py:141-147); missing control table reads as a typed,
-  optimizer-known empty frame (file_data_source.py:127-138); the control
-  side is not deduplicated
+- control table: append-only (timestamp, key...) parquet files, one
+  ``dt=<UTC date>/`` directory per day, read with a 15-day retention
+  (big_query_data_source.py:118-148, file_data_source.py:141-147); a
+  missing control table reads as a typed, optimizer-known empty frame
+  (file_data_source.py:127-138); the control side is not deduplicated
+- ``ControlTable`` alone knows that layout, and reaches it through
+  ``pyarrow.fs.FileSystem.from_uri`` (local paths, ``file://``, ``gs://``,
+  ``s3://``; ``s3a://`` maps to ``s3://``), at the path Spark reads, which
+  Hadoop qualifies when it has no scheme. ``commit`` is the only writer of
+  a ``dt=`` directory; one listing of the table root (``_listing``) tells
+  ``read`` which directories retention keeps, so Spark lists only those,
+  and tells ``vacuum`` which ones to delete
 - recording uploaded keys is part of the upload step (reference
   transactional_events_results_writer.py:29-78): ``key_staging`` gives the
   sink a ``_staging/<uuid>/`` directory under the control table, the upload
   tasks write the keys they got accepted there, and ``record_uploaded``
-  moves the winning attempts' files into the ``dt=`` layout, so no Spark
-  job appends. Tasks and the driver reach the table through
-  ``pyarrow.fs.FileSystem.from_uri`` (local paths, ``file://``, ``gs://``,
-  ``s3://``; ``s3a://`` maps to ``s3://``), at the path Spark reads, which
-  Hadoop qualifies when it has no scheme
+  commits the winning attempts' files, so no Spark job appends
 
 At 100 TB: the anti-join's control side is usually small relative to the
 source (only the last 15 days of uploaded keys) — AQE picks a broadcast
@@ -37,6 +40,7 @@ import os
 import posixpath
 import uuid
 from dataclasses import dataclass
+from typing import Any
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from megalista_spark.models.execution import (
+    RETENTION_DAYS,
     Execution,
     Source,
     SourceType,
@@ -53,18 +58,39 @@ from megalista_spark.schema.registry import DestinationSchema
 from megalista_spark.sinks.executor import KeyStaging, SinkResult
 from megalista_spark.sources import bigquery_control
 
-RETENTION_DAYS = 15  # reference big_query_data_source.py:125,132,139
+
+def _listing(fs: Any, directory: str) -> tuple[list[tuple[dt.date, str]], list[str]]:
+    """One listing of ``directory`` on pyarrow file system ``fs``: its
+    ``dt=<date>`` subdirectories with their dates, and its data files, by
+    name. Names starting with ``_`` or ``.`` (``_staging/``, ``_SUCCESS``,
+    checksums, files still being written) and ``dt=`` directories whose
+    date does not parse are skipped; a missing directory lists nothing."""
+    from pyarrow.fs import FileSelector, FileType
+
+    partitions, files = [], []
+    for info in fs.get_file_info(FileSelector(directory, allow_not_found=True)):
+        name = info.base_name
+        if name.startswith(("_", ".")):
+            continue
+        if info.type == FileType.File:
+            files.append(name)
+        elif info.type == FileType.Directory and name.startswith("dt="):
+            try:
+                partitions.append((dt.date.fromisoformat(name[3:]), name))
+            except ValueError:
+                pass
+    return partitions, files
 
 
 @dataclass
 class ControlTable:
     """The `<source>_uploaded` sidecar: append-only (timestamp, keys...).
 
-    Parquet-backed here (Delta would be the production choice; parquet
-    append has the same semantics for this access pattern — we only ever
-    append and scan with a time filter). The pipeline appends by
-    ``staging`` + ``commit`` (files the upload tasks wrote); ``append``
-    writes a DataFrame of keys for direct callers.
+    Parquet files in one ``dt=<UTC date>/`` directory per day (Delta would
+    be the production choice; parquet has the same semantics for this
+    access pattern — we only ever append and scan with a time filter). The
+    pipeline appends by ``staging`` + ``commit`` (files the upload tasks
+    wrote); ``append`` writes a DataFrame of keys for direct callers.
     """
 
     spark: SparkSession
@@ -79,60 +105,52 @@ class ControlTable:
         return T.StructType(fields)
 
     def read(self, key_types: dict[str, T.DataType] | None = None) -> DataFrame:
-        """Uploaded keys still inside the retention window; missing table →
-        typed, optimizer-known empty frame (reference
-        file_data_source.py:127-138), so an anti-join against it plans away.
-        Read with ``key_types`` (strings when absent), so no schema
-        inference runs; ``dt`` comes from the directory layout.
+        """Uploaded keys still inside the retention window, read with
+        ``key_types`` (strings when absent), so no schema inference runs.
 
-        When the table is date-partitioned (our writer always partitions),
-        the retention predicate on ``dt`` prunes whole partitions at plan
-        time — at scale only ~15 daily partitions are ever scanned,
-        mirroring the reference's BigQuery partition_expiration_days=15.
+        One pyarrow listing of the table root picks the ``dt=`` directories
+        from the cutoff date on, plus any data file outside a partition,
+        and Spark lists and reads only those, so the cost does not grow
+        with the table's history and no listing job starts. The rows also
+        keep the timestamp predicate of the same UTC cutoff. With nothing
+        to read (a missing table, say) the result is a typed,
+        optimizer-known empty frame (reference file_data_source.py:127-138),
+        so an anti-join against it plans away.
         """
         schema = self.schema(key_types)
-        if not self._exists():
+        cutoff = self._cutoff()
+        _, fs, root = self._filesystem()
+        partitions, files = _listing(fs, root)
+        kept = [name for day, name in partitions if day >= cutoff] + files
+        if not kept:
             return self.spark.createDataFrame([], schema).where(F.lit(False))
-        df = self.spark.read.schema(schema).parquet(self.path)
-        if "dt" in df.columns:
-            df = df.where(
-                F.col("dt") >= F.date_sub(F.current_date(), RETENTION_DAYS)
-            ).drop("dt")
-        return df.where(
-            F.col("timestamp") >= F.date_sub(F.current_timestamp(), RETENTION_DAYS)
+        start = dt.datetime.combine(cutoff, dt.time(), dt.timezone.utc)
+        return (
+            self.spark.read.schema(schema)
+            .parquet(*(posixpath.join(self.path, name) for name in kept))
+            .where(F.col("timestamp") >= F.lit(start))
         )
 
     def append(self, success_keys: DataFrame) -> None:
-        """Record uploaded keys with one Spark write (reference
-        transactional_events_results_writer.py:29-78 + D5/D11). Input must
-        contain the dedup key columns. Written date-partitioned so
-        retention reads prune (see read())."""
+        """Record uploaded keys (reference
+        transactional_events_results_writer.py:29-78 + D5/D11) for a caller
+        that holds them as a DataFrame with the key columns: one Spark
+        write of ``(timestamp, keys...)`` into a ``staging()`` directory,
+        then ``commit`` of the files it wrote, so they land where the
+        pipeline's upload tasks put theirs."""
+        staging = self.staging()
+        name = posixpath.basename(staging.directory)
         (
-            success_keys.select(*self.keys)
-            .withColumn("timestamp", F.current_timestamp())
-            .withColumn("dt", F.to_date(F.col("timestamp")))
-            .select("timestamp", "dt", *self.keys)
-            .write.mode("append")
-            .partitionBy("dt")
-            .parquet(self.path)
+            success_keys.select(F.lit(staging.timestamp).alias("timestamp"), *self.keys)
+            .write.parquet(posixpath.join(self.path, "_staging", name))
         )
+        self.commit(staging, _listing(*staging.filesystem())[1])
 
     def staging(self) -> KeyStaging:
         """Where one upload stages the keys it gets accepted:
         ``_staging/<uuid>/`` under the table, with the timestamp of this
         append. Fails, naming the table, when pyarrow cannot open it."""
-        from pyarrow import ArrowException
-        from pyarrow.fs import FileSystem, FileType
-
-        location = self._arrow_location()
-        try:
-            fs, path = FileSystem.from_uri(location)
-            if fs.get_file_info(path).type == FileType.File:
-                raise NotADirectoryError(path)
-        except (OSError, ArrowException) as exc:
-            raise ValueError(
-                f"control table {self.path}: pyarrow cannot open {location}: {exc}"
-            ) from exc
+        location, _, _ = self._filesystem()
         return KeyStaging(
             f"{location}/_staging/{uuid.uuid4().hex}", self.keys, dt.datetime.now(dt.timezone.utc)
         )
@@ -152,27 +170,41 @@ class ControlTable:
         staging.discard()
 
     def vacuum(self) -> list[str]:
-        """Reclaim storage for partitions the retention window can never
-        read again (reference: BigQuery partition_expiration_days=15 does
-        this server-side, big_query_data_source.py:125-139; for the FILE
-        control table the reference only filters at read time and the
-        files accrete forever). Deletes ``dt`` partitions strictly older
-        than the retention window; read() semantics are unchanged because
-        those partitions were already filtered out."""
-        from datetime import date, timedelta
+        """Delete the ``dt=`` partitions older than ``read``'s cutoff, which
+        it no longer reads, and return their dates (reference: BigQuery's
+        partition_expiration_days=15 does this server-side,
+        big_query_data_source.py:125-139; for the FILE control table the
+        reference only filters at read time and the files accrete
+        forever)."""
+        cutoff = self._cutoff()
+        _, fs, root = self._filesystem()
+        expired = sorted(p for p in _listing(fs, root)[0] if p[0] < cutoff)
+        for _, name in expired:
+            fs.delete_dir(posixpath.join(root, name))
+        return [day.isoformat() for day, _ in expired]
 
-        from megalista_spark.operators.backfill import expire_partitions
+    @staticmethod
+    def _cutoff() -> dt.date:
+        """The oldest UTC date inside retention."""
+        return dt.datetime.now(dt.timezone.utc).date() - dt.timedelta(days=RETENTION_DAYS)
 
-        cutoff = (date.today() - timedelta(days=RETENTION_DAYS)).isoformat()
-        return expire_partitions(self.spark, self.path, cutoff)
+    def _filesystem(self) -> tuple[str, Any, str]:
+        """The table's location as pyarrow opens it, its pyarrow file system
+        and its path there. Fails, naming the table, when pyarrow cannot
+        open it or it is a file."""
+        from pyarrow import ArrowException
+        from pyarrow.fs import FileSystem, FileType
 
-    def _exists(self) -> bool:
-        # Hadoop FileSystem, so URI paths (file://, hdfs://, s3a://, gs://)
-        # resolve too; an empty directory counts as missing
-        sc = self.spark.sparkContext
-        path = sc._jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
-        return fs.exists(path) and len(fs.listStatus(path)) > 0
+        location = self._arrow_location()
+        try:
+            fs, path = FileSystem.from_uri(location)
+            if fs.get_file_info(path).type == FileType.File:
+                raise NotADirectoryError(path)
+        except (OSError, ArrowException) as exc:
+            raise ValueError(
+                f"control table {self.path}: pyarrow cannot open {location}: {exc}"
+            ) from exc
+        return location, fs, path
 
     def _arrow_location(self) -> str:
         """The table's path as ``pyarrow.fs.FileSystem.from_uri`` takes it:
@@ -205,6 +237,11 @@ class DataSource:
 
     def read_raw(self) -> DataFrame:
         raise NotImplementedError
+
+    def uses_scan(self, transactional_type: TransactionalType) -> bool:
+        """Whether a branch of this type plans from the plain scan
+        ``read_raw()``, which ``retrieve_data`` takes as ``raw``."""
+        return True
 
     def retrieve_data(
         self,
@@ -401,6 +438,10 @@ class BigQueryDataSource(DataSource):
                 "BigQuery connector not available in this environment; "
                 "use a FILE source or add the spark-bigquery jar"
             ) from exc
+
+    def uses_scan(self, transactional_type: TransactionalType) -> bool:
+        """A transactional branch reads through the dedup ``query`` instead."""
+        return transactional_type == TransactionalType.NOT_TRANSACTIONAL
 
     def retrieve_data(
         self,

@@ -5,9 +5,10 @@ The reference is strictly bounded batch (SURVEY §2.8: no watermarks, no
 event-time windows anywhere) — this module is the greenfield extension the
 rebuild adds: the same rollup/sessionization semantics under
 ``readStream``, with watermarked late-data handling, plus a foreachBatch
-bridge that reuses the batch SinkExecutor for exactly-once-per-microbatch
-uploads (checkpointed source offsets + idempotent control-table anti-join
-give end-to-end effective-once).
+bridge that uploads each micro-batch with the batch SinkExecutor. The
+checkpoint keeps source offsets only: a micro-batch replayed after a
+failure is uploaded again, and nothing records or drops its keys, so
+delivery is at-least-once (see ``stream_sink_foreach_batch``).
 
 At scale: file sources are for replay/testing; swap ``readStream.format``
 for kafka without touching the transformations. State store size is

@@ -112,6 +112,12 @@ FAST_TESTS = frozenset(
         "test_absent_control_table_plans_no_join",
         "test_duplicate_control_keys_drop_each_row_once",
         "test_timestamp_key_control_table_dedups",
+        "test_read_lists_only_retained_partitions",
+        "test_listing_skips_staging_bad_dates_and_hidden_names",
+        "test_vacuum_deletes_exactly_what_read_no_longer_reads",
+        "test_append_commits_one_utc_partition",
+        "test_all_transactional_bq_source_loads_no_plain_scan",
+        "test_failed_plain_load_fails_only_the_branches_that_use_it",
         "test_empty_input_counts_zero_and_releases",
         "test_add_flow_creates_missing_list_and_per_identifier_ops",
         # session: driver JVM start-up (no JVM)

@@ -237,6 +237,75 @@ def _calls_executions(table: str):
     )
 
 
+def _spy_read_raw(monkeypatch, fail_plain: bool = False) -> list:
+    """Record the transactional type of every connector load
+    ``BigQueryDataSource.read_raw`` makes; with ``fail_plain`` a plain
+    table load raises."""
+    loads = []
+    read_raw = BigQueryDataSource.read_raw
+
+    def spy(self, transactional_type=TransactionalType.NOT_TRANSACTIONAL, cols=None):
+        loads.append(transactional_type)
+        if fail_plain and transactional_type == TransactionalType.NOT_TRANSACTIONAL:
+            raise RuntimeError("plain load refused")
+        return read_raw(self, transactional_type, cols)
+
+    monkeypatch.setattr(BigQueryDataSource, "read_raw", spy)
+    return loads
+
+
+def test_all_transactional_bq_source_loads_no_plain_scan(fake_bigquery, spark, monkeypatch):
+    """A BigQuery source whose branches are all transactional is read only
+    through the dedup query: ``Pipeline.run`` makes no plain table load."""
+    from megalista_spark.pipeline import Pipeline
+    from megalista_spark.sources import bigquery_control
+
+    monkeypatch.setattr(bigquery_control, "bigquery_client", lambda: _FakeBqClient())
+    loads = _spy_read_raw(monkeypatch)
+    result = Pipeline(
+        spark, _calls_executions("calls"), lambda e: MockTransport(), bq_ops_dataset="ops"
+    ).run()
+    assert result.exit_code == 0, result.branches[0].errors
+    assert loads == [TransactionalType.UUID]
+
+
+def test_failed_plain_load_fails_only_the_branches_that_use_it(
+    fake_bigquery, spark, monkeypatch
+):
+    """A plain table load that fails fails the source's non-transactional
+    branch only; its transactional branch reads through the dedup query
+    and uploads."""
+    from megalista_spark.pipeline import Pipeline
+    from megalista_spark.sources import bigquery_control
+    from megalista_spark.sources.config_json import parse_config
+
+    monkeypatch.setattr(bigquery_control, "bigquery_client", lambda: _FakeBqClient())
+    loads = _spy_read_raw(monkeypatch, fail_plain=True)
+    executions = parse_config(
+        {
+            "GoogleAdsAccountId": "123",
+            "Sources": [
+                {"Name": "calls", "Type": "BIG_QUERY", "Dataset": "ds1", "Table": "calls"}
+            ],
+            "Destinations": [
+                {"Name": "c", "Type": "ADS_OFFLINE_CONVERSION_CALLS", "Metadata": ["act"]},
+                {"Name": "users", "Type": "ADS_CUSTOMER_MATCH_USER_ID_UPLOAD",
+                 "Metadata": ["list", "ADD"]},
+            ],
+            "Connections": [
+                {"Enabled": True, "Source": "calls", "Destination": "c"},
+                {"Enabled": True, "Source": "calls", "Destination": "users"},
+            ],
+        }
+    )
+    result = Pipeline(spark, executions, lambda e: MockTransport(), bq_ops_dataset="ops").run()
+    by_name = {b.execution.destination.name: b for b in result.branches}
+    assert by_name["c"].errors == []
+    assert by_name["c"].rows_uploaded == len(_CALLS_ROWS)
+    assert by_name["users"].errors == ["source read failed: plain load refused"]
+    assert loads == [TransactionalType.NOT_TRANSACTIONAL, TransactionalType.UUID]
+
+
 class _BeforeRunProbe(MockTransport):
     """Accepts every row and records whether its driver-side ``before_run``
     ran."""

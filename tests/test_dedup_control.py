@@ -4,7 +4,13 @@ reference's defining idempotency behavior (SURVEY §7.2)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyarrow.fs import LocalFileSystem
 from pyspark.sql import functions as F
 
 from megalista_spark.models.execution import (
@@ -18,6 +24,7 @@ from megalista_spark.sinks.executor import SinkExecutor
 from megalista_spark.sinks.transports import MockTransport
 from megalista_spark.sources.data_source import (
     ControlTable,
+    _listing,
     anti_join_uploaded,
     get_data_source,
 )
@@ -157,3 +164,116 @@ def test_timestamp_key_control_table_dedups(spark, tmp_path):
     ds.record_uploaded(txn, outcome)
     outcome.release()
     assert ds.retrieve_data(schema, txn).count() == 0
+
+
+def _utc_today() -> dt.date:
+    return dt.datetime.now(dt.timezone.utc).date()
+
+
+def _seed_partition(table, day: dt.date, keys: list[str], name: str = "part-0.parquet") -> None:
+    """One file of ``keys`` stamped at noon UTC of ``day``, in ``dt=<day>/``
+    as ``ControlTable.commit`` lays it out."""
+    part = os.path.join(str(table), f"dt={day.isoformat()}")
+    os.makedirs(part, exist_ok=True)
+    noon = dt.datetime(day.year, day.month, day.day, 12, tzinfo=dt.timezone.utc)
+    pq.write_table(
+        pa.table({"timestamp": pa.array([noon] * len(keys), pa.timestamp("us", "UTC")), "uuid": keys}),
+        os.path.join(part, name),
+    )
+
+
+def _jobs_of(spark, action) -> list[int]:
+    sc = spark.sparkContext
+    group = f"control-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "control table read")
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("days", [40, 365])
+def test_read_lists_only_retained_partitions(spark, tmp_path, days):
+    """However long the history, ``read()`` and its optimized plan start no
+    Spark job (no parallel partition listing) and return exactly the keys
+    of the partitions inside retention."""
+    today = _utc_today()
+    expected = set()
+    for age in range(days):
+        keys = [f"k{age}-{i}" for i in range(3)]
+        _seed_partition(tmp_path / "t_uploaded", today - dt.timedelta(days=age), keys)
+        if age <= 15:
+            expected.update(keys)
+    ct = ControlTable(spark, str(tmp_path / "t_uploaded"), keys=("uuid",))
+    frames = []
+
+    def read_and_plan():
+        frames.append(ct.read())
+        frames[0]._jdf.queryExecution().optimizedPlan()
+
+    assert _jobs_of(spark, read_and_plan) == []
+    assert sorted(r["uuid"] for r in frames[0].collect()) == sorted(expected)
+
+
+def test_listing_skips_staging_bad_dates_and_hidden_names(spark, tmp_path):
+    """The table root's listing keeps dated ``dt=`` directories and data
+    files, and skips ``_staging/``, ``_``/``.`` files, ``dt=not-a-date``
+    and a ``dt=`` directory with no date; an empty dated partition reads as
+    no rows."""
+    table = tmp_path / "l_uploaded"
+    today = _utc_today()
+    _seed_partition(table, today, ["fresh"])
+    os.makedirs(table / f"dt={(today - dt.timedelta(days=1)).isoformat()}")  # empty
+    for junk in ("_staging/abc", "dt=not-a-date", "dt="):
+        (table / junk).mkdir(parents=True)
+        _seed_partition(table / junk, today, ["junk"])
+    (table / "_SUCCESS").touch()
+    (table / ".part-0.parquet.crc").touch()
+    spark.createDataFrame(
+        [(dt.datetime.now(dt.timezone.utc), "loose")], "timestamp timestamp, uuid string"
+    ).coalesce(1).write.mode("append").parquet(str(table))
+    loose = [f for f in os.listdir(table) if f.startswith("part-")]
+
+    partitions, files = _listing(LocalFileSystem(), str(table))
+    assert sorted(partitions) == [
+        (today - dt.timedelta(days=1), f"dt={(today - dt.timedelta(days=1)).isoformat()}"),
+        (today, f"dt={today.isoformat()}"),
+    ]
+    assert files == loose
+    ct = ControlTable(spark, str(table), keys=("uuid",))
+    assert sorted(r["uuid"] for r in ct.read().collect()) == ["fresh", "loose"]
+
+
+def test_vacuum_deletes_exactly_what_read_no_longer_reads(spark, tmp_path):
+    """Partitions aged 14-17 days: ``vacuum()`` deletes those older than
+    ``read()``'s cutoff and nothing else, and ``read()`` returns the same
+    rows before and after."""
+    table = tmp_path / "v_uploaded"
+    today = _utc_today()
+    for age in (14, 15, 16, 17):
+        _seed_partition(table, today - dt.timedelta(days=age), [f"age{age}"])
+    ct = ControlTable(spark, str(table), keys=("uuid",))
+    before = sorted(r["uuid"] for r in ct.read().collect())
+    assert before == ["age14", "age15"]
+    assert ct.vacuum() == [(today - dt.timedelta(days=age)).isoformat() for age in (17, 16)]
+    assert sorted(os.listdir(table)) == [
+        f"dt={(today - dt.timedelta(days=age)).isoformat()}" for age in (15, 14)
+    ]
+    assert sorted(r["uuid"] for r in ct.read().collect()) == before
+    assert ct.vacuum() == []
+
+
+def test_append_commits_one_utc_partition(spark, tmp_path):
+    """``append`` writes through a staging directory and ``commit``: its
+    files land in ``dt=<UTC date of their timestamp>/`` and nothing is
+    left under ``_staging/``."""
+    table = tmp_path / "a_uploaded"
+    ct = ControlTable(spark, str(table), keys=("uuid",))
+    ct.append(spark.createDataFrame([("a",), ("b",)], ["uuid"]))
+    assert os.listdir(table / "_staging") == []
+    [partition] = [name for name in os.listdir(table) if name != "_staging"]
+    stamps = {r["timestamp"] for r in spark.read.parquet(str(table / partition)).collect()}
+    [stamp] = stamps
+    assert partition == f"dt={stamp.astimezone(dt.timezone.utc).date().isoformat()}"
+    assert sorted(r["uuid"] for r in ct.read().collect()) == ["a", "b"]
