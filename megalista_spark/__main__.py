@@ -4,9 +4,11 @@ DataflowOptions (models/options.py:20-71) and the config-plane dispatch
 of PrimaryExecutionSource (sources/primary_execution_source.py:31-75):
 Sheets takes priority, then Firestore, then JSON.
 
-    python -m megalista_spark --config config.json [--dry-run]
+    python -m megalista_spark --config config.json --dry-run
     python -m megalista_spark --setup_json_url https://... --dry-run
 
+No live transport is wired yet, so a run without ``--dry-run`` exits with
+an error once the config has loaded, before Spark starts.
 Exit code 1 if any branch recorded an error (reference main.py:106-121).
 Dataflow-runner-specific options (templates, regions, workers) have no
 Spark meaning and are intentionally absent; spark-submit owns cluster
@@ -72,7 +74,9 @@ def build_parser() -> argparse.ArgumentParser:
     # debug / misc
     p.add_argument("--show_code_lines_in_log", action="store_true")
     p.add_argument("--dry-run", action="store_true",
-                   help="accept every row without calling any external API")
+                   help="accept every row without calling any external API "
+                   "(required: no live transport is wired yet); the keys of "
+                   "transactional branches are still recorded as uploaded")
     p.add_argument("--master", default=None)
     p.add_argument(
         "--version", action="version",
@@ -134,6 +138,11 @@ def _load_executions(args: argparse.Namespace):
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     executions = _load_executions(args)
+    if not args.dry_run:
+        raise SystemExit(
+            "no live transport is wired, so nothing can be sent; run with "
+            "--dry-run to accept every row without calling any external API"
+        )
 
     spark = get_spark(app_name="megalista_spark", master=args.master)
     if args.aws_access_key_id:

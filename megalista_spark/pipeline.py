@@ -19,9 +19,10 @@ Spark shape:
 - each branch is lazy DataFrame work ending in one upload action, which
   returns the branch's row, accepted and error counts. In a transactional
   branch the upload tasks also stage the keys they got accepted under the
-  control table, and the driver then commits the winning task attempts'
-  files by rename (``DataSource.record_uploaded``), so the branch runs no
-  second Spark job; the branch then releases the upload's cache;
+  control table, one completed file per partition, and the driver then
+  commits every completed file by rename (``DataSource.record_uploaded``),
+  so the branch runs no second Spark job; the branch then releases the
+  upload's cache;
 - branches run at once on a driver thread pool, as the reference's
   parallel Beam branches do, except where they share state: branches that
   share a control table (a transactional branch's source) or a destination
@@ -126,7 +127,7 @@ def _chains(keys: dict[int, set[tuple[str, str]]]) -> list[list[int]]:
 class BranchResult:
     execution: Execution
     rows_read: int = 0
-    rows_uploaded: int = 0
+    rows_uploaded: int = 0  # the upload's SinkResult.accepted
     errors: list[str] = field(default_factory=list)
     seconds: float = 0.0  # wall time of the branch
 

@@ -19,12 +19,13 @@ Reference behaviors folded in (SURVEY §4 "custom pieces"):
   (``SinkResult.success``), so downstream stays relational (J3)
 - the upload step persists the keys it got accepted (reference
   transactional_events_results_writer.py:29-78): given a ``KeyStaging``,
-  each upload task writes the key columns of its accepted rows, with the
-  driver's timestamp, to one parquet file per task attempt (written under a
-  dot-prefixed name, then renamed), and reports the file's name in the
-  upload's observed metrics. Those apply once per partition, so
-  ``SinkResult.staged`` names the winning attempts' files only; the caller
-  commits them (``ControlTable.commit``)
+  each upload task attempt streams the key columns of its accepted rows,
+  with the driver's timestamp, to a dot-prefixed parquet file of its own,
+  and once it has sent every chunk renames it to its partition's one key
+  file name for the run. The staging directory then holds, per partition,
+  the file of the last attempt that sent every chunk and got any row
+  accepted; the caller commits every completed file in it
+  (``ControlTable.commit``)
 
 Scale design: the upload is a collect-free ``mapInArrow`` pass — each
 partition's Arrow batches are cut into chunks, the transport gets each
@@ -90,9 +91,6 @@ RATE_LIMITS: dict[DestinationType, float] = {
 
 _STATUS_COL = "__megalista_status"
 _ERROR_COL = "__megalista_error"
-# the name of the key file a task staged, on the first row of the chunk
-# whose accepted rows open it
-_STAGED_COL = "__megalista_staged"
 _OK, _REJECTED, _FAILED = 0, 1, 2  # values of the status column
 # local property carrying the number of upload tasks that run at once to
 # the pacer inside each task; it is known only once the upload is planned
@@ -169,20 +167,6 @@ def _accepted_mask(chunk: list[dict], accepted: list[dict]) -> list[bool]:
     return [id(d) in accepted_ids for d in chunk]
 
 
-def _name_column(name: str | None, n: int) -> Any:
-    """A string column of ``n`` rows holding ``name`` on its first row (all
-    null for None), built from buffers."""
-    import pyarrow as pa
-
-    if name is None:
-        return pa.nulls(n, pa.string())
-    data = name.encode()
-    first = pa.Array.from_buffers(
-        pa.string(), 1, [None, pa.py_buffer(struct.pack("<ii", 0, len(data))), pa.py_buffer(data)]
-    )
-    return pa.concat_arrays([first, pa.nulls(n - 1, pa.string())])
-
-
 @dataclass(frozen=True)
 class KeyStaging:
     """Where the upload tasks of one run stage the keys of their accepted
@@ -211,71 +195,74 @@ class KeyStaging:
 
 class _StagedKeys:
     """One task attempt's staged keys: the key columns of its accepted rows
-    and the staging timestamp, streamed to ``.<name>`` in the staging
-    directory and renamed to ``<name>`` once complete. A task with no
-    accepted rows writes nothing."""
+    and the staging timestamp, streamed to ``.<stem>-<attempt>.parquet`` in
+    the staging directory and renamed to ``<stem>.parquet`` once the attempt
+    has sent every chunk. ``stem`` names the partition and the run, so every
+    attempt of a partition completes the same file: a retry that got rows
+    accepted replaces the failed attempt's file, and of two speculative
+    duplicates that both finish, the later rename replaces the earlier
+    file. An attempt with no accepted rows writes nothing and leaves an
+    earlier attempt's file in place."""
 
-    def __init__(self, staging: KeyStaging, name: str):
+    def __init__(self, staging: KeyStaging, stem: str, attempt: int):
         import pyarrow as pa
 
         self.staging = staging
-        self.name = name
+        self.partial = f".{stem}-{attempt}.parquet"
+        self.name = f"{stem}.parquet"
         epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
         self.micros = struct.pack("<q", (staging.timestamp - epoch) // dt.timedelta(microseconds=1))
         self.ok = pa.Array.from_buffers(pa.int8(), 1, [None, pa.py_buffer(bytes([_OK]))])[0]
         self.writer: Any = None
 
-    def add(self, chunk: Any, status: Any) -> str | None:
-        """Stage the keys of ``chunk``'s accepted rows; returns the file's
-        name when they are the first the file gets."""
+    def add(self, chunk: Any, status: Any) -> None:
+        """Stage the keys of ``chunk``'s accepted rows."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         keys = chunk.select(list(self.staging.keys)).filter(pc.equal(status, self.ok))
         if keys.num_rows == 0:
-            return None
+            return
         stamp = pa.Array.from_buffers(
             pa.timestamp("us", "UTC"), keys.num_rows, [None, pa.py_buffer(self.micros * keys.num_rows)]
         )
         keys = keys.add_column(0, "timestamp", stamp)
-        opened = self.writer is None
-        if opened:
+        if self.writer is None:
             import pyarrow.parquet as pq
 
             self.fs, self.dir = self.staging.filesystem()
             self.fs.create_dir(self.dir, recursive=True)
-            self.writer = pq.ParquetWriter(f"{self.dir}/.{self.name}", keys.schema, filesystem=self.fs)
+            self.writer = pq.ParquetWriter(f"{self.dir}/{self.partial}", keys.schema, filesystem=self.fs)
         self.writer.write_table(keys)
-        return self.name if opened else None
 
     def finish(self) -> None:
-        """Complete the file, if anything was staged."""
+        """Complete the file, if anything was staged, replacing the one an
+        earlier attempt completed."""
         if self.writer is not None:
             self.writer.close()
-            self.fs.move(f"{self.dir}/.{self.name}", f"{self.dir}/{self.name}")
+            self.fs.move(f"{self.dir}/{self.partial}", f"{self.dir}/{self.name}")
 
 
 @dataclass
 class SinkResult:
-    """Outcome of one sink run: the counts the upload observed, the names
-    of the key files its winning task attempts wrote in ``staging``, and
-    the cached upload, of which ``success`` and ``errors`` are views built
-    on access."""
+    """Outcome of one sink run: the counts the upload observed, the
+    ``staging`` its tasks wrote their key files to, and the cached upload,
+    of which ``success`` and ``errors`` are views built on access. The
+    counts, ``accepted`` too, come from the one successful attempt per
+    partition; where that attempt got nothing accepted, ``staging`` may
+    hold an earlier, failed attempt's keys."""
 
     tagged: DataFrame
     rows: int = 0  # rows that entered the sink
     accepted: int = 0
     error_messages: list[str] = field(default_factory=list)
     staging: KeyStaging | None = None
-    staged: list[str] = field(default_factory=list)
     destination: str = ""
 
     @property
     def success(self) -> DataFrame:
         """The accepted rows, with the input schema."""
-        return self.tagged.where(F.col(_STATUS_COL) == _OK).drop(
-            _STATUS_COL, _ERROR_COL, _STAGED_COL
-        )
+        return self.tagged.where(F.col(_STATUS_COL) == _OK).drop(_STATUS_COL, _ERROR_COL)
 
     @property
     def errors(self) -> DataFrame:
@@ -318,8 +305,8 @@ class SinkExecutor:
     def run(self, df: DataFrame, staging: KeyStaging | None = None) -> SinkResult:
         """One action, an observed no-op write: upload (staging the accepted
         keys when ``staging`` is given), then return the row, accepted and
-        error counts and the staged files. A failed upload discards the
-        staging directory. Call ``release()`` when done with the result.
+        error counts. A failed upload discards the staging directory. Call
+        ``release()`` when done with the result.
         """
         # the tasks get the transport as run() received it: pickled before
         # before_run, so what before_run builds stays on the driver
@@ -340,7 +327,6 @@ class SinkExecutor:
             + [
                 T.StructField(_STATUS_COL, T.ByteType(), False),
                 T.StructField(_ERROR_COL, T.StringType(), True),
-                T.StructField(_STAGED_COL, T.StringType(), True),
             ]
         )
 
@@ -359,16 +345,11 @@ class SinkExecutor:
             key_file = None
             if staging is not None:
                 attempt = tc.taskAttemptId() if tc else 0
-                key_file = _StagedKeys(
-                    staging, f"part-{ctx['partition_id']:05d}-{run_id}-{attempt}.parquet"
-                )
+                key_file = _StagedKeys(staging, f"part-{ctx['partition_id']:05d}-{run_id}", attempt)
             transport = pickle.loads(shipped)
             transport.open(ctx)
             try:
-                # each chunk goes out at once; the key file's name rides on
-                # the first row of the chunk that opened it. Only attempts
-                # that succeed count in the observed metrics, and those have
-                # run this generator to its end, through finish()
+                # each chunk goes out at once
                 for chunk_index, table in enumerate(_chunks(batches, batch_size), 1):
                     ctx["chunk_index"] = chunk_index
                     ctx["iteration"] = chunk_index  # reference Batch.iteration
@@ -404,11 +385,11 @@ class SinkExecutor:
                     status = pa.Array.from_buffers(
                         pa.int8(), len(rows), [None, pa.py_buffer(status)]
                     )
-                    opened = key_file.add(table, status) if key_file is not None else None
+                    if key_file is not None:
+                        key_file.add(table, status)
                     yield from (
                         table.append_column(_STATUS_COL, status)
                         .append_column(_ERROR_COL, errors)
-                        .append_column(_STAGED_COL, _name_column(opened, len(rows)))
                         .to_batches()
                     )
                 if key_file is not None:
@@ -429,15 +410,13 @@ class SinkExecutor:
                 sc.setLocalProperty(_UPLOAD_TASKS, str(min(partitions, slots)))
             # the one action: uploads, stages, fills the cache and counts in
             # the result stage, whose metrics Spark applies once per
-            # partition: a failed or retried attempt's staged file is not
-            # among ``staged``
+            # partition, from the attempt that succeeded
             observed = Observation()
             tagged.observe(
                 observed,
                 F.count(F.lit(1)).alias("rows"),
                 F.count(F.when(status == _OK, True)).alias("accepted"),
                 F.collect_list(_ERROR_COL).alias("errors"),
-                F.collect_list(_STAGED_COL).alias("staged"),
             ).write.format("noop").mode("overwrite").save()
             totals = observed.get
         except BaseException:
@@ -453,6 +432,5 @@ class SinkExecutor:
             totals["accepted"],
             list(totals["errors"]),
             staging,
-            list(totals["staged"]),
             base_context.get("destination_type", ""),
         )

@@ -24,8 +24,9 @@ Reference behaviors re-expressed Spark-first:
 - recording uploaded keys is part of the upload step (reference
   transactional_events_results_writer.py:29-78): ``key_staging`` gives the
   sink a ``_staging/<uuid>/`` directory under the control table, the upload
-  tasks write the keys they got accepted there, and ``record_uploaded``
-  commits the winning attempts' files, so no Spark job appends
+  tasks write the keys they got accepted there, one completed file per
+  partition, and ``record_uploaded`` commits every completed file in it,
+  so no Spark job appends
 
 At 100 TB: the anti-join's control side is usually small relative to the
 source (only the last 15 days of uploaded keys) — AQE picks a broadcast
@@ -136,15 +137,15 @@ class ControlTable:
         transactional_events_results_writer.py:29-78 + D5/D11) for a caller
         that holds them as a DataFrame with the key columns: one Spark
         write of ``(timestamp, keys...)`` into a ``staging()`` directory,
-        then ``commit`` of the files it wrote, so they land where the
-        pipeline's upload tasks put theirs."""
+        then ``commit``, so the files land where the pipeline's upload
+        tasks put theirs."""
         staging = self.staging()
         name = posixpath.basename(staging.directory)
         (
             success_keys.select(F.lit(staging.timestamp).alias("timestamp"), *self.keys)
             .write.parquet(posixpath.join(self.path, "_staging", name))
         )
-        self.commit(staging, _listing(*staging.filesystem())[1])
+        self.commit(staging)
 
     def staging(self) -> KeyStaging:
         """Where one upload stages the keys it gets accepted:
@@ -155,12 +156,14 @@ class ControlTable:
             f"{location}/_staging/{uuid.uuid4().hex}", self.keys, dt.datetime.now(dt.timezone.utc)
         )
 
-    def commit(self, staging: KeyStaging, files: list[str]) -> None:
-        """Move the staged ``files`` into the ``dt=`` partition of the
-        staging timestamp's UTC date, then delete the staging directory with
-        whatever else is in it (files of failed task attempts). With no
-        files nothing is written, so an absent table stays absent."""
+    def commit(self, staging: KeyStaging) -> None:
+        """Move every completed file in ``staging`` (each file ``_listing``
+        keeps) into the ``dt=`` partition of the staging timestamp's UTC
+        date, then delete the staging directory with the rest (partial files
+        of failed task attempts). With no completed file nothing is written,
+        so an absent table stays absent."""
         fs, path = staging.filesystem()
+        files = _listing(fs, path)[1]
         if files:
             table = posixpath.dirname(posixpath.dirname(path))  # <table>/_staging/<uuid>
             partition = f"{table}/dt={staging.timestamp.date().isoformat()}"
@@ -283,7 +286,9 @@ class FileDataSource(DataSource):
     """CSV / Parquet / JSON file source (reference file_data_source.py).
 
     CSV is read header=true all-string (the reference reads dtype='string'
-    then casts declared types — our schema.apply does the cast).
+    then casts declared types — our schema.apply does the cast). Spark's
+    CSV defaults stay: like pandas ``read_csv``, they read an empty field,
+    quoted or not, as null.
     """
 
     def read_raw(self) -> DataFrame:
@@ -350,7 +355,7 @@ class FileDataSource(DataSource):
         """Commit the keys the upload staged (``outcome`` of a sink run given
         ``key_staging(transactional_type)``) to the control table (reference
         transactional_events_results_writer.py:29-78); returns errors."""
-        self.control_table(transactional_type).commit(outcome.staging, outcome.staged)
+        self.control_table(transactional_type).commit(outcome.staging)
         return []
 
 

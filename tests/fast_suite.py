@@ -108,6 +108,7 @@ FAST_TESTS = frozenset(
         "test_sheet_config_only_yes_schedules",
         "test_required_missing_raises",
         "test_read_evolving_parquet_normalizes_mixed_vintages",
+        "test_csv_empty_fields_read_as_null_like_the_reference",
         "test_anti_join_single_key",
         "test_absent_control_table_plans_no_join",
         "test_duplicate_control_keys_drop_each_row_once",

@@ -142,3 +142,35 @@ def test_cli_end_to_end_dry_run(spark, tmp_path):
     # via file URL — exercises the json_url channel end to end too
     rc = main(["--setup_json_url", cfg_path.as_uri(), "--dry-run"])
     assert rc == 0
+
+
+def test_cli_without_dry_run_exits_before_spark(tmp_path, monkeypatch):
+    """No live transport is wired, so without ``--dry-run`` ``main`` exits
+    with an error once the config has loaded, before any Spark session
+    starts, and records no key as uploaded."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import megalista_spark.__main__ as cli
+
+    def no_spark(**kwargs):
+        raise AssertionError("main started a Spark session")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    src = tmp_path / "conv"
+    src.mkdir()
+    pq.write_table(
+        pa.table({"gclid": ["g1"], "time": ["2024-03-01T12:00:00.000000"], "amount": ["1.0"]}),
+        src / "part-0.parquet",
+    )
+    cfg = {
+        "Sources": [{"Name": "conv", "Type": "FILE", "FileType": "PARQUET", "Path": str(src)}],
+        "Destinations": [{"Name": "oc", "Type": "ADS_OFFLINE_CONVERSION", "Metadata": ["c"]}],
+        "Connections": [{"Enabled": True, "Source": "conv", "Destination": "oc"}],
+    }
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps(cfg))
+    with pytest.raises(SystemExit, match="--dry-run") as exited:
+        main(["--config", str(cfg_path)])
+    assert exited.value.code != 0
+    assert not (tmp_path / "conv_uploaded").exists()

@@ -45,7 +45,7 @@ def test_cli_main(spark, tmp_path, capsys):
     }
     cfg_path = tmp_path / "c.json"
     cfg_path.write_text(json.dumps(cfg))
-    code = main(["--config", str(cfg_path)])
+    code = main(["--config", str(cfg_path), "--dry-run"])
     out = json.loads(capsys.readouterr().out)
     assert code == 0
     assert out[0]["rows_uploaded"] == 1

@@ -370,16 +370,21 @@ from megalista_spark.sinks.transports import Transport
 
 class FailsAfterStaging(Transport):
     """Rejects the gclids ending in 3 and fails each task's first attempt in
-    close(), after the task staged its keys. Each send writes the gclids it
-    was sent, and each close writes its task attempt and whether pandas is
-    imported in its worker, to a new file under out_dir."""
+    close(), after the task staged its keys. In mode "accept_none" a retry
+    accepts nothing, as an API that rejects the resend as a duplicate would.
+    Each send writes the gclids it was sent, and each close writes its task
+    attempt and whether pandas is imported in its worker, to a new file
+    under out_dir."""
 
-    def __init__(self, out_dir):
+    def __init__(self, out_dir, mode):
         self.out_dir = out_dir
+        self.mode = mode
 
     def send(self, payload, context):
         with open(os.path.join(self.out_dir, "sent-" + uuid.uuid4().hex), "w") as f:
             f.write("".join(r["gclid"] + "\n" for r in payload))
+        if self.mode == "accept_none" and TaskContext.get().attemptNumber() > 0:
+            return []
         return [r for r in payload if not r["gclid"].endswith("3")]
 
     def close(self, context):
@@ -392,22 +397,16 @@ class FailsAfterStaging(Transport):
 
 
 spark = get_spark(master="local[2,2]")
-r = run_from_config(spark, sys.argv[1], lambda e: FailsAfterStaging(sys.argv[2]))
+r = run_from_config(spark, sys.argv[1], lambda e: FailsAfterStaging(sys.argv[2], sys.argv[3]))
 print(json.dumps({"uploaded": r.branches[0].rows_uploaded, "errors": r.branches[0].errors}))
 '''
 
 
-def test_retried_upload_task_commits_each_key_once(tmp_path, conversions_path):
-    """On ``local[2,2]`` every upload task fails its first attempt after
-    staging its keys. The control table then holds each accepted key once:
-    only the winning attempts' files are committed, and the failed ones'
-    are deleted with the staging directory. No upload worker imports
-    pandas. (The retry sends its rows again; see ROADMAP, "Exactly-once
-    under failure".)"""
+def _run_retried_upload(tmp_path, conversions_path, mode):
+    """Runs ``_RETRIED_UPLOAD`` in ``mode`` on a config that uploads the
+    conversions fixture; returns the finished process and its out dir."""
     import subprocess
     import sys
-
-    import pyarrow.parquet as pq
 
     cfg = write_config(
         tmp_path,
@@ -418,9 +417,22 @@ def test_retried_upload_task_commits_each_key_once(tmp_path, conversions_path):
     out.mkdir()
     env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"}
     job = subprocess.run(
-        [sys.executable, "-c", _RETRIED_UPLOAD, cfg, str(out)], env=env, cwd=tmp_path,
+        [sys.executable, "-c", _RETRIED_UPLOAD, cfg, str(out), mode], env=env, cwd=tmp_path,
         stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, timeout=600,
     )
+    return job, out
+
+
+def test_retried_upload_task_commits_each_key_once(tmp_path, conversions_path):
+    """On ``local[2,2]`` every upload task fails its first attempt after
+    staging its keys. The control table then holds each accepted key once:
+    each partition's retry completes the same key file name, replacing the
+    failed attempt's file, and the partial files are deleted with the
+    staging directory. No upload worker imports pandas. (The retry sends
+    its rows again; see ROADMAP, "Exactly-once under failure".)"""
+    import pyarrow.parquet as pq
+
+    job, out = _run_retried_upload(tmp_path, conversions_path, "resend")
     assert job.returncode == 0, job.stderr[-3000:]
     accepted = sorted(f"g{i}" for i in range(20) if i % 10 != 3)
     assert json.loads(job.stdout.splitlines()[-1]) == {"uploaded": len(accepted), "errors": []}
@@ -439,6 +451,27 @@ def test_retried_upload_task_commits_each_key_once(tmp_path, conversions_path):
     assert all(f.startswith("dt=") for f in files), files
     keys = [k for f in files for k in pq.read_table(os.path.join(control, f)).column("gclid").to_pylist()]
     assert sorted(keys) == accepted
+
+
+def test_retry_accepting_nothing_keeps_first_attempts_keys(tmp_path, conversions_path):
+    """As above, but each retry gets nothing accepted, as when the API
+    rejects the resend as a duplicate. The first attempts sent every chunk
+    and completed their key files, which no retry replaces, so the control
+    table holds their 18 accepted keys, each once. The branch reports 0
+    uploaded: its count comes from the attempts that succeeded."""
+    import pyarrow.parquet as pq
+
+    job, out = _run_retried_upload(tmp_path, conversions_path, "accept_none")
+    assert job.returncode == 0, job.stderr[-3000:]
+    assert json.loads(job.stdout.splitlines()[-1]) == {"uploaded": 0, "errors": []}
+    closes = [json.loads(p.read_text()) for p in out.glob("close-*")]
+    assert {c["attempt"] for c in closes} == {0, 1}
+
+    control = conversions_path + "_uploaded"
+    files = _control_files(control)
+    assert all(f.startswith("dt=") for f in files), files
+    keys = [k for f in files for k in pq.read_table(os.path.join(control, f)).column("gclid").to_pylist()]
+    assert sorted(keys) == sorted(f"g{i}" for i in range(20) if i % 10 != 3)
 
 
 class PiiLogTransport(Transport):

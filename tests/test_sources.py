@@ -79,3 +79,22 @@ def test_binary_source_reads_media_tree(spark, tmp_path):
     rows = {r["path"].rsplit("/", 1)[-1]: bytes(r["content"]) for r in df.collect()}
     assert rows == {"a.bin": b"\x00\x01payload-a", "b.bin": b"\x02payload-b"}
     assert "length" in df.columns  # metadata columns for size-based routing
+
+
+def test_csv_empty_fields_read_as_null_like_the_reference(spark, tmp_path):
+    """An empty CSV field, unquoted (``1,,x``) or quoted (``2,"",y``), reads
+    as null, as the reference's pandas ``read_csv(dtype='string')`` reads
+    it, so ``read_raw`` keeps Spark's CSV defaults."""
+    import pandas as pd
+
+    from megalista_spark.models.execution import Source, SourceType
+    from megalista_spark.sources.data_source import get_data_source
+
+    p = tmp_path / "conv.csv"
+    p.write_text('id,v,w\n1,,x\n2,"",y\n')
+    reference = pd.read_csv(p, dtype="string")
+    assert reference["v"].isna().tolist() == [True, True]
+
+    src = Source(name="c", source_type=SourceType.FILE, metadata=("csv", str(p)))
+    rows = get_data_source(spark, src).read_raw().orderBy("id").collect()
+    assert [tuple(r) for r in rows] == [("1", None, "x"), ("2", None, "y")]
